@@ -1741,8 +1741,7 @@ object SparkEntry {
     // parquet round-trips doubles/int64s exactly, so the served result
     // shares q121's oracle text (hash-match = the round-trip is
     // bit-exact end to end).
-    "q193_store_serve" -> ((s, dir) => {
-      val store = indexStoreDir(dir)
+    "q193_store_serve" -> ((s, dir) => withTempStore(s) { store =>
       IndexStore.buildIvfPq(Tables.embeddings(s, dir), store,
         numCells = 8, cellIters = 2, numSub = 4, codebookK = 8,
         pqIters = 2)
@@ -1757,8 +1756,7 @@ object SparkEntry {
     // would under-fill). Index build is unfiltered (one index serves
     // every predicate); the oracle is q121's chain with the allow-list
     // join added at the scoring CTE.
-    "q194_filtered_ann" -> ((s, dir) => {
-      val store = indexStoreDir(dir)
+    "q194_filtered_ann" -> ((s, dir) => withTempStore(s) { store =>
       IndexStore.buildIvfPq(Tables.embeddings(s, dir), store,
         numCells = 8, cellIters = 2, numSub = 4, codebookK = 8,
         pqIters = 2)
@@ -1791,8 +1789,7 @@ object SparkEntry {
     // are q171/q188's verbatim and parquet round-trips doubles/int64s
     // exactly, so the served result shares q171's oracle text
     // (hash-match = the residual round-trip is bit-exact end to end).
-    "q197_store_serve_residual" -> ((s, dir) => {
-      val store = indexStoreDir(dir) + "_resid"
+    "q197_store_serve_residual" -> ((s, dir) => withTempStore(s) { store =>
       IndexStore.buildIvfPqResidual(Tables.embeddings(s, dir), store,
         numCells = 8, cellIters = 2, numSub = 4, codebookK = 8,
         pqIters = 2)
@@ -1859,12 +1856,28 @@ object SparkEntry {
         "text")),
   )
 
-  /** Per-SF scratch path for the q193/q194 index store — derived from
-    * the data dir so concurrent SFs never collide; rebuilt (overwrite)
-    * on every invocation for determinism.
+  /** Run a store query (q193/q194/q197) against a fresh index store in
+    * its own temp directory, deleted before the call returns: `f`
+    * builds into and serves from the store path it is given. The
+    * served rows are query-sized and the lazy serve plan reads the
+    * store's files, so they are collected into a local relation before
+    * the directory goes. No call sees another call's versions, and
+    * nothing is left behind.
     */
-  private def indexStoreDir(dir: String): String =
-    "/tmp/graft_index_store/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+  private[graft] def withTempStore(s: SparkSession)(
+      f: String => DataFrame): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory("graft-index-store-")
+    try {
+      val served = f(root.resolve("store").toString)
+      s.createDataFrame(java.util.Arrays.asList(served.collect(): _*),
+        served.schema)
+    } finally {
+      val paths = java.nio.file.Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally paths.close()
+    }
+  }
 
   /** q121's oracle text with the filtered-ANN allow-list (label = 3)
     * joined into the scoring CTE — the SQL mirror of serving with

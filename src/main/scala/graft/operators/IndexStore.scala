@@ -570,9 +570,10 @@ object IndexStore {
   /** Train the relation-path IVF-PQ index over `vectors` (vec_id,
     * embedding) and publish all four artifacts as a new version under
     * `dir`. Training is [[Similarity.ivfPqTopK]]'s relation path
-    * verbatim: Lloyd coarse centroids (viaRelation — nothing
-    * index-sized in any plan), per-subspace Lloyd codebooks,
-    * nearest-codeword encode via broadcast codebook join.
+    * verbatim: the coarse centroids and the per-subspace codebooks are
+    * the books of one [[Similarity.lloydBooks]] call (nothing
+    * index-sized in any plan), then the nearest-codeword encode via
+    * broadcast codebook join.
     */
   def buildIvfPq(vectors: DataFrame, dir: String, numCells: Int,
       cellIters: Int, numSub: Int, codebookK: Int, pqIters: Int): Unit =
@@ -600,8 +601,15 @@ object IndexStore {
     // a REBUILD into a dir with tombstoned ids honors them (store
     // truth survives every publish kind); a fresh dir has none
     val live = antiTombstones(vectors, dir)
-    val coarse = Similarity.kmeansCentroidSeq(live, numCells, cellIters,
-      viaRelation = true)
+    // plain PQ trains the cells and the codebooks over the same vectors:
+    // one Lloyd call of 1 + numSub books. Residual codebooks train on
+    // the offsets from the FINAL cells, so that kind takes two calls.
+    val (coarse, pqTrained) =
+      if (kind == KindPq) {
+        val (c, w, b) = Similarity.ivfPqBooks(live, numCells, cellIters,
+          numSub, codebookK, pqIters)
+        (c, Some((w, b)))
+      } else (Similarity.kmeansCentroidSeq(live, numCells, cellIters), None)
     val centRel = Similarity.centroidRelation(spark, coarse)
     val v = live.select(col("vec_id"),
       Similarity.asDouble(col("embedding")).as("v"))
@@ -618,9 +626,9 @@ object IndexStore {
           "cell")
         .select(col("vec_id"),
           zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
-    val (w, books) = Similarity.pqCodebooks(
+    val (w, books) = pqTrained.getOrElse(Similarity.pqCodebooks(
       toEncode.select(col("vec_id"), col("v").as("embedding")),
-      numSub, codebookK, pqIters)
+      numSub, codebookK, pqIters))
     val bookRel = Similarity.codebookRelation(spark, w, books)
     val codes = Similarity
       .encodeViaRelation(Similarity.subSliced(toEncode, numSub, w), bookRel)
@@ -686,7 +694,7 @@ object IndexStore {
   /** Open a PINNED reader on the store's current version: the manifest
     * is resolved, the artifact relations created (this is where
     * partition discovery and parquet footer reads happen — the
-    * driver-side cost DiagServe measured at ~1.5 s/serve at sf1's 256
+    * driver-side cost, measured at ~1.5 s/serve at sf1's 256
     * cell directories, growing with √N), and the meta row fetched —
     * ONCE. Every `serve` on the handle reuses the resolved file index,
     * so warm serve latency is the ADC plan alone (ServeBench's

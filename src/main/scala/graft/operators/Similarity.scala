@@ -319,69 +319,176 @@ object Similarity {
     * max cosine with (cos desc, cid asc) tie order; new centroids are
     * the elementwise means ROUNDED to 6 decimals so the Spark and
     * oracle recurrences stay bit-identical despite summation-order
-    * float drift. Centroids stay a tiny frame (cells × dims) — every
-    * iteration is one broadcast join + one narrow aggregation, so the
-    * index build scales with the vector count, not pairs.
+    * float drift. This is one full-width book of [[lloydBooks]]: the
+    * centroids ride a broadcast relation, so the per-iteration plan is
+    * the same size at any cell count, and every iteration is one
+    * driver action.
+    *
+    * `trainSampleMod = m > 1` trains on the deterministic 1/m sample
+    * `vec_id % m = 0` (the FAISS discipline: Lloyd needs tens of points
+    * per cell, not the corpus — training cost drops m× while every
+    * DOWNSTREAM assignment still covers the full corpus; the id-mod
+    * predicate is exact integer arithmetic, so an oracle replays the
+    * identical sample). Seeds stay `vec_id < numCells` over the FULL
+    * corpus — the same deterministic init at any m. A cell no sample
+    * point lands in drops out of that iteration's centroid set, exactly
+    * as an empty cell already does at m = 1.
     */
   def kmeansCentroidSeq(
       vectors: DataFrame, numCells: Int, iters: Int,
-      viaRelation: Boolean = false,
-      trainSampleMod: Int = 1): Seq[(Long, Seq[Double])] = {
+      trainSampleMod: Int = 1): Seq[(Long, Seq[Double])] =
+    lloydBooks(vectors, Seq(LloydBook(0, 0, 1, numCells, iters)),
+      trainSampleMod)._2(0)
+
+  /** One codebook [[lloydBooks]] trains: `k` centroids over slice
+    * `part` of the vector cut into `parts` equal slices, for `iters`
+    * Lloyd iterations. The coarse quantizer is part 0 of 1 (full
+    * width); PQ subspace s is part s of numSub.
+    */
+  final case class LloydBook(id: Int, part: Int, parts: Int, k: Int,
+      iters: Int)
+
+  /** A dense book's codeword, an element of its broadcast array. */
+  private[graft] final case class Codeword(code: Long, cv: Seq[Double],
+      cnrm: Double)
+
+  // the driver-side left fold every codeword relation carries (the
+  // centroidRelation discipline), so the join reproduces it bit-for-bit
+  private def foldNorm(cv: Seq[Double]): Double =
+    math.sqrt(cv.foldLeft(0.0)((a, x) => a + x * x))
+
+  /** THE Lloyd trainer: every book of `books` trains in the same jobs
+    * (an IVF-PQ index is one call of `1 + numSub` books).
+    *
+    *  - Seeds: one collect of the FULL corpus' `vec_id < max k` rows;
+    *    book b's seeds are the ids below its own k, sliced driver-side.
+    *  - The training rows (the `trainSampleMod` sample) are decoded and
+    *    sliced once per call, one cached row per (vector, book).
+    *  - Each iteration is one action: every slice is broadcast-joined on
+    *    its book id against the (book, code, cv, cnrm) relation, the
+    *    argmax is [[assignCellsRelation]]'s guard tree and (sim desc,
+    *    code asc) tie order, and the centroids are the `round(avg, 6)`
+    *    means per (book, cell, d). The argmax shape follows
+    *    [[assignCellsRelationAuto]]'s [[DenseCellsThreshold]] rule on
+    *    the largest book.
+    *  - A book takes part in iterations 1..iters only, so books with
+    *    different iteration counts share one call. An empty cell drops
+    *    out of its book's set.
+    *
+    * Nothing index-sized is an expression, so the per-iteration plan has
+    * the same size at any geometry (the literal PQ argmax this replaced
+    * passed Janino's 64 KB method limit at 8×32). Returns the vector
+    * width d and each book's centroids, sorted by cell, by book id.
+    */
+  def lloydBooks(vectors: DataFrame, books: Seq[LloydBook],
+      trainSampleMod: Int = 1): (Int, Map[Int, Seq[(Long, Seq[Double])]]) = {
     require(trainSampleMod >= 1,
       s"trainSampleMod must be >= 1, got $trainSampleMod")
     val spark = vectors.sparkSession
     import spark.implicits._
-    // cached across the Lloyd iterations — each step re-scans the full
-    // vector set, and the decoded double arrays are what every
-    // iteration's dot products consume.
-    // `trainSampleMod = m > 1` trains on the deterministic 1/m sample
-    // `vec_id % m = 0` (the FAISS discipline: Lloyd needs tens of
-    // points per cell, not the corpus — training cost drops m× while
-    // every DOWNSTREAM assignment still covers the full corpus; the
-    // id-mod predicate is exact integer arithmetic, so an oracle
-    // replays the identical sample). Seeds stay `vec_id < numCells`
-    // over the FULL corpus — the same deterministic init at any m. A
-    // cell no sample point lands in drops out of that iteration's
-    // centroid set, exactly as an empty cell already does at m = 1.
     val vAll = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val v = (if (trainSampleMod == 1) vAll
-             else vAll.filter(pmod(col("vec_id"), lit(trainSampleMod)) === 0))
-      .cache()
-    // Centroids are materialized to the driver each iteration (the
-    // MLlib pattern): the collect is k×d doubles — independent of the
-    // vector count — and feeding the next iteration a LITERAL centroid
-    // frame keeps each Lloyd step to one scan + one narrow aggregation
-    // instead of re-deriving the whole centroid lineage per downstream
-    // branch. `viaRelation = true` runs the SAME recurrence with each
-    // iteration's assignment joined against a broadcast centroid
-    // relation instead of k×d literal expressions (the L152 form —
-    // identical output, spec-enforced; the per-iteration k×d driver
-    // transit stays, the plan-size dependence on k goes).
-    // seeds come from the FULL corpus (vec_id < numCells — a pushed-down
-    // point-range scan), so the init is identical at any trainSampleMod
-    var cent: Seq[(Long, Seq[Double])] = vAll.filter(col("vec_id") < numCells)
+    val seeds = vAll.filter(col("vec_id") < books.map(_.k).max)
       .select(col("vec_id").cast("long"), col("v"))
       .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-    for (_ <- 1 to iters) {
-      val asn =
-        if (viaRelation)
-          assignCellsRelationAuto(v, centroidRelation(spark, cent),
-            probes = 1, numCells)
-        else assignCells(v, cent, probes = 1)
-      cent = asn
-        .select(col("cell"), posexplode(col("v")).as(Seq("d", "x")))
-        .groupBy(col("cell"), col("d"))
-        .agg(round(avg(col("x")), 6).as("m"))
-        .groupBy(col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("d"), col("m")))),
-          s => s.getField("m")).as("cv"))
-        .select(col("cell").cast("long"), col("cv"))
-        .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+    // with no seed at all every book trains to the empty set, whatever d
+    val d = seeds.headOption.map(_._2.size).getOrElse(0)
+    val span = books.map { b =>
+      require(d % b.parts == 0, s"dims $d not divisible by ${b.parts}")
+      b.id -> (b.part * (d / b.parts), d / b.parts)
+    }.toMap
+    var cent = books.map { b =>
+      val (s, w) = span(b.id)
+      b.id -> seeds.filter(_._1 < b.k).map { case (id, x) =>
+        (id, x.slice(s, s + w)) }
+    }.toMap
+    val maxIters = books.map(_.iters).max
+    if (maxIters > 0) {
+      val train =
+        if (trainSampleMod == 1) vAll
+        else vAll.filter(pmod(col("vec_id"), lit(trainSampleMod)) === 0)
+      val sliced = lloydSlices(train, span.toSeq).cache()
+      val dense = books.map(_.k).max >= DenseCellsThreshold
+      try {
+        for (i <- 1 to maxIters) {
+          val active = books.filter(_.iters >= i).map(_.id)
+          val means = lloydStep(sliced, active.map(id => id -> cent(id)),
+            dense).as[(Int, Long, Seq[Double])].collect().groupBy(_._1)
+          cent = cent ++ active.map { id =>
+            id -> means.getOrElse(id, Array.empty[(Int, Long, Seq[Double])])
+              .map { case (_, cid, cv) => (cid, cv) }.toSeq.sortBy(_._1)
+          }
+        }
+      } finally { sliced.unpersist(false); () }
     }
-    // the Lloyd loop is the only consumer of the cached decode — the
-    // returned centroids are driver-side literals
-    v.unpersist(false)
-    cent
+    (d, cent)
+  }
+
+  /** [[lloydBooks]]' training rows: one (vec_id, book, sv, _svnrm) row
+    * per vector and book, the slice layout a broadcast (book, start,
+    * width) relation rather than one expression per book.
+    */
+  private[graft] def lloydSlices(v: DataFrame,
+      span: Seq[(Int, (Int, Int))]): DataFrame = {
+    val spark = v.sparkSession
+    import spark.implicits._
+    val layout = span.map { case (id, (s, w)) => (id, s + 1, w) }
+      .toDF("book", "_start", "_width")
+    v.crossJoin(broadcast(layout))
+      .select(col("vec_id"), col("book"),
+        slice(col("v"), col("_start"), col("_width")).as("sv"))
+      .withColumn("_svnrm", l2norm(col("sv")))
+  }
+
+  /** One [[lloydBooks]] iteration over [[lloydSlices]] rows: the
+    * nearest-codeword argmax per (vector, book) against `books`'
+    * current centroids, then the rounded means as (book, cell, cv) —
+    * one row per centroid, so the driver fold is k rows per book, not
+    * k·d. Books absent from `books` take no part (their rows find no
+    * join partner).
+    */
+  private[graft] def lloydStep(sliced: DataFrame,
+      books: Seq[(Int, Seq[(Long, Seq[Double])])], dense: Boolean): DataFrame = {
+    val spark = sliced.sparkSession
+    import spark.implicits._
+    // assignCellsRelation's guard tree: a zero-norm codeword OR slice
+    // pins the cosine to 0.0 (NaN sort order is engine-dependent)
+    def sim(cv: Column, cnrm: Column): Column =
+      when(cnrm === 0.0, lit(0.0))
+        .otherwise(when(col("_svnrm") > 0,
+          dot_product(col("sv"), cv) / (col("_svnrm") * cnrm))
+          .otherwise(lit(0.0)))
+    val won =
+      if (dense) {
+        // a book left with no centroid has no array row (array_max of
+        // an empty array is null)
+        val rel = books.filter(_._2.nonEmpty).map { case (b, cent) =>
+          (b, cent.map { case (code, cv) => Codeword(code, cv, foldNorm(cv)) })
+        }.toDF("book", "_cw")
+        sliced.join(broadcast(rel), "book")
+          .select(col("book"), col("sv"), array_max(transform(col("_cw"), c =>
+            struct(sim(c.getField("cv"), c.getField("cnrm")).as("sim"),
+              (-c.getField("code")).as("nc"), c.getField("code").as("code"))))
+            .getField("code").as("cell"))
+      } else {
+        val rel = books.flatMap { case (b, cent) =>
+          cent.map { case (code, cv) => (b, code, cv, foldNorm(cv)) }
+        }.toDF("book", "code", "cv", "cnrm")
+        // (sim, -code) ordering struct: unique per (vector, book), so
+        // the partial merge is deterministic
+        sliced.join(broadcast(rel), "book")
+          .select(col("vec_id"), col("book"), col("sv"), col("code"),
+            sim(col("cv"), col("cnrm")).as("_sim"))
+          .groupBy(col("vec_id"), col("book"))
+          .agg(max_by(struct(col("code"), col("sv")),
+            struct(col("_sim"), (-col("code")).as("nc"))).as("_w"))
+          .select(col("book"), col("_w.code").as("cell"), col("_w.sv").as("sv"))
+      }
+    won.select(col("book"), col("cell"), posexplode(col("sv")).as(Seq("d", "x")))
+      .groupBy(col("book"), col("cell"), col("d"))
+      .agg(round(avg(col("x")), 6).as("m"))
+      .groupBy(col("book"), col("cell"))
+      .agg(transform(array_sort(collect_list(struct(col("d"), col("m")))),
+        s => s.getField("m")).as("cv"))
   }
 
   /** Assign each (vec_id, v) row to its `probes` highest-cosine
@@ -399,6 +506,9 @@ object Similarity {
     * right for the tested index sizes (nlist ≤ 10³), wrong for a
     * production 10⁴–10⁵-cell index. [[assignCellsRelation]] is the
     * scale form: identical output, index rides a broadcast relation.
+    * Training never pays the caveat: [[lloydBooks]] assigns against a
+    * broadcast relation, so this literal form serves only the search
+    * paths that take an already-trained centroid set.
     */
   def assignCells(
       v: DataFrame, centroids: Seq[(Long, Seq[Double])], probes: Int): DataFrame = {
@@ -688,7 +798,7 @@ object Similarity {
     // relation twins are spec-identical (the q187/q191 gating), so the
     // maintenance family inherits the literal oracles unchanged.
     val cent0 = kmeansCentroidSeq(vectors.filter(!isBatch), numCells,
-      iters, viaRelation = true)
+      iters)
     val spark0 = vectors.sparkSession
     val all = vectors.select(col("vec_id"),
       asDouble(col("embedding")).as("v"))
@@ -754,7 +864,7 @@ object Similarity {
     val decision = readout.select(col("decision")).head().getString(0)
     val maintained =
       if (decision == "rebuild")
-        kmeansCentroidSeq(vectors, numCells, iters, viaRelation = true)
+        kmeansCentroidSeq(vectors, numCells, iters)
       else cent1
     (readout, maintained)
   }
@@ -913,10 +1023,11 @@ object Similarity {
     * space from numCells to numCells·salt — output-identical (each
     * qid probes exactly one replica of every member row), it exists
     * because a small-nlist join otherwise runs on ≤ numCells cores
-    * (jstack at sf10: 7 of 32 busy). `viaRelation` swaps Lloyd
-    * training and both assignments onto the broadcast centroid
-    * relation ([[assignCellsRelation]]) — the large-nlist form, where
-    * numCells literal expressions would swamp analysis/codegen.
+    * (jstack at sf10: 7 of 32 busy). `viaRelation` swaps both
+    * assignments onto the broadcast centroid relation
+    * ([[assignCellsRelation]]) — the large-nlist form, where numCells
+    * literal expressions would swamp analysis/codegen (training always
+    * assigns against a relation, see [[lloydBooks]]).
     */
   def ivfKnnGraph(
       vectors: DataFrame, k: Int = 1,
@@ -926,8 +1037,7 @@ object Similarity {
     require(salt >= 1, s"salt must be >= 1, got $salt")
     val spark = vectors.sparkSession
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val cent = kmeansCentroidSeq(vectors, numCells, iters, viaRelation,
-      trainSampleMod)
+    val cent = kmeansCentroidSeq(vectors, numCells, iters, trainSampleMod)
     val assign: (DataFrame, Int) => DataFrame =
       if (viaRelation) {
         val rel = centroidRelation(spark, cent)
@@ -1595,14 +1705,14 @@ object Similarity {
   }
 
   /** The per-subspace nearest-codeword argmax of [[assignCells]],
-    * INLINED on the slice as one struct column: (sub, code[, sv]).
+    * INLINED on the slice as one struct column: (sub, code).
     * Arithmetic, zero-norm pin and (sim desc, cid asc) tie order are
     * assignCells' verbatim — cnrm is the same driver-side fold, the
-    * winner the same sort_array-desc head. Shared by the one-scan
-    * encode and the batched Lloyd trainer below.
+    * winner the same sort_array-desc head. The one-scan literal encode
+    * below is its only user.
     */
   private def pqSubStruct(vcol: Column, w: Int, sub: Int,
-      cent: Seq[(Long, Seq[Double])], withSv: Boolean): Column = {
+      cent: Seq[(Long, Seq[Double])]): Column = {
     require(cent.nonEmpty, "empty centroid set")
     val sv = slice(vcol, lit(sub * w + 1), lit(w))
     val svnrm = l2norm(sv)
@@ -1617,9 +1727,7 @@ object Similarity {
     }
     val code = sort_array(array(sims: _*), asc = false)
       .getItem(0).getField("cid")
-    if (withSv)
-      struct(lit(sub).as("sub"), code.as("code"), sv.as("sv"))
-    else struct(lit(sub).as("sub"), code.as("code"))
+    struct(lit(sub).as("sub"), code.as("code"))
   }
 
   /** One-scan, map-only PQ encode against LITERAL codebooks — emits
@@ -1631,7 +1739,7 @@ object Similarity {
   private[graft] def encodeLiteral(v: DataFrame, w: Int,
       books: Seq[(Int, Seq[(Long, Seq[Double])])]): DataFrame =
     v.select(col("vec_id"), explode(array(books.map { case (sub, cent) =>
-        pqSubStruct(col("v"), w, sub, cent, withSv = false)
+        pqSubStruct(col("v"), w, sub, cent)
       }: _*)).as("e"))
       .select(col("vec_id"), col("e.sub").as("sub"), col("e.code").as("code"))
 
@@ -1639,61 +1747,43 @@ object Similarity {
     * consumer of the codes needs the codebooks too (decode,
     * [[pqAdcTopK]]'s distance tables): per contiguous subspace, the
     * deterministic [[kmeansCentroidSeq]] Lloyd codebook over the
-    * sliced vectors. Returns (subspaceWidth, per-sub centroid seqs) —
-    * numSub·codebookK·width doubles total, driver-sized by
+    * sliced vectors — `numSub` books of one [[lloydBooks]] call, so all
+    * subspaces share one seed collect, one cached slice decode and one
+    * action per iteration, with the codebooks in a broadcast relation
+    * (never plan literals). Returns (subspaceWidth, per-sub centroid
+    * seqs) — numSub·codebookK·width doubles total, driver-sized by
     * construction (k·d overall, independent of the corpus).
     */
   def pqCodebooks(vectors: DataFrame, numSub: Int, codebookK: Int,
       iters: Int): (Int, Seq[(Int, Seq[(Long, Seq[Double])])]) = {
     require(numSub > 0 && codebookK > 0 && iters >= 0,
       s"bad PQ config: numSub=$numSub codebookK=$codebookK iters=$iters")
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val v0 = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    // one 1-row action for the fixture's width; PQ needs it to split
-    val d = v0.select(size(col("v")).as("d")).head().getInt(0)
-    require(d % numSub == 0, s"dims $d not divisible by numSub=$numSub")
-    val w = d / numSub
-    // Batched Lloyd (round-18 optimization): ALL subspaces train in the
-    // same jobs. The old shape ran kmeansCentroidSeq once per subspace
-    // — numSub separate caches of the sliced corpus and numSub×(iters+1)
-    // driver actions; this caches the decoded corpus ONCE and runs one
-    // seed collect plus one job per iteration (assignment is the
-    // inlined literal argmax — map-only, assignCells' exact arithmetic
-    // and tie order — and the per-(sub, cell, d) rounded means land in
-    // one partial-aggregated exchange, collected k·d-bounded as
-    // before). Per-subspace recurrences are independent, so batching
-    // changes job count, not one centroid value.
-    val v = v0.cache()
-    try {
-      // seeds: vec_id < codebookK over the full corpus, every
-      // subspace's slice from ONE collect (the kmeansCentroidSeq init,
-      // sliced driver-side)
-      val seedRows = v.filter(col("vec_id") < codebookK)
-        .select(col("vec_id").cast("long"), col("v"))
-        .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-      var books: Seq[(Int, Seq[(Long, Seq[Double])])] =
-        (0 until numSub).map { sub =>
-          sub -> seedRows.map { case (id, vec) =>
-            (id, vec.slice(sub * w, sub * w + w)) }
-        }
-      for (_ <- 1 to iters) {
-        val means = v.select(explode(array(books.map { case (sub, cent) =>
-            pqSubStruct(col("v"), w, sub, cent, withSv = true)
-          }: _*)).as("e"))
-          .select(col("e.sub").as("sub"), col("e.code").as("cell"),
-            posexplode(col("e.sv")).as(Seq("d", "x")))
-          .groupBy(col("sub"), col("cell"), col("d"))
-          .agg(round(avg(col("x")), 6).as("m"))
-          .as[(Int, Long, Int, Double)].collect()
-        books = means.groupBy(_._1).map { case (sub, rows) =>
-          sub -> rows.groupBy(_._2).map { case (cid, ds) =>
-            (cid, ds.sortBy(_._3).map(_._4).toSeq)
-          }.toSeq.sortBy(_._1)
-        }.toSeq.sortBy(_._1)
-      }
-      (w, books)
-    } finally { v.unpersist(false); () }
+    val (d, books) = lloydBooks(vectors, pqBooks(numSub, codebookK, iters))
+    (d / numSub, (0 until numSub).map(sub => sub -> books(sub)))
+  }
+
+  /** PQ's books for [[lloydBooks]]: subspace s is book `firstId + s`. */
+  private def pqBooks(numSub: Int, codebookK: Int, iters: Int,
+      firstId: Int = 0): Seq[LloydBook] =
+    (0 until numSub).map(sub =>
+      LloydBook(firstId + sub, sub, numSub, codebookK, iters))
+
+  /** The coarse cells AND the PQ codebooks of an IVF-PQ index over the
+    * same vectors, trained as the `1 + numSub` books of ONE
+    * [[lloydBooks]] call (book 0 is the coarse quantizer). Returns
+    * [[kmeansCentroidSeq]]'s and [[pqCodebooks]]' exact results:
+    * (coarse centroids, subspace width, per-sub codebooks).
+    */
+  def ivfPqBooks(vectors: DataFrame, numCells: Int, cellIters: Int,
+      numSub: Int, codebookK: Int, pqIters: Int):
+      (Seq[(Long, Seq[Double])], Int, Seq[(Int, Seq[(Long, Seq[Double])])]) = {
+    require(numSub > 0 && codebookK > 0 && pqIters >= 0,
+      s"bad PQ config: numSub=$numSub codebookK=$codebookK iters=$pqIters")
+    val (d, books) = lloydBooks(vectors,
+      LloydBook(0, 0, 1, numCells, cellIters) +:
+        pqBooks(numSub, codebookK, pqIters, firstId = 1))
+    (books(0), d / numSub,
+      (0 until numSub).map(sub => sub -> books(1 + sub)))
   }
 
   /** PQ asymmetric-distance top-k search (the ADC half of Jégou et
@@ -1809,14 +1899,14 @@ object Similarity {
     if (indexAsRelation)
       return ivfPqTopKRelationPath(vectors, queries, k, numCells, cellIters,
         probes, numSub, codebookK, pqIters)
-    val coarse = kmeansCentroidSeq(vectors, numCells, cellIters)
+    val (coarse, w, books) = ivfPqBooks(vectors, numCells, cellIters,
+      numSub, codebookK, pqIters)
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val memberCells = assignCells(v, coarse, probes = 1)
       .select(col("vec_id"), col("cell"))
     val qv = queries.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val probeCells = assignCells(qv, coarse, probes = probes)
       .select(col("vec_id").as("qid"), col("cell"))
-    val (w, books) = pqCodebooks(vectors, numSub, codebookK, pqIters)
     val codes = encodeLiteral(v, w, books)
       .join(memberCells, "vec_id")
     val q = queries.select(col("vec_id").as("qid"),
@@ -1907,8 +1997,8 @@ object Similarity {
       k: Int, numCells: Int, cellIters: Int, probes: Int,
       numSub: Int, codebookK: Int, pqIters: Int): DataFrame = {
     val spark = vectors.sparkSession
-    val coarse = kmeansCentroidSeq(vectors, numCells, cellIters,
-      viaRelation = true)
+    val (coarse, w, books) = ivfPqBooks(vectors, numCells, cellIters,
+      numSub, codebookK, pqIters)
     val centRel = centroidRelation(spark, coarse)
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val memberCells = assignCellsRelationAuto(v, centRel, probes = 1, numCells)
@@ -1916,7 +2006,6 @@ object Similarity {
     val qv = queries.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val probeCells = assignCellsRelation(qv, centRel, probes)
       .select(col("vec_id").as("qid"), col("cell"))
-    val (w, books) = pqCodebooks(vectors, numSub, codebookK, pqIters)
     val bookRel = codebookRelation(spark, w, books)
     val codes = encodeViaRelation(subSliced(v, numSub, w), bookRel)
       .join(memberCells, "vec_id")
@@ -2154,8 +2243,7 @@ object Similarity {
       queries: DataFrame, k: Int, numCells: Int, cellIters: Int, probes: Int,
       numSub: Int, codebookK: Int, pqIters: Int): DataFrame = {
     val spark = vectors.sparkSession
-    val coarse = kmeansCentroidSeq(vectors, numCells, cellIters,
-      viaRelation = true)
+    val coarse = kmeansCentroidSeq(vectors, numCells, cellIters)
     val centRel = centroidRelation(spark, coarse)
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val asn = assignCellsRelationAuto(v, centRel, probes = 1, numCells)

@@ -33,12 +33,14 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  test("kmeansCentroidSeq viaRelation trains identical centroids (two geometries)") {
+  test("kmeansCentroidSeq trains the driver-replayed centroids (two geometries)") {
     val e = embeddings
+    val data = LloydReplay.corpus(e)
+    val d = data.head._2.length
     for ((nc, it) <- Seq((7, 2), (5, 3))) {
-      val lit0 = Similarity.kmeansCentroidSeq(e, nc, it)
-      val rel = Similarity.kmeansCentroidSeq(e, nc, it, viaRelation = true)
-      assert(lit0 == rel, s"Lloyd literal≠relation at ($nc, $it)")
+      val rel = Similarity.kmeansCentroidSeq(e, nc, it)
+      assert(rel == LloydReplay.train(data, 0, d, nc, it),
+        s"Lloyd relation≠replay at ($nc, $it)")
     }
   }
 
@@ -169,16 +171,15 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("kmeansCentroidSeq trainSampleMod: m=1 is the default recurrence; sampled training is path-stable") {
     val e = embeddings
     val base = Similarity.kmeansCentroidSeq(e, 8, 2)
-    assert(Similarity.kmeansCentroidSeq(e, 8, 2, viaRelation = false,
+    assert(Similarity.kmeansCentroidSeq(e, 8, 2,
       trainSampleMod = 1) == base, "m=1 must be the unsampled recurrence")
-    val s4lit = Similarity.kmeansCentroidSeq(e, 8, 2, viaRelation = false,
-      trainSampleMod = 4)
-    val s4rel = Similarity.kmeansCentroidSeq(e, 8, 2, viaRelation = true,
-      trainSampleMod = 4)
-    assert(s4lit == s4rel, "literal and relation Lloyd diverge under sampling")
+    val s4 = Similarity.kmeansCentroidSeq(e, 8, 2, trainSampleMod = 4)
+    val data = LloydReplay.corpus(e)
+    assert(s4 == LloydReplay.train(data, 0, data.head._2.length, 8, 2,
+      mod = 4), "sampled Lloyd diverges from the driver replay")
     // the knob must actually change training on this fixture (a sample
     // that reproduced the full-corpus means would pin nothing)
-    assert(s4lit != base, "fixture sample unexpectedly reproduces full training")
+    assert(s4 != base, "fixture sample unexpectedly reproduces full training")
     // seed stability: iters = 0 means centroids ARE the seeds — the
     // full-corpus ids < numCells at any m
     assert(Similarity.kmeansCentroidSeq(e, 8, 0, trainSampleMod = 4) ==

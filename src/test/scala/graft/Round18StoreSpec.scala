@@ -1,5 +1,6 @@
 package graft
 
+import java.io.File
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
@@ -20,7 +21,9 @@ import graft.operators.{IndexStore, Similarity}
   * windows (artifacts-without-manifest, GC-skipped leftovers,
   * tombstone-without-publish) — the store must serve its old version
   * throughout, never lose a referenced artifact, and eventually
-  * collect every orphan.
+  * collect every orphan. The store queries (q193/q194/q197) build in a
+  * per-call temp directory: each call starts from an empty store and
+  * nothing is left behind.
   */
 class Round18StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -327,5 +330,48 @@ class Round18StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       && !replay.getAs[Boolean]("published"),
       s"replayed takedown after refresh should be a no-op: $replay")
     assert(IndexStore.currentManifest(spark, dir).version == vNow)
+  }
+
+  private def tmpEntries: Set[String] =
+    new File(System.getProperty("java.io.tmpdir")).list()
+      .filter(_.startsWith("graft-index-store-")).toSet
+
+  /** Every file under the old shared store root, with its mtime. */
+  private def sharedRoot: Map[String, Long] = {
+    def walk(f: File): Seq[File] =
+      f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    val root = new File("/tmp/graft_index_store")
+    if (!root.exists()) Map.empty
+    else walk(root).map(f => f.getPath -> f.lastModified()).toMap
+  }
+
+  test("store queries build in a per-call temp store and leave nothing behind") {
+    val before = (tmpEntries, sharedRoot)
+    val stores = (1 to 2).map { _ =>
+      var seen = ""
+      val got = SparkEntry.withTempStore(spark) { store =>
+        seen = store
+        assert(!new File(store).exists(), "a call must start from an empty store")
+        IndexStore.buildIvfPq(embeddings, store, numCells = 8,
+          cellIters = 1, numSub = 4, codebookK = 8, pqIters = 1)
+        assert(IndexStore.currentManifest(spark, store).version == 1L)
+        IndexStore.serveIvfPq(spark, store,
+          embeddings.filter(col("vec_id") < 3), k = 5, probes = 2)
+      }
+      // the served rows outlive the store they were served from
+      assert(got.count() == 15L)
+      assert(!new File(seen).getParentFile.exists(), s"$seen left behind")
+      seen
+    }
+    assert(stores.distinct.size == 2)
+    for (q <- Seq("q193_store_serve", "q194_filtered_ann",
+        "q197_store_serve_residual")) {
+      val run = SparkEntry.queries(q)
+      val first = run(spark, sf).collect().toSeq
+      assert(first.nonEmpty && run(spark, sf).collect().toSeq == first,
+        s"$q: a repeated call must serve the same rows")
+    }
+    assert((tmpEntries, sharedRoot) == before,
+      "a store query left files behind or wrote to the shared store root")
   }
 }
