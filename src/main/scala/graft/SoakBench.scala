@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{IndexStore, Similarity}
 
-/** Serve-under-maintenance soak (BASELINE.md round-15): ServeBench
-  * measures serving ALONE and Round15StoreSpec pins the maintenance
+/** Serve-under-maintenance soak (BASELINE.md round-15): perfbench's
+  * `serve` workload measures serving ALONE (with appends and deletes
+  * between serves) and Round15StoreSpec pins the maintenance
   * loop's SEMANTICS alone — this main runs them together the way a
   * production deployment does: build the store once, stream arrival
   * batches through [[graft.streaming.Ingest.ivfMaintainSink]] (encode →

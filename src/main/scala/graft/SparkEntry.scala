@@ -1656,8 +1656,7 @@ object SparkEntry {
         numCells = 8, iters = 2, probes = 2, prIters = 3, top = 20,
         salt = 4)),
     // q183 at SCALE geometry: cells follow the √N rule (autoCells —
-    // exact integer, oracle-mirrored), index rides the broadcast
-    // relation. The fixed-8 gate geometry is quadratic in N (measured
+    // exact integer, oracle-mirrored). The fixed-8 gate geometry is quadratic in N (measured
     // infeasible at 200k vectors); this is the form that survives the
     // corpus growing 100×.
     "q191_knn_pagerank_auto" -> ((s, dir) => {
@@ -1666,7 +1665,7 @@ object SparkEntry {
       // driver action (DriverBoundsSpec class: 1-row)
       val cells = Similarity.autoCells(e.count())
       Similarity.knnPageRank(e, k = 3, numCells = cells,
-        iters = 2, probes = 2, prIters = 3, top = 20, viaRelation = true)
+        iters = 2, probes = 2, prIters = 3, top = 20)
     }),
     // q191 with Lloyd trained on the deterministic 1/4 id-mod sample
     // (the FAISS points-per-cell discipline: training needs tens of
@@ -1676,8 +1675,7 @@ object SparkEntry {
       val e = Tables.embeddings(s, dir)
       val cells = Similarity.autoCells(e.count())
       Similarity.knnPageRank(e, k = 3, numCells = cells,
-        iters = 2, probes = 2, prIters = 3, top = 20, viaRelation = true,
-        trainSampleMod = 4)
+        iters = 2, probes = 2, prIters = 3, top = 20, trainSampleMod = 4)
     }),
     // Tokenizer — merge-compression (fertility) per language: which
     // languages the trained vocab serves; rides the q138 merge table
@@ -1691,23 +1689,21 @@ object SparkEntry {
     "q185_cluster_size_hist" -> ((s, dir) =>
       Dedup.clusterSizeHistogram(Tables.documents(s, dir), "doc_id",
         "text")),
-    // Similarity — q121's exact search with the index as BROADCAST
-    // RELATIONS instead of plan literals (the production-index form);
-    // output is literal-identical, so it shares q121's oracle verbatim
+    // Similarity — the same call as q121, kept registered because the
+    // bench and the oracle floor key on this id; shares q121's oracle
     "q187_ivfpq_relation" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       Similarity.ivfPqTopK(e, e.filter(col("vec_id") < 3), k = 5,
         numCells = 8, cellIters = 2, probes = 2,
-        numSub = 4, codebookK = 8, pqIters = 2, indexAsRelation = true)
+        numSub = 4, codebookK = 8, pqIters = 2)
     }),
-    // Similarity — q171's residual search, index-as-relation form
-    // (cr/rn2/cn2 constants derived distributively); shares q171's
-    // oracle verbatim
+    // Similarity — the same call as q171, kept registered because the
+    // bench and the oracle floor key on this id; shares q171's oracle
     "q188_residual_relation" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       Similarity.ivfPqResidualTopK(e, e.filter(col("vec_id") < 3), k = 5,
         numCells = 8, cellIters = 2, probes = 2,
-        numSub = 4, codebookK = 8, pqIters = 2, indexAsRelation = true)
+        numSub = 4, codebookK = 8, pqIters = 2)
     }),
     // ANN — index MAINTENANCE action on the q181 drift: append batch →
     // drift → refresh-vs-rebuild decision (churn > 0.1 ⇒ rebuild);

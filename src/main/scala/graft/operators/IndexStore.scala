@@ -37,9 +37,8 @@ final case class IndexManifest(version: Long, kind: String,
 /** A pinned serving handle (see [[IndexStore.openReader]]): the
   * manifest version, artifact relations, and their resolved file
   * indexes, held across serves so the per-call driver cost is zero.
-  * `rawCodes` keeps the partition columns untouched so both the static
-  * isin and Catalyst's dynamic partition pruning land on the partition
-  * column directly.
+  * `rawCodes` keeps the partition columns untouched so Catalyst's
+  * dynamic partition pruning lands on the partition column directly.
   */
 final class IndexReader private[operators] (spark: SparkSession,
     dir: String, val manifest: IndexManifest,
@@ -126,49 +125,22 @@ final class IndexReader private[operators] (spark: SparkSession,
     */
   def serve(queries: DataFrame, k: Int, probes: Int,
       allowed: Option[DataFrame] = None,
-      refineWith: Option[DataFrame] = None, kShort: Int = 0,
-      prune: Boolean = false): DataFrame = {
-    // probe assignment computed ONCE here (both for the ADC serve and
-    // the optional static scan restriction): queries × broadcast
-    // centroid relation — query-batch-sized, never corpus-sized
-    val probeCells = Similarity.assignCellsRelation(
-      queries.select(col("vec_id"),
-        Similarity.asDouble(col("embedding")).as("v")),
-      centRel, probes)
-      .select(col("vec_id").as("qid"), col("cell"))
-    // OPT-IN static scan restriction (the default path already
-    // partition-prunes via Catalyst's DPP on the broadcast ADC join):
-    // fold the probed DISTINCT cells to the driver — bounded by
-    // probes × |queries| and capped at MaxPrunedCells, far under any
-    // corpus size — and push them as a STATIC partition filter with
-    // Int literals on the raw partition column (a cast on either side
-    // would demote it to a post-scan predicate). The ADC join below is
-    // unchanged (the isin is a superset restriction; results are
-    // bit-identical, spec-pinned). Query batches too large for a
-    // useful restriction fall back to the plain scan.
-    val restricted =
-      if (!prune) rawCodes
-      else {
-        val cells = probeCells.select(col("cell")).distinct()
-          .limit(IndexStore.MaxPrunedCells + 1).collect()
-          .map(_.getLong(0)).toSeq
-        if (cells.size <= IndexStore.MaxPrunedCells)
-          rawCodes.filter(col("cell").isin(cells.map(_.toInt): _*))
-        else rawCodes
-      }
+      refineWith: Option[DataFrame] = None, kShort: Int = 0): DataFrame = {
     // partition-column values come back type-inferred (int); the ADC
-    // joins key on the long the relations carry
-    val codes = restricted.select(col("vec_id"), col("sub"), col("code"),
+    // joins key on the long the relations carry. No scan restriction
+    // here: the ADC join keys the code stream on the partition column
+    // against a broadcast query-sized table, so Catalyst's dynamic
+    // partition pruning reads only the probed cells' directories
+    val codes = rawCodes.select(col("vec_id"), col("sub"), col("code"),
       col("cell").cast("long").as("cell"))
     val kServe = if (refineWith.isEmpty) k
       else if (kShort > 0) kShort else 5 * k
     val short = manifest.kind match {
       case IndexStore.KindPq => Similarity.ivfPqServe(codes, centRel,
-        bookRel, queries, kServe, probes, numSub, w, allowed,
-        precomputedProbes = Some(probeCells))
+        bookRel, queries, kServe, probes, numSub, w, allowed)
       case IndexStore.KindPqResidual => Similarity.ivfPqResidualServe(
         codes, centRel, bookRel, queries, kServe, probes, numSub, w,
-        allowed, precomputedProbes = Some(probeCells))
+        allowed)
       case other =>
         throw new IllegalStateException(s"unknown index kind: $other")
     }
@@ -181,11 +153,11 @@ final class IndexReader private[operators] (spark: SparkSession,
 
 /** Persisted ANN index: train ONCE, serve MANY — the lifecycle piece
   * that divorces query latency from index construction. Every serving
-  * artifact of the relation-path IVF-PQ search is a plain parquet
-  * relation; the store supports BOTH encodings the library ships:
-  * plain PQ (kind = "pq", q121/q187's chain) and residual PQ
-  * (kind = "pq_residual", q171/q188's measured-better production
-  * index — codebooks trained on r = x − c(x)).
+  * artifact of the IVF-PQ search is a plain parquet relation; the
+  * store supports BOTH encodings the library ships:
+  * plain PQ (kind = "pq", q121's chain) and residual PQ
+  * (kind = "pq_residual", q171's production index — codebooks trained
+  * on r = x − c(x)).
   *
   * Layout (VERSIONED — round-15): the store root holds immutable,
   * version-suffixed artifact directories plus tiny manifest files
@@ -227,12 +199,11 @@ final class IndexReader private[operators] (spark: SparkSession,
   * that). Readers are unlimited and lock-free.
   *
   * Parquet stores arrays of doubles and int64s exactly, so a served
-  * result is BIT-IDENTICAL to the in-memory relation path (spec-pinned
-  * round-trips for both kinds) — which is itself spec-identical to the
-  * literal path, so the store inherits the whole family's oracle
-  * gates.
+  * result is BIT-IDENTICAL to the in-memory search (spec-pinned
+  * round-trips for both kinds): the store inherits the whole family's
+  * oracle gates.
   *
-  * Scale shape: the index relations are index-sized (never driver
+  * Scale shape: the index relations are index-sized (never plan
   * literals — the L152 form), `codes` is corpus-sized but narrow and
   * column-pruned at the scan, and serving never touches the original
   * d-dim vectors. On a cluster the store is just a parquet directory:
@@ -244,17 +215,6 @@ object IndexStore {
 
   val KindPq = "pq"
   val KindPqResidual = "pq_residual"
-
-  /** Cap on the probed-cell fold the OPT-IN static pruning path
-    * (`serveIvfPq(prune = true)`) puts on the driver (matches the
-    * DriverBoundsSpec index-family bound): a query batch probing more
-    * distinct cells than this gets the plain scan instead — at that
-    * width the scan restriction stops paying anyway (the probed
-    * fraction approaches 1). The DEFAULT serve path never folds:
-    * Catalyst's dynamic partition pruning restricts the scan inside
-    * one execution.
-    */
-  val MaxPrunedCells = 4096
 
   private val ManifestName = "manifest-(\\d+)".r
   private val ArtifactName = "(centroids|codebooks|codes|meta)-(\\d+)".r
@@ -537,8 +497,8 @@ object IndexStore {
     * the union of the filtered scans is exactly the stream a full
     * rewrite would have produced (spec-pinned bit-identity). A patch
     * that emptied its cells (`nRows == 0`) contributes only its
-    * exclusion, its directory is never read. Static isin pruning and
-    * per-branch partition filters push through the union; the chain is
+    * exclusion, its directory is never read. Dynamic partition pruning
+    * and per-branch partition filters push through the union; the chain is
     * bounded by the delete path's `maxPatches` fallback and folded to
     * one segment by [[compactCodes]].
     */
@@ -567,21 +527,22 @@ object IndexStore {
       .select(col("vec_id"), col("sub"), col("code"),
         col("cell").cast("long").as("cell"))
 
-  /** Train the relation-path IVF-PQ index over `vectors` (vec_id,
-    * embedding) and publish all four artifacts as a new version under
-    * `dir`. Training is [[Similarity.ivfPqTopK]]'s relation path
-    * verbatim: the coarse centroids and the per-subspace codebooks are
-    * the books of one [[Similarity.lloydBooks]] call (nothing
-    * index-sized in any plan), then the nearest-codeword encode via
-    * broadcast codebook join.
+  /** Train the IVF-PQ index over `vectors` (vec_id, embedding) and
+    * publish all four artifacts as a new version under `dir`. The chain
+    * is [[Similarity.ivfPqTopK]]'s: [[Similarity.ivfPqTrain]] (the
+    * coarse centroids and the per-subspace codebooks as the books of
+    * one [[Similarity.lloydBooks]] call) and [[Similarity.ivfPqEncode]]
+    * (member cells + the nearest-codeword encode against the broadcast
+    * codebook relation) — every index term a relation, nothing
+    * index-sized in any plan.
     */
   def buildIvfPq(vectors: DataFrame, dir: String, numCells: Int,
       cellIters: Int, numSub: Int, codebookK: Int, pqIters: Int): Unit =
     buildAny(vectors, dir, numCells, cellIters, numSub, codebookK,
       pqIters, KindPq)
 
-  /** [[buildIvfPq]] for the RESIDUAL encoding (q171/q188's chain —
-    * the index RecallCompare measured ≥ plain recall at every scale):
+  /** [[buildIvfPq]] for the RESIDUAL encoding (q171's chain — measured
+    * recall ≥ plain PQ at every scale, BASELINE.md):
     * codebooks trained on r = x − c(x) offsets, codes the residual
     * encodings. Serving replays [[Similarity.ivfPqResidualServe]]'s
     * ADC reconstruction algebra from the stored relations.
@@ -601,38 +562,10 @@ object IndexStore {
     // a REBUILD into a dir with tombstoned ids honors them (store
     // truth survives every publish kind); a fresh dir has none
     val live = antiTombstones(vectors, dir)
-    // plain PQ trains the cells and the codebooks over the same vectors:
-    // one Lloyd call of 1 + numSub books. Residual codebooks train on
-    // the offsets from the FINAL cells, so that kind takes two calls.
-    val (coarse, pqTrained) =
-      if (kind == KindPq) {
-        val (c, w, b) = Similarity.ivfPqBooks(live, numCells, cellIters,
-          numSub, codebookK, pqIters)
-        (c, Some((w, b)))
-      } else (Similarity.kmeansCentroidSeq(live, numCells, cellIters), None)
-    val centRel = Similarity.centroidRelation(spark, coarse)
-    val v = live.select(col("vec_id"),
-      Similarity.asDouble(col("embedding")).as("v"))
-    val asn = Similarity.assignCellsRelationAuto(v, centRel, probes = 1,
-      numCells)
-      .select(col("vec_id"), col("v"), col("cell"))
-    val memberCells = asn.select(col("vec_id"), col("cell"))
-    // plain PQ encodes x itself; residual PQ encodes r = x − c(x)
-    // (one broadcast join on cell, exact IEEE subtraction)
-    val toEncode =
-      if (kind == KindPq) v
-      else asn
-        .join(broadcast(centRel.select(col("cid").as("cell"), col("cv"))),
-          "cell")
-        .select(col("vec_id"),
-          zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
-    val (w, books) = pqTrained.getOrElse(Similarity.pqCodebooks(
-      toEncode.select(col("vec_id"), col("v").as("embedding")),
-      numSub, codebookK, pqIters))
-    val bookRel = Similarity.codebookRelation(spark, w, books)
-    val codes = Similarity
-      .encodeViaRelation(Similarity.subSliced(toEncode, numSub, w), bookRel)
-      .join(memberCells, "vec_id")
+    val (centRel, bookRel, w) = Similarity.ivfPqTrain(live, kind, numCells,
+      cellIters, numSub, codebookK, pqIters)
+    val codes = Similarity.ivfPqEncode(live, centRel, bookRel, kind,
+      numCells, numSub, w)
     val m = IndexManifest(v1, kind, s"centroids-$v1", s"codebooks-$v1",
       s"codes-$v1", s"meta-$v1")
     centRel.write.mode("overwrite").parquet(artifactPath(dir, m.centroids))
@@ -663,15 +596,7 @@ object IndexStore {
     * only the probed cells' directories inside one execution — zero
     * extra driver jobs, serve stays fully lazy (spec-pinned:
     * `dynamicpruning` in the scan's partitionFilters, files read ≤
-    * probes × |queries|). `prune = true` instead folds the probed
-    * DISTINCT cells to the driver (≤ probes × |queries| ids, capped by
-    * [[MaxPrunedCells]] with a full-scan fallback) and pushes them as
-    * a STATIC isin partition filter — deterministic insurance for plan
-    * shapes where DPP's heuristics decline (it costs ~0.5 s of extra
-    * driver jobs at any scale for I/O identical to the DPP path —
-    * ServeBench's crossover row). Results are bit-identical either
-    * way: both restrictions are supersets of the ADC join's own cell
-    * keying (spec-pinned, both kinds).
+    * probes × |queries|).
     *
     * `refineWith` composes the exact re-rank stage
     * ([[Similarity.refineTopK]]) over the served shortlist — the
@@ -686,10 +611,9 @@ object IndexStore {
     */
   def serveIvfPq(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int, probes: Int, allowed: Option[DataFrame] = None,
-      refineWith: Option[DataFrame] = None, kShort: Int = 0,
-      prune: Boolean = false): DataFrame =
+      refineWith: Option[DataFrame] = None, kShort: Int = 0): DataFrame =
     openReader(spark, dir).serve(queries, k, probes, allowed, refineWith,
-      kShort, prune)
+      kShort)
 
   /** Open a PINNED reader on the store's current version: the manifest
     * is resolved, the artifact relations created (this is where
@@ -697,11 +621,11 @@ object IndexStore {
     * driver-side cost, measured at ~1.5 s/serve at sf1's 256
     * cell directories, growing with √N), and the meta row fetched —
     * ONCE. Every `serve` on the handle reuses the resolved file index,
-    * so warm serve latency is the ADC plan alone (ServeBench's
-    * serve_warm_s row). This is how a serving deployment runs: open at
-    * startup, serve many, poll [[currentManifest]].version (a tiny
-    * directory listing) and re-open only when maintenance publishes a
-    * new version. The handle pins its version by construction — the
+    * so warm serve latency is the ADC plan alone (perfbench's `serve`
+    * workload times exactly this). This is how a serving deployment
+    * runs: open at startup, serve many, poll
+    * [[currentManifest]].version (a tiny directory listing) and re-open
+    * only when maintenance publishes a new version. The handle pins its version by construction — the
     * reader-isolation guarantee as an API rather than an accident of
     * plan timing. GC keeps the previous version's artifacts, so a
     * reader at most one version behind always serves.
@@ -757,25 +681,11 @@ object IndexStore {
     val centRel = spark.read.parquet(artifactPath(dir, m.centroids))
     val bookRel = spark.read.parquet(artifactPath(dir, m.codebooks))
     val meta = spark.read.parquet(artifactPath(dir, m.meta)).head()
-    val numSub = meta.getAs[Int]("num_sub")
-    val w = meta.getAs[Int]("w")
     // a tombstoned id arriving (late replay of a pre-takedown feed)
     // must not re-enter the stream — store truth outranks arrivals
-    val v = antiTombstones(vectors, dir).select(col("vec_id"),
-      Similarity.asDouble(col("embedding")).as("v"))
-    val asn = Similarity.assignCellsRelationAuto(v, centRel, probes = 1,
-      meta.getAs[Int]("num_cells"))
-      .select(col("vec_id"), col("v"), col("cell"))
-    val toEncode =
-      if (m.kind == KindPq) v
-      else asn
-        .join(broadcast(centRel.select(col("cid").as("cell"), col("cv"))),
-          "cell")
-        .select(col("vec_id"),
-          zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
-    val batchCodes = Similarity
-      .encodeViaRelation(Similarity.subSliced(toEncode, numSub, w), bookRel)
-      .join(asn.select(col("vec_id"), col("cell")), "vec_id")
+    val batchCodes = Similarity.ivfPqEncode(antiTombstones(vectors, dir),
+      centRel, bookRel, m.kind, meta.getAs[Int]("num_cells"),
+      meta.getAs[Int]("num_sub"), meta.getAs[Int]("w"))
     writeCodes(batchCodes, artifactPath(dir, m.codes), batch = batchId)
     }
   }
@@ -924,7 +834,8 @@ object IndexStore {
     * refreshes (exactly what it is for) means nothing ever folds them
     * back — so a serve reads B files per probed cell after B-1 appends
     * and the flat-warm-serve result erodes with maintenance age
-    * (ServeBench's aging rows measure exactly this). Compaction is the
+    * (BASELINE.md's round-16 aging rows measured exactly this).
+    * Compaction is the
     * [[graft.operators.Layout.compactionPlan]]/`compactionRewrite`
     * discipline applied THROUGH the versioned publish: rewrite into
     * fresh artifacts, swap the manifest pointer, let GC retire the old
@@ -981,7 +892,7 @@ object IndexStore {
     * listing of cost (a loop polling after every micro-batch must not
     * spam versions or log files). The threshold trades write
     * amplification (each compact rewrites the narrow code stream) for
-    * serve I/O; ServeBench's aging rows price both sides. Returns
+    * serve I/O; BASELINE.md's round-16 aging rows price both sides. Returns
     * [[compactCodes]]'s report when it fires, None when under
     * threshold.
     */
@@ -1002,7 +913,7 @@ object IndexStore {
     * (at that width the patch stops paying — the touched fraction
     * approaches the corpus and the manifest's exclusion list stops
     * being metadata-sized). Matches the DriverBoundsSpec index-family
-    * bound like [[MaxPrunedCells]].
+    * bound.
     */
   val MaxPatchCells = 4096
 
@@ -1024,7 +935,7 @@ object IndexStore {
     * (original batch values preserved) and the manifest overlay
     * ([[CodePatch]]) supersedes exactly that (cells × current batches)
     * slice of the earlier segments. Bytes written ∝ the touched-cell
-    * fraction of the corpus (ServeBench's delete row measures it), not
+    * fraction of the corpus (BASELINE.md's round-17 delete row), not
     * the corpus — at 100 TB that is the difference between a takedown
     * being a minutes job and an hours job. Centroids/codebooks/meta
     * are REUSED by name (deletion changes neither cell geometry nor
@@ -1223,30 +1134,22 @@ object IndexStore {
     // plain-PQ path would drop them anyway via its join to the stored
     // codes; the residual path re-encodes from the corpus and would
     // not)
-    val v = antiTombstones(vectors, dir).select(col("vec_id"),
-      Similarity.asDouble(col("embedding")).as("v"))
+    val live = antiTombstones(vectors, dir)
     // meta is one stored row (num_sub, w, num_cells, codebook_k); the
     // cell count routes the assignment shape (assignCellsRelationAuto)
     val meta = spark.read.parquet(artifactPath(dir, m.meta)).head()
-    val asn = Similarity.assignCellsRelationAuto(v, centRel, probes = 1,
-      meta.getAs[Int]("num_cells"))
-      .select(col("vec_id"), col("v"), col("cell"))
-    if (m.kind == KindPq)
+    val numCells = meta.getAs[Int]("num_cells")
+    if (m.kind == KindPq) {
+      val cells = Similarity.assignCellsRelationAuto(live.select(
+          col("vec_id"), Similarity.asDouble(col("embedding")).as("v")),
+        centRel, probes = 1, numCells)
+        .select(col("vec_id"), col("v"), col("cell"))
       readCodes(spark, dir, m).drop("cell")
-        .join(asn.select(col("vec_id"), col("cell")), "vec_id")
-    else {
-      val numSub = meta.getAs[Int]("num_sub")
-      val w = meta.getAs[Int]("w")
-      val bookRel = spark.read.parquet(artifactPath(dir, m.codebooks))
-      val resid = asn
-        .join(broadcast(centRel.select(col("cid").as("cell"), col("cv"))),
-          "cell")
-        .select(col("vec_id"),
-          zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
-      Similarity
-        .encodeViaRelation(Similarity.subSliced(resid, numSub, w), bookRel)
-        .join(asn.select(col("vec_id"), col("cell")), "vec_id")
-    }
+        .join(cells.select(col("vec_id"), col("cell")), "vec_id")
+    } else
+      Similarity.ivfPqEncode(live, centRel,
+        spark.read.parquet(artifactPath(dir, m.codebooks)), m.kind, numCells,
+        meta.getAs[Int]("num_sub"), meta.getAs[Int]("w"))
   }
 
   /** Write `newCodes` as the next version's code stream (row-count

@@ -491,60 +491,12 @@ object Similarity {
         s => s.getField("m")).as("cv"))
   }
 
-  /** Assign each (vec_id, v) row to its `probes` highest-cosine
-    * centroids, carrying the winning cosine as `sim`. The centroid set
-    * is a driver-side literal, so the argmax is a pure column
-    * expression evaluated INSIDE the scan — no crossJoin, no window
-    * shuffle; at any vector count the assignment is map-only. Ties on
-    * exactly-equal cosines (possible only with duplicate centroids)
-    * break toward the LOWER cid — the order every DuckDB oracle's
-    * `ORDER BY cos DESC, cid` mirror encodes — via a negated-cid sort
-    * field.
-    *
-    * Plan-size caveat: the literal embeds k×d doubles as EXPRESSIONS
-    * the analyzer walks on every plan that references the assignment —
-    * right for the tested index sizes (nlist ≤ 10³), wrong for a
-    * production 10⁴–10⁵-cell index. [[assignCellsRelation]] is the
-    * scale form: identical output, index rides a broadcast relation.
-    * Training never pays the caveat: [[lloydBooks]] assigns against a
-    * broadcast relation, so this literal form serves only the search
-    * paths that take an already-trained centroid set.
-    */
-  def assignCells(
-      v: DataFrame, centroids: Seq[(Long, Seq[Double])], probes: Int): DataFrame = {
-    require(centroids.nonEmpty, "empty centroid set")
-    val sims = centroids.map { case (cid, cv) =>
-      val cnrm = math.sqrt(cv.map(x => x * x).sum)
-      // A zero-norm vector (or centroid) has no direction: its cosine is
-      // 0/0 = NaN, and NaN sort order is ENGINE-DEPENDENT (Spark sorts NaN
-      // greatest; DuckDB may yield NULL with ieee ops off). Pin the cosine
-      // to 0.0 so the argmax tie-break (lowest cid) decides the cell
-      // deterministically on both engines — mirrored by the CASE guard in
-      // every oracle's assignment CTE.
-      val sim =
-        if (cnrm == 0.0) lit(0.0)
-        else when(col("_vnrm") > 0,
-          dot_product(col("v"), typedLit(cv)) / (col("_vnrm") * lit(cnrm)))
-          .otherwise(lit(0.0))
-      struct(
-        sim.as("sim"),
-        lit(-cid).as("nc"), // desc sort on -cid = cid ascending
-        lit(cid).as("cid"))
-    }
-    v.withColumn("_vnrm", l2norm(col("v")))
-      .withColumn("_top", slice(sort_array(array(sims: _*), asc = false), 1, probes))
-      .select(col("vec_id"), col("v"), posexplode(col("_top")).as(Seq("_p", "_c")))
-      .select(col("vec_id"), col("v"), col("_c.cid").as("cell"),
-        col("_c.sim").as("sim"), (col("_p") + 1).as("probe"))
-  }
-
   /** A trained centroid set materialized as a RELATION — (cid, cv,
-    * cnrm, cn2) rows, one per centroid — instead of plan literals.
-    * cnrm/cn2 are the driver-side left folds every literal path embeds
-    * (`math.sqrt(Σx²)` / `Σx²`), precomputed here so the relation join
-    * reproduces the literal arithmetic bit-for-bit. In production the
-    * same schema is simply READ from the index's parquet — every
-    * relation-variant search op accepts any DataFrame with these
+    * cnrm, cn2) rows, one per centroid — never plan literals. cnrm/cn2
+    * are driver-side left folds (`math.sqrt(Σx²)` / `Σx²`) over the
+    * 6-dp-rounded centroid, the same folds every oracle mirror runs.
+    * In production the same schema is simply READ from the index's
+    * parquet — every search op accepts any DataFrame with these
     * columns, so a 65k-cell index never transits the driver at all.
     */
   def centroidRelation(spark: org.apache.spark.sql.SparkSession,
@@ -573,12 +525,15 @@ object Similarity {
     }.toDF("sub", "start", "code", "cv", "cnrm", "cn2")
   }
 
-  /** [[assignCells]] with the index as a BROADCAST RELATION — the
-    * 100×-readiness form: output is IDENTICAL (same cosine arithmetic,
-    * same zero-norm pin, same (sim desc, cid asc) tie order — enforced
-    * by the literal≡relation equality spec), but the centroid set
-    * rides a broadcast DataFrame joined onto the scan instead of k×d
-    * literal expressions the analyzer re-walks per plan. Shape: one
+  /** Assign each (vec_id, v) row to its `probes` highest-cosine
+    * centroids, carrying the winning cosine as `sim`, with the index as
+    * a BROADCAST RELATION (nothing index-sized is an expression, so the
+    * plan has the same size at any cell count). A zero-norm centroid or
+    * vector pins the cosine to 0.0 (NaN sort order is engine-dependent)
+    * and exactly-equal cosines break toward the LOWER cid — the
+    * `ORDER BY cos DESC, cid` every DuckDB oracle mirror encodes; both
+    * are pinned against the driver replay in the specs (LloydReplay
+    * .assign). Shape: one
     * broadcast nested-loop join (k rows per vector) folded by a
     * map-side-partial argmax aggregation — all of a vector's k
     * candidate rows are colocated by construction, so the partial
@@ -589,16 +544,15 @@ object Similarity {
     * probes = 1.
     *
     * `centroids` must have [[centroidRelation]]'s (cid, cv, cnrm)
-    * columns. An EMPTY relation yields an empty result (the literal
-    * path throws instead — a relation's cardinality isn't knowable
-    * without an action, and a scale caller validates its index store,
-    * not each query plan).
+    * columns. An EMPTY relation yields an empty result (a relation's
+    * cardinality isn't knowable without an action, and a scale caller
+    * validates its index store, not each query plan).
     */
   def assignCellsRelation(v: DataFrame, centroids: DataFrame,
       probes: Int): DataFrame = {
     val c = broadcast(centroids.select(col("cid"), col("cv"), col("cnrm")))
-    // the literal path's exact guard tree: zero-norm centroid OR vector
-    // pins the cosine to 0.0 (NaN sort order is engine-dependent)
+    // zero-norm centroid OR vector pins the cosine to 0.0 (NaN sort
+    // order is engine-dependent)
     val sim = when(col("cnrm") === 0.0, lit(0.0))
       .otherwise(when(col("_vnrm") > 0,
         dot_product(col("v"), col("cv")) / (col("_vnrm") * col("cnrm")))
@@ -618,10 +572,10 @@ object Similarity {
         .select(col("vec_id"), col("v"), col("cell"), col("sim"),
           (col("_p") + 1).as("probe"))
     } else {
-      // the literal path's sort_array(desc)+slice over (sim, -cid, cid)
-      // structs, fed by collect_list (order-free: the sort key is
-      // unique). `first(v)` is deterministic here — every row of the
-      // group carries the SAME vector.
+      // sort_array(desc)+slice over (sim, -cid, cid) structs, fed by
+      // collect_list (order-free: the sort key is unique). `first(v)`
+      // is deterministic here — every row of the group carries the SAME
+      // vector.
       scored.groupBy(col("vec_id"))
         .agg(first(col("v")).as("v"),
           slice(sort_array(collect_list(struct(col("_sim").as("sim"),
@@ -676,7 +630,7 @@ object Similarity {
     val centArr = broadcast(centroids.select(col("cid"), col("cv"), col("cnrm"))
       .agg(collect_list(struct(col("cid"), col("cv"), col("cnrm")))
         .as("__cents")))
-    // the literal path's exact guard tree: zero-norm centroid OR vector
+    // assignCellsRelation's guard tree: zero-norm centroid OR vector
     // pins the cosine to 0.0 (NaN sort order is engine-dependent)
     val simStructs = transform(col("__cents"), c =>
       struct(
@@ -710,19 +664,20 @@ object Similarity {
     * summarized per cluster — member count, mean and minimum cosine to
     * the centroid. The standard curation view for a training corpus:
     * undersized cells flag modality gaps, low min-cosine flags
-    * outliers/noise documents. Assignment is map-only against literal
-    * centroids; the summary is one narrow aggregation keyed by cell,
-    * so the readout scales with the vector count at any corpus size.
+    * outliers/noise documents. Assignment is against the broadcast
+    * centroid relation ([[assignCellsRelationAuto]]); the summary is one
+    * narrow aggregation keyed by cell, so the readout scales with the
+    * vector count at any corpus size.
     */
   def clusterSummary(
       vectors: DataFrame, numCells: Int = 8, iters: Int = 2): DataFrame = {
     val cent = kmeansCentroidSeq(vectors, numCells, iters)
-    // assignCells already carries each vector's cosine to its winning
-    // centroid — the summary is a pure groupBy, no join, no second
+    // the assignment already carries each vector's cosine to its
+    // winning centroid — the summary is a pure groupBy, no second
     // kernel pass over the embeddings
-    assignCells(
+    assignCellsRelationAuto(
         vectors.select(col("vec_id"), asDouble(col("embedding")).as("v")),
-        cent, probes = 1)
+        centroidRelation(vectors.sparkSession, cent), probes = 1, numCells)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_members"),
         round(avg(col("sim")), 6).as("avg_cos"),
@@ -743,9 +698,9 @@ object Similarity {
     * refresh, vectors moved in/out, and the churn fraction — the
     * number an index operator reads to decide between cheap periodic
     * refreshes and a full rebuild. Both centroid sets are k×d driver
-    * literals (the kmeansCentroidSeq bound); each assignment is
-    * map-only against literals, so the whole readout is three corpus
-    * scans + two narrow aggregations at any corpus size.
+    * folds (the kmeansCentroidSeq bound) that ride broadcast centroid
+    * relations, so the whole readout is three corpus scans + narrow
+    * aggregations at any corpus size.
     */
   def ivfReassignDrift(vectors: DataFrame, numCells: Int, iters: Int,
       deltaMod: Int): DataFrame = {
@@ -791,12 +746,6 @@ object Similarity {
         Seq[(Long, Seq[Double])]) = {
     require(deltaMod >= 2, s"deltaMod must be >= 2, got $deltaMod")
     val isBatch = col("vec_id") % deltaMod === (deltaMod - 1)
-    // RELATION form throughout (round-15): the literal form inlines
-    // k×d doubles into one generated expression per assignment — at
-    // the sf10 soak's 512-cell geometry that plan wedged the
-    // maintenance sink in codegen before a single task ran. The
-    // relation twins are spec-identical (the q187/q191 gating), so the
-    // maintenance family inherits the literal oracles unchanged.
     val cent0 = kmeansCentroidSeq(vectors.filter(!isBatch), numCells,
       iters)
     val spark0 = vectors.sparkSession
@@ -807,7 +756,7 @@ object Similarity {
       .select(col("vec_id"), col("v"), col("cell").as("cell0"))
     // one Lloyd refresh over the merged corpus: means of the stale
     // assignment, rounded to 6 decimals (the kmeansCentroidSeq
-    // recurrence), collected as the next k×d literal set
+    // recurrence), collected as the next k×d centroid set
     val spark = vectors.sparkSession
     import spark.implicits._
     val cent1: Seq[(Long, Seq[Double])] = a0
@@ -842,7 +791,7 @@ object Similarity {
     *
     * The decision itself is a 1-row driver read (the readout frame's
     * head) — the chain executes once; everything corpus-sized stays in
-    * the drift machinery's map-only assignments.
+    * the drift machinery's assignments.
     */
   def ivfIndexMaintain(vectors: DataFrame, numCells: Int, iters: Int,
       deltaMod: Int, churnThreshold: Double):
@@ -974,15 +923,17 @@ object Similarity {
       numCells: Int = 8,
       iters: Int = 2,
       probes: Int = 2): DataFrame = {
-    import vectors.sparkSession.implicits._
-    val cent = kmeansCentroidSeq(vectors, numCells, iters)
-    val members = assignCells(
-      vectors.select(col("vec_id"), asDouble(col("embedding")).as("v")), cent, probes = 1)
+    val cent = centroidRelation(vectors.sparkSession,
+      kmeansCentroidSeq(vectors, numCells, iters))
+    val members = assignCellsRelationAuto(
+      vectors.select(col("vec_id"), asDouble(col("embedding")).as("v")), cent,
+      probes = 1, numCells)
       .withColumn("vnrm", l2norm(col("v")))
       .select(col("vec_id").as("nid"), col("v").as("nv"),
         col("vnrm").as("nv_nrm"), col("cell"))
-    val probed = assignCells(
-      queries.select(col("vec_id"), asDouble(col("embedding")).as("v")), cent, probes)
+    val probed = assignCellsRelationAuto(
+      queries.select(col("vec_id"), asDouble(col("embedding")).as("v")), cent,
+      probes, numCells)
       .withColumn("vnrm", l2norm(col("v")))
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("vnrm").as("qv_nrm"), col("cell"))
@@ -1023,31 +974,24 @@ object Similarity {
     * space from numCells to numCells·salt — output-identical (each
     * qid probes exactly one replica of every member row), it exists
     * because a small-nlist join otherwise runs on ≤ numCells cores
-    * (jstack at sf10: 7 of 32 busy). `viaRelation` swaps both
-    * assignments onto the broadcast centroid relation
-    * ([[assignCellsRelation]]) — the large-nlist form, where numCells
-    * literal expressions would swamp analysis/codegen (training always
-    * assigns against a relation, see [[lloydBooks]]).
+    * (jstack at sf10: 7 of 32 busy). Both assignments run against the
+    * broadcast centroid relation ([[assignCellsRelationAuto]]), so the
+    * plan has the same size at any nlist.
     */
   def ivfKnnGraph(
       vectors: DataFrame, k: Int = 1,
       numCells: Int = 8, iters: Int = 2, probes: Int = 2,
-      viaRelation: Boolean = false, salt: Int = 1,
-      trainSampleMod: Int = 1): DataFrame = {
+      salt: Int = 1, trainSampleMod: Int = 1): DataFrame = {
     require(salt >= 1, s"salt must be >= 1, got $salt")
     val spark = vectors.sparkSession
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val cent = kmeansCentroidSeq(vectors, numCells, iters, trainSampleMod)
-    val assign: (DataFrame, Int) => DataFrame =
-      if (viaRelation) {
-        val rel = centroidRelation(spark, cent)
-        (df, p) => assignCellsRelationAuto(df, rel, p, numCells)
-      } else (df, p) => assignCells(df, cent, p)
-    val members = assign(v, 1)
+    val cent = centroidRelation(spark,
+      kmeansCentroidSeq(vectors, numCells, iters, trainSampleMod))
+    val members = assignCellsRelationAuto(v, cent, probes = 1, numCells)
       .withColumn("nv_nrm", l2norm(col("v")))
       .select(col("vec_id").as("nid"), col("v").as("nv"),
         col("nv_nrm"), col("cell"))
-    val probed = assign(v, probes)
+    val probed = assignCellsRelationAuto(v, cent, probes, numCells)
       .withColumn("qv_nrm", l2norm(col("v")))
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("qv_nrm"), col("cell"))
@@ -1120,8 +1064,7 @@ object Similarity {
     * with no cache dependency (the shared-session contract).
     */
   def knnPageRank(vectors: DataFrame, k: Int, numCells: Int, iters: Int,
-      probes: Int, prIters: Int, top: Int,
-      viaRelation: Boolean = false, salt: Int = 1,
+      probes: Int, prIters: Int, top: Int, salt: Int = 1,
       trainSampleMod: Int = 1): DataFrame = {
     require(prIters >= 1 && top >= 1, s"bad config ($prIters, $top)")
     val spark = vectors.sparkSession
@@ -1133,7 +1076,7 @@ object Similarity {
     val live = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val out = try {
       val edges = ivfKnnGraph(vectors, k, numCells, iters, probes,
-        viaRelation, salt, trainSampleMod)
+        salt, trainSampleMod)
         .select(col("qid").as("src"), col("nid").as("dst"))
       val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val edgesD = edges.join(outdeg, "src").persist(); live += edgesD
@@ -1188,44 +1131,6 @@ object Similarity {
     out.zipWithIndex.map { case ((id, p), i) => (i + 1L, id, p) }
       .toSeq.toDF("rank", "vec_id", "pr_micro")
       .orderBy(col("rank"))
-  }
-
-  /** IVF-style approximate top-k: coarse-quantize every vector to its
-    * nearest centroid (centroids = a small deterministic seed set, e.g.
-    * the first C vectors), then search only within the query's cell.
-    * Deterministic given the centroid set, so it has an exact SQL mirror.
-    */
-  def ivfTopK(
-      vectors: DataFrame,
-      queries: DataFrame,
-      centroids: DataFrame, // (cid, embedding) — small, broadcast
-      k: Int): DataFrame = {
-    val c = centroids.select(col("cid"), asDouble(col("embedding")).as("cv"))
-      .withColumn("cnrm", l2norm(col("cv")))
-
-    def assignCell(df: DataFrame, idName: String, vecName: String): DataFrame =
-      df.join(broadcast(c), lit(true))
-        .select(col(idName), col(vecName), col(vecName + "_nrm"), col("cid"),
-          // same zero-norm pin as assignCells: a directionless vector's
-          // cell is decided by the cid tie-break, not NaN sort order
-          when(col(vecName + "_nrm") * col("cnrm") > 0,
-            dot_product(col(vecName), col("cv")) /
-              (col(vecName + "_nrm") * col("cnrm")))
-            .otherwise(lit(0.0)).as("csim"))
-        .withColumn("rk",
-          row_number().over(
-            Window.partitionBy(col(idName)).orderBy(col("csim").desc, col("cid").asc)))
-        .filter(col("rk") === 1)
-        .select(col(idName), col(vecName), col(vecName + "_nrm"), col("cid").as("cell"))
-
-    val v = assignCell(normed(vectors, "nid", "nv"), "nid", "nv")
-    val q = assignCell(normed(queries, "qid", "qv"), "qid", "qv")
-    val scored = v.join(broadcast(q), col("qid") =!= col("nid") &&
-        v("cell") === q("cell"))
-      .select(col("qid"), col("nid"),
-        (dot_product(col("qv"), col("nv")) / (col("qv_nrm") * col("nv_nrm"))).as("cos"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
   /** Embedding-space dedup clusters: exact cosine near-dup pairs
@@ -1315,8 +1220,8 @@ object Similarity {
     * grown proportionally to the corpus (the paper's regime,
     * k ≈ N/⟨cell⟩), expected per-cell size is constant and total
     * pair work is LINEAR in N. The pair join is keyed by cell id, so
-    * a cluster partitions it naturally; assignment is map-only
-    * against literal centroids. The greedy earlier-id rule is the
+    * a cluster partitions it naturally; assignment is against the
+    * broadcast centroid relation. The greedy earlier-id rule is the
     * paper's one-survivor-per-ε-ball policy made deterministic and
     * order-free (a chain i~j~k with cos(i,k) < τ drops BOTH j and k —
     * documented over-drop, identical in both engines, no iteration).
@@ -1333,7 +1238,8 @@ object Similarity {
       numCells: Int = 8, iters: Int = 2): DataFrame = {
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val cent = kmeansCentroidSeq(vectors, numCells, iters)
-    val asn = assignCells(v, cent, probes = 1)
+    val asn = assignCellsRelationAuto(v,
+        centroidRelation(vectors.sparkSession, cent), probes = 1, numCells)
       .select(col("vec_id"), col("v"), col("cell"))
       .withColumn("nrm", l2norm(col("v")))
     val a = asn.select(col("cell"), col("vec_id").as("i"),
@@ -1365,8 +1271,8 @@ object Similarity {
     * state, identical in any engine), and kept iff its rank is within
     * `perCellCap`. Oversized cells are truncated to the cap; small
     * cells pass through whole — the output mixture is cluster-balanced
-    * by construction. Scale shape: assignment is map-only against
-    * literal centroids and the rank is ONE window partitioned by cell
+    * by construction. Scale shape: assignment is against the broadcast
+    * centroid relation and the rank is ONE window partitioned by cell
     * (numCells-way parallel, each partition bounded by its cell size);
     * only (vec_id, cell) rides the exchange — never the embedding.
     * Output: (vec_id, cell, rk, keep), one row per vector.
@@ -1379,7 +1285,8 @@ object Similarity {
     val cent = kmeansCentroidSeq(vectors, numCells, iters)
     val w = Window.partitionBy(col("cell"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-    assignCells(v, cent, probes = 1)
+    assignCellsRelationAuto(v, centroidRelation(vectors.sparkSession, cent),
+        probes = 1, numCells)
       .select(col("vec_id"), col("cell"))
       .withColumn("rk", row_number().over(w).cast("long"))
       .withColumn("keep", col("rk") <= perCellCap)
@@ -1690,58 +1597,22 @@ object Similarity {
     * 6-dp-rounded means, the oracle-replayable q47/q79 loop), and
     * every vector is encoded as its per-subspace nearest-centroid ids:
     * numSub·log₂(codebookK) bits instead of d floats (64 dims × f32 →
-    * 4 bytes at 4×8: a 64× shrink). Assignment is [[assignCells]] per
-    * subspace — centroids are driver-side literals (numSub·k·(d/numSub)
-    * = k·d doubles TOTAL, independent of the corpus), so encoding is
-    * map-only: no shuffle, no join, scan-speed at any scale. Returns
-    * (vec_id, sub, code) long-form — one downstream `groupBy(vec_id)`
-    * packs codes into a row when a packed layout is wanted.
+    * 4 bytes at 4×8: a 64× shrink). The encode is [[encodeViaRelation]]
+    * against the broadcast [[codebookRelation]] (numSub·k·(d/numSub)
+    * = k·d doubles TOTAL, independent of the corpus): one broadcast
+    * hash join on the subspace and one per-(vector, sub) argmax, with
+    * nothing index-sized in the plan. Returns (vec_id, sub, code)
+    * long-form — one downstream `groupBy(vec_id)` packs codes into a
+    * row when a packed layout is wanted.
     */
   def pqCodes(vectors: DataFrame, numSub: Int, codebookK: Int,
       iters: Int): DataFrame = {
     val (w, books) = pqCodebooks(vectors, numSub, codebookK, iters)
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    encodeLiteral(v, w, books).orderBy(col("vec_id"), col("sub"))
+    encodeViaRelation(subSliced(v, numSub, w),
+      codebookRelation(vectors.sparkSession, w, books))
+      .orderBy(col("vec_id"), col("sub"))
   }
-
-  /** The per-subspace nearest-codeword argmax of [[assignCells]],
-    * INLINED on the slice as one struct column: (sub, code).
-    * Arithmetic, zero-norm pin and (sim desc, cid asc) tie order are
-    * assignCells' verbatim — cnrm is the same driver-side fold, the
-    * winner the same sort_array-desc head. The one-scan literal encode
-    * below is its only user.
-    */
-  private def pqSubStruct(vcol: Column, w: Int, sub: Int,
-      cent: Seq[(Long, Seq[Double])]): Column = {
-    require(cent.nonEmpty, "empty centroid set")
-    val sv = slice(vcol, lit(sub * w + 1), lit(w))
-    val svnrm = l2norm(sv)
-    val sims = cent.map { case (cid, cv) =>
-      val cnrm = math.sqrt(cv.map(x => x * x).sum)
-      val sim =
-        if (cnrm == 0.0) lit(0.0)
-        else when(svnrm > 0,
-          dot_product(sv, typedLit(cv)) / (svnrm * lit(cnrm)))
-          .otherwise(lit(0.0))
-      struct(sim.as("sim"), lit(-cid).as("nc"), lit(cid).as("cid"))
-    }
-    val code = sort_array(array(sims: _*), asc = false)
-      .getItem(0).getField("cid")
-    struct(lit(sub).as("sub"), code.as("code"))
-  }
-
-  /** One-scan, map-only PQ encode against LITERAL codebooks — emits
-    * [[pqCodes]]' exact (vec_id, sub, code) rows. Replaces the
-    * union-of-numSub-branches shape, which scanned (and decoded) the
-    * corpus once per subspace; this reads it once and stays shuffle-
-    * free (the encode's documented scale property).
-    */
-  private[graft] def encodeLiteral(v: DataFrame, w: Int,
-      books: Seq[(Int, Seq[(Long, Seq[Double])])]): DataFrame =
-    v.select(col("vec_id"), explode(array(books.map { case (sub, cent) =>
-        pqSubStruct(col("v"), w, sub, cent)
-      }: _*)).as("e"))
-      .select(col("vec_id"), col("e.sub").as("sub"), col("e.code").as("code"))
 
   /** The PQ training half of [[pqCodes]], exposed because every
     * consumer of the codes needs the codebooks too (decode,
@@ -1794,65 +1665,29 @@ object Similarity {
     * codes against the reconstructed-centroid norm — the query never
     * touches the original d-dim corpus vectors.
     *
-    * Shape: the distance tables ride a BROADCAST (queries ×
-    * numSub·codebookK rows — query-sized, corpus-independent) onto
-    * the (vec_id, sub, code) code stream — a map-side equi-join on
-    * (sub, code), no corpus exchange; the per-(query, vector) sum
-    * folds in SUB order (collect_list → array_sort → sequential
-    * aggregate, the L38-L40 discipline) so the oracle replays each
-    * double exactly; ranking compares the ROUNDED cosine (the q62
-    * lesson: a raw-double argmax amplifies ulp drift into a different
-    * neighbor) with nid breaking ties. One (qid, vec)-keyed
-    * aggregation + one per-query window over scored rows — at 100 TB
-    * the scored frame is codes-sized (two ints + a double per row),
-    * never embedding-sized.
+    * Exhaustive PQ is IVF-PQ with ONE cell, so the scoring is
+    * [[ivfPqServe]]'s: every code goes in cell 0, whose centroid is the
+    * zero vector — a zero-norm centroid pins every probe cosine to 0.0,
+    * so each query probes it — and the distance tables ride a
+    * BROADCAST (queries × numSub·codebookK rows — query-sized,
+    * corpus-independent) onto the (vec_id, sub, code) code stream, a
+    * map-side equi-join with no corpus exchange. The per-(query,
+    * vector) sum folds in SUB order, ranking compares the ROUNDED
+    * cosine with nid breaking ties (see [[ivfPqServe]]). At 100 TB the
+    * scored frame is codes-sized (two ints + a double per row), never
+    * embedding-sized.
     */
   def pqAdcTopK(vectors: DataFrame, queries: DataFrame, k: Int,
       numSub: Int, codebookK: Int, iters: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
+    val spark = vectors.sparkSession
     val (w, books) = pqCodebooks(vectors, numSub, codebookK, iters)
-    // encode with the books already trained — don't Lloyd twice; one
-    // map-only scan emits every subspace's code (encodeLiteral)
+    val bookRel = codebookRelation(spark, w, books)
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val codes = encodeLiteral(v, w, books)
-    val q = queries.select(col("vec_id").as("qid"),
-      asDouble(col("embedding")).as("qv"))
-      .withColumn("qnrm", l2norm(col("qv")))
-    val tableEntries = books.flatMap { case (sub, cent) =>
-      cent.map { case (cid, cv) =>
-        struct(lit(sub).as("sub"), lit(cid).as("code"),
-          dot_product(slice(col("qv"), lit(sub * w + 1), lit(w)),
-            typedLit(cv)).as("pd"),
-          // reconstructed-centroid partial norm²: a driver-side
-          // left-to-right fold over the SAME 6-dp-rounded centroid the
-          // oracle's list_inner_product(cv, cv) folds
-          lit(cv.foldLeft(0.0)((a, x) => a + x * x)).as("cn2"))
-      }
-    }
-    val tables = q.select(col("qid"), col("qnrm"),
-      explode(array(tableEntries: _*)).as("e"))
-      .select(col("qid"), col("qnrm"), col("e.sub").as("sub"),
-        col("e.code").as("code"), col("e.pd").as("pd"), col("e.cn2").as("cn2"))
-    val scored = codes.join(broadcast(tables), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(min(col("qnrm")).as("qnrm"),
-        aggregate(transform(
-          array_sort(collect_list(struct(col("sub"), col("pd")))),
-          s => s.getField("pd")), lit(0.0), (a, x) => a + x).as("adot"),
-        aggregate(transform(
-          array_sort(collect_list(struct(col("sub"), col("cn2")))),
-          s => s.getField("cn2")), lit(0.0), (a, x) => a + x).as("rec2"))
-      .withColumn("cos_adc",
-        when(col("qnrm") > 0 && col("rec2") > 0,
-          round(col("adot") / (col("qnrm") * sqrt(col("rec2"))), 6))
-          .otherwise(lit(0.0)))
-    val win = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_adc").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("cos_adc"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val codes = encodeViaRelation(subSliced(v, numSub, w), bookRel)
+      .withColumn("cell", lit(0L))
+    val oneCell = centroidRelation(spark, Seq(0L -> Seq.fill(numSub * w)(0.0)))
+    ivfPqServe(codes, oneCell, bookRel, queries, k, probes = 1, numSub, w)
   }
 
   /** IVF-PQ fused top-k search — the configuration a billion-vector
@@ -1866,89 +1701,31 @@ object Similarity {
     * cells only — corpus fraction ≈ probes/numCells — against
     * table-lookup sums, which is why the pairing is the standard.
     *
-    * Composition is exactly the shipped parts: [[kmeansCentroidSeq]]
-    * coarse centroids (k·d driver literals), [[assignCells]] for both
-    * corpus membership (probes=1) and query probing, [[pqCodebooks]] /
-    * the [[pqAdcTopK]] encode-and-table machinery for scoring — PQ
-    * over RAW vectors, not residuals (residual encoding, the
-    * production refinement, changes the training target but not one
-    * line of this plan shape). The broadcast side is (queries ×
-    * probes × numSub × codebookK) table rows — query-sized, corpus-
-    * independent; the big side carries (vec_id, cell, sub, code) ints
-    * only, the join is map-side on (cell, sub, code), and the fold /
-    * rounded-argmax discipline is pqAdcTopK's verbatim.
-    *
-    * `indexAsRelation = true` switches every index term (centroids,
-    * codebooks, distance-table constants) from plan literals to
-    * broadcast relations ([[centroidRelation]]/[[codebookRelation]]
-    * joined on (cell)/(sub, code)) — identical output (spec-enforced),
-    * O(1) plan size, the form a production-sized index (nlist 10⁴–10⁵,
-    * k* = 256) requires. Measured (BASELINE.md round-14 crossover
-    * table): the relation path is FASTER at every tested geometry
-    * (1.3–1.9× at nlist 8→128, both SFs — literal analysis/codegen
-    * cost grows with the index, the relation path stays flat), so
-    * there is no crossover in the literal's favor; the literal stays
-    * the default only as the established benchmark anchor (q121) and
-    * for single-scan map-only assignment when an index is tiny.
+    * The chain is the one [[IndexStore.buildIvfPq]] persists and
+    * [[IndexStore.serveIvfPq]] reads back, run in memory:
+    * [[ivfPqTrain]] (the coarse cells and the codebooks as the books
+    * of one [[lloydBooks]] call), [[ivfPqEncode]] (member cells + the
+    * per-subspace encode) and [[ivfPqServe]] (query probing + ADC
+    * scoring). PQ over RAW vectors, not residuals (that is
+    * [[ivfPqResidualTopK]]). Every index term — centroids, codebooks,
+    * distance-table constants — rides a broadcast relation joined on
+    * (cell)/(sub, code), so the plan has the same size at any index
+    * geometry (BASELINE.md round 14 measured this form 1.3–1.9× faster
+    * than plan literals at nlist 8→128); the big side carries
+    * (vec_id, cell, sub, code) ints only.
     */
   def ivfPqTopK(vectors: DataFrame, queries: DataFrame, k: Int,
       numCells: Int, cellIters: Int, probes: Int,
-      numSub: Int, codebookK: Int, pqIters: Int,
-      indexAsRelation: Boolean = false): DataFrame = {
+      numSub: Int, codebookK: Int, pqIters: Int): DataFrame = {
     require(k > 0 && probes > 0, s"bad search config: k=$k probes=$probes")
-    if (indexAsRelation)
-      return ivfPqTopKRelationPath(vectors, queries, k, numCells, cellIters,
-        probes, numSub, codebookK, pqIters)
-    val (coarse, w, books) = ivfPqBooks(vectors, numCells, cellIters,
-      numSub, codebookK, pqIters)
-    val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val memberCells = assignCells(v, coarse, probes = 1)
-      .select(col("vec_id"), col("cell"))
-    val qv = queries.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val probeCells = assignCells(qv, coarse, probes = probes)
-      .select(col("vec_id").as("qid"), col("cell"))
-    val codes = encodeLiteral(v, w, books)
-      .join(memberCells, "vec_id")
-    val q = queries.select(col("vec_id").as("qid"),
-      asDouble(col("embedding")).as("qv"))
-      .withColumn("qnrm", l2norm(col("qv")))
-    val tableEntries = books.flatMap { case (sub, cent) =>
-      cent.map { case (cid, cv) =>
-        struct(lit(sub).as("sub"), lit(cid).as("code"),
-          dot_product(slice(col("qv"), lit(sub * w + 1), lit(w)),
-            typedLit(cv)).as("pd"),
-          lit(cv.foldLeft(0.0)((a, x) => a + x * x)).as("cn2"))
-      }
-    }
-    val tables = q.select(col("qid"), col("qnrm"),
-      explode(array(tableEntries: _*)).as("e"))
-      .select(col("qid"), col("qnrm"), col("e.sub").as("sub"),
-        col("e.code").as("code"), col("e.pd").as("pd"), col("e.cn2").as("cn2"))
-      .join(probeCells, "qid")
-    val scored = codes.join(broadcast(tables), Seq("cell", "sub", "code"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(min(col("qnrm")).as("qnrm"),
-        aggregate(transform(
-          array_sort(collect_list(struct(col("sub"), col("pd")))),
-          s => s.getField("pd")), lit(0.0), (a, x) => a + x).as("adot"),
-        aggregate(transform(
-          array_sort(collect_list(struct(col("sub"), col("cn2")))),
-          s => s.getField("cn2")), lit(0.0), (a, x) => a + x).as("rec2"))
-      .withColumn("cos_adc",
-        when(col("qnrm") > 0 && col("rec2") > 0,
-          round(col("adot") / (col("qnrm") * sqrt(col("rec2"))), 6))
-          .otherwise(lit(0.0)))
-    val win = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_adc").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("cos_adc"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
+    val (centRel, bookRel, w) = ivfPqTrain(vectors, IndexStore.KindPq,
+      numCells, cellIters, numSub, codebookK, pqIters)
+    ivfPqServe(ivfPqEncode(vectors, centRel, bookRel, IndexStore.KindPq,
+      numCells, numSub, w), centRel, bookRel, queries, k, probes, numSub, w)
   }
 
   /** Explode (id, v) into one row per PQ subspace slice, norm attached
-    * — the shared front of every relation-path encode/table build. The
+    * — the shared front of every encode and distance-table build. The
     * unrolled array is numSub entries (config-sized, not index-sized).
     */
   private[graft] def subSliced(df: DataFrame, numSub: Int, w: Int): DataFrame =
@@ -1982,50 +1759,87 @@ object Similarity {
         struct(col("_sim"), (-col("code")).as("nc"))).as("code"))
   }
 
-  /** [[ivfPqTopK]]'s index-as-relation path: plan shape and output are
-    * the literal path's verbatim — the ONLY change is where the index
-    * lives. Coarse centroids ride [[centroidRelation]] (argmax via one
-    * broadcast join + map-side-partial aggregate per assignment),
-    * codebooks ride [[codebookRelation]] (encode = broadcast hash join
-    * on `sub` + per-(vec, sub) argmax; distance tables = the same join
-    * on the query side), and the scoring join / sub-ordered fold /
-    * rounded argmax are unchanged. Nothing index-sized appears as an
-    * expression; every index term is a broadcast relation joined on
-    * (cell) or (sub, code).
+  /** Train an IVF-PQ index of `kind` ([[IndexStore.KindPq]] or
+    * [[IndexStore.KindPqResidual]]) over `vectors` (vec_id, embedding):
+    * returns (centroid relation, codebook relation, subspace width w).
+    * Plain PQ trains the coarse cells and the codebooks as the books of
+    * one [[lloydBooks]] call ([[ivfPqBooks]]); residual codebooks train
+    * on the offsets x − c(x) from the FINAL cells, so that kind takes
+    * two calls. The one trainer behind [[ivfPqTopK]],
+    * [[ivfPqResidualTopK]] and [[IndexStore]]'s build.
     */
-  private def ivfPqTopKRelationPath(vectors: DataFrame, queries: DataFrame,
-      k: Int, numCells: Int, cellIters: Int, probes: Int,
-      numSub: Int, codebookK: Int, pqIters: Int): DataFrame = {
+  private[graft] def ivfPqTrain(vectors: DataFrame, kind: String,
+      numCells: Int, cellIters: Int, numSub: Int, codebookK: Int,
+      pqIters: Int): (DataFrame, DataFrame, Int) = {
     val spark = vectors.sparkSession
-    val (coarse, w, books) = ivfPqBooks(vectors, numCells, cellIters,
-      numSub, codebookK, pqIters)
-    val centRel = centroidRelation(spark, coarse)
-    val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val memberCells = assignCellsRelationAuto(v, centRel, probes = 1, numCells)
-      .select(col("vec_id"), col("cell"))
-    val qv = queries.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val probeCells = assignCellsRelation(qv, centRel, probes)
-      .select(col("vec_id").as("qid"), col("cell"))
-    val bookRel = codebookRelation(spark, w, books)
-    val codes = encodeViaRelation(subSliced(v, numSub, w), bookRel)
-      .join(memberCells, "vec_id")
-    ivfPqServe(codes, centRel, bookRel, queries, k, probes, numSub, w,
-      precomputedProbes = Some(probeCells))
+    if (kind == IndexStore.KindPq) {
+      val (coarse, w, books) = ivfPqBooks(vectors, numCells, cellIters,
+        numSub, codebookK, pqIters)
+      (centroidRelation(spark, coarse), codebookRelation(spark, w, books), w)
+    } else {
+      val centRel = centroidRelation(spark,
+        kmeansCentroidSeq(vectors, numCells, cellIters))
+      val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val (w, books) = pqCodebooks(
+        residuals(memberCells(v, centRel, numCells), centRel)
+          .select(col("vec_id"), col("v").as("embedding")),
+        numSub, codebookK, pqIters)
+      (centRel, codebookRelation(spark, w, books), w)
+    }
   }
 
-  /** The pure ADC SERVING stage of the relation-path IVF-PQ search —
-    * the query-time half with training and corpus encoding amortized
-    * away. Everything corpus-sized arrives ALREADY ENCODED: `codes` is
-    * the (vec_id, cell, sub, code) int stream, `centRel`/`bookRel` are
-    * [[centroidRelation]]/[[codebookRelation]]-schema frames — in
-    * production all three are simply READ from the index store's
-    * parquet ([[IndexStore]]), so a query batch costs one probe
-    * assignment over the QUERIES, one broadcast of the query-sized
-    * distance tables, and one scan of the probed code stream; the
-    * index is never retrained and the d-dim corpus vectors are never
-    * touched. Arithmetic, fold order, rounding and tie-breaks are
-    * [[ivfPqTopK]]'s verbatim (the store round-trip spec pins
-    * serve-from-parquet ≡ in-memory relation path bit-for-bit).
+  /** THE IVF-PQ encode: the (vec_id, sub, code, cell) code stream of a
+    * (vec_id, embedding) batch against a trained index — each vector's
+    * member cell (probes = 1, [[assignCellsRelationAuto]]'s shape by
+    * `numCells`), then the per-subspace [[encodeViaRelation]] of x
+    * itself (kind pq) or of the residual x − c(x) (kind pq_residual).
+    * [[ivfPqTopK]], [[ivfPqResidualTopK]] and [[IndexStore]]'s build,
+    * append and refresh all encode through it, so the in-memory search
+    * and the persisted store carry the same codes.
+    */
+  private[graft] def ivfPqEncode(vectors: DataFrame, centRel: DataFrame,
+      bookRel: DataFrame, kind: String, numCells: Int, numSub: Int,
+      w: Int): DataFrame = {
+    val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val asn = memberCells(v, centRel, numCells)
+    val toEncode = if (kind == IndexStore.KindPq) v else residuals(asn, centRel)
+    encodeViaRelation(subSliced(toEncode, numSub, w), bookRel)
+      .join(asn.select(col("vec_id"), col("cell")), "vec_id")
+  }
+
+  /** (vec_id, v, cell): each vector's nearest cell. */
+  private def memberCells(v: DataFrame, centRel: DataFrame,
+      numCells: Int): DataFrame =
+    assignCellsRelationAuto(v, centRel, probes = 1, numCells)
+      .select(col("vec_id"), col("v"), col("cell"))
+
+  /** (vec_id, v = x − c(cell)) over [[memberCells]] rows: one broadcast
+    * join on cell, exact elementwise IEEE subtraction. */
+  private def residuals(asn: DataFrame, centRel: DataFrame): DataFrame =
+    asn.join(broadcast(centRel.select(col("cid").as("cell"), col("cv"))),
+        "cell")
+      .select(col("vec_id"),
+        zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
+
+  /** The ADC SERVING stage of the IVF-PQ search — the query-time half
+    * with training and corpus encoding amortized away. Everything
+    * corpus-sized arrives ALREADY ENCODED: `codes` is the
+    * (vec_id, cell, sub, code) int stream ([[ivfPqEncode]]),
+    * `centRel`/`bookRel` are [[centroidRelation]]/[[codebookRelation]]
+    * -schema frames — in production all three are simply READ from the
+    * index store's parquet ([[IndexStore]]), so a query batch costs one
+    * probe assignment over the QUERIES ([[assignCellsRelation]]), one
+    * broadcast of the query-sized distance tables, and one scan of the
+    * probed code stream; the index is never retrained and the d-dim
+    * corpus vectors are never touched. [[ivfPqTopK]] is train + encode
+    * + this, so a store round-trip serves its result bit-for-bit
+    * (spec-pinned).
+    *
+    * The per-(query, vector) sum folds in SUB order (collect_list →
+    * array_sort → sequential aggregate, the L38-L40 discipline) so the
+    * oracle replays each double exactly; ranking compares the ROUNDED
+    * cosine (the q62 lesson: a raw-double argmax amplifies ulp drift
+    * into a different neighbor) with nid breaking ties.
     *
     * `allowed` is the METADATA FILTER of filtered ANN search: an
     * optional (vec_id)-keyed allow-list semi-joined onto the code
@@ -2038,14 +1852,11 @@ object Similarity {
     */
   def ivfPqServe(codes: DataFrame, centRel: DataFrame, bookRel: DataFrame,
       queries: DataFrame, k: Int, probes: Int, numSub: Int, w: Int,
-      allowed: Option[DataFrame] = None,
-      precomputedProbes: Option[DataFrame] = None): DataFrame = {
+      allowed: Option[DataFrame] = None): DataFrame = {
     require(k > 0 && probes > 0, s"bad serve config: k=$k probes=$probes")
-    val probeCells = precomputedProbes.getOrElse {
-      val qv = queries.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      assignCellsRelation(qv, centRel, probes)
-        .select(col("vec_id").as("qid"), col("cell"))
-    }
+    val qv = queries.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val probeCells = assignCellsRelation(qv, centRel, probes)
+      .select(col("vec_id").as("qid"), col("cell"))
     val served = allowed match {
       case Some(a) =>
         codes.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi")
@@ -2056,7 +1867,7 @@ object Similarity {
       .withColumn("qnrm", l2norm(col("qv")))
     // distance tables: the same sub-sliced broadcast join, one row per
     // (query, sub, code) with pd = q_sub·c and cn2 the codeword's
-    // stored fold — the literal tableEntries' exact arithmetic
+    // stored fold
     val qSub = subSliced(
       q.select(col("qid").as("vec_id"), col("qv").as("v")), numSub, w)
     val tables = qSub
@@ -2089,200 +1900,54 @@ object Similarity {
   }
 
   /** IVF-PQ with RESIDUAL encoding — the production refinement
-    * [[ivfPqTopK]]'s scaladoc names (Jégou et al. 2011 §V.A: encode
-    * r = x − c(x), the vector's offset from its coarse centroid,
-    * instead of x itself; residuals concentrate near the origin, so
-    * the same codebook budget spends its resolution on the part of the
-    * vector the coarse quantizer didn't already explain).
+    * (Jégou et al. 2011 §V.A: encode r = x − c(x), the vector's offset
+    * from its coarse centroid, instead of x itself; residuals
+    * concentrate near the origin, so the same codebook budget spends
+    * its resolution on the part of the vector the coarse quantizer
+    * didn't already explain).
     *
-    * Plan shape is [[ivfPqTopK]]'s with the codebooks trained and
-    * applied on residuals, and the ADC algebra extended for the
+    * The chain is [[ivfPqTopK]]'s with kind pq_residual — the one
+    * [[IndexStore.buildIvfPqResidual]] persists: [[ivfPqTrain]] (the
+    * cells, then codebooks trained on the residuals of the final
+    * cells), [[ivfPqEncode]] (residual codes) and
+    * [[ivfPqResidualServe]], which extends the ADC algebra for the
     * reconstruction x̂ = c + r̂:
     *
     *   q·x̂   = q·c  + Σ_sub q_sub·r̂_sub
     *   ‖x̂‖² = ‖c‖² + Σ_sub (2·c_sub·r̂_sub + ‖r̂_sub‖²)
     *
-    * Every new term is a LITERAL: c_sub·r̂_sub and ‖r̂_sub‖² fold on
-    * the driver over the 6-dp-rounded centroid/codeword seqs
-    * (numCells·numSub·codebookK + numSub·codebookK doubles — index-
-    * sized, corpus-independent), ‖c‖² per coarse cell, and q·c is one
-    * dot against the probed cell's literal centroid on the broadcast
-    * query side. The corpus side still carries (vec_id, cell, sub,
-    * code) ints only; the scoring join and fold/rounded-argmax
-    * discipline are ivfPqTopK's verbatim. Residual computation itself
-    * is a map-side `zip_with` against `element_at` of the literal
-    * centroid map — no join, no shuffle, exact IEEE subtraction both
-    * engines.
-    *
-    * `indexAsRelation = true` moves EVERY index term — centroids,
-    * residual codebooks, and all three ADC constant maps (cr, rn2,
-    * cn2) — into broadcast relations joined on (cell)/(sub, code)/
-    * (cell, sub, code); the cr terms are even COMPUTED distributively
-    * (centroid relation × codebook relation, one codegen'd dot each)
-    * instead of folded on the driver. Identical output
-    * (spec-enforced); the form a numCells·numSub·codebookK-entry
-    * constant table requires at production index sizes.
+    * Every index term, the cr/rn2/cn2 constants included, is a
+    * broadcast relation joined on (cell)/(sub, code)/(cell, sub, code);
+    * the corpus side still carries (vec_id, cell, sub, code) ints only.
     */
   def ivfPqResidualTopK(vectors: DataFrame, queries: DataFrame, k: Int,
       numCells: Int, cellIters: Int, probes: Int,
-      numSub: Int, codebookK: Int, pqIters: Int,
-      indexAsRelation: Boolean = false): DataFrame = {
-    require(k > 0 && probes > 0, s"bad search config: k=$k probes=$probes")
-    if (indexAsRelation)
-      return ivfPqResidualTopKRelationPath(vectors, queries, k, numCells,
-        cellIters, probes, numSub, codebookK, pqIters)
-    val coarse = kmeansCentroidSeq(vectors, numCells, cellIters)
-    val centMap = typedLit(coarse.toMap)
-    val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val asn = assignCells(v, coarse, probes = 1)
-      .select(col("vec_id"), col("v"), col("cell"))
-    // residuals r = v − c(cell): elementwise against the literal
-    // centroid map, evaluated inside the scan
-    val resid = asn.select(col("vec_id"), col("cell"),
-      zip_with(col("v"), element_at(centMap, col("cell")),
-        (a, b) => a - b).as("r"))
-    // PQ codebooks trained on the residuals (cells carry through the
-    // encode so the scoring join stays (cell, sub, code)-keyed)
-    val (w, books) = pqCodebooks(
-      resid.select(col("vec_id"), col("r").as("embedding")),
-      numSub, codebookK, pqIters)
-    val memberCells = asn.select(col("vec_id"), col("cell"))
-    val codes = encodeLiteral(
-      resid.select(col("vec_id"), col("r").as("v")), w, books)
-      .join(memberCells, "vec_id")
-    val qv0 = queries.select(col("vec_id").as("qid"),
-      asDouble(col("embedding")).as("qv"))
-      .withColumn("qnrm", l2norm(col("qv")))
-    val probeCells = assignCells(
-      queries.select(col("vec_id"), asDouble(col("embedding")).as("v")),
-      coarse, probes = probes)
-      .select(col("vec_id").as("qid"), col("cell"))
-    // driver-side literal constants over the trained index:
-    //   cr(cell, sub, code) = c_sub · r̂   (left-fold, 6-dp inputs)
-    //   rn2(sub, code)      = ‖r̂‖²        (left-fold)
-    //   cn2(cell)           = ‖c‖²        (left-fold)
-    val crMap = typedLit((for {
-      (cid, cv) <- coarse
-      (sub, cent) <- books
-      (code, rv) <- cent
-    } yield {
-      val cslice = cv.slice(sub * w, sub * w + w)
-      s"$cid:$sub:$code" ->
-        cslice.zip(rv).foldLeft(0.0)((a, p) => a + p._1 * p._2)
-    }).toMap)
-    val rn2Map = typedLit((for {
-      (sub, cent) <- books
-      (code, rv) <- cent
-    } yield s"$sub:$code" -> rv.foldLeft(0.0)((a, x) => a + x * x)).toMap)
-    val cn2Map = typedLit(coarse.map { case (cid, cv) =>
-      cid -> cv.foldLeft(0.0)((a, x) => a + x * x)
-    }.toMap)
-    // per-query (sub, code) partial dots q_sub·r̂ — cell-independent
-    val tableEntries = books.flatMap { case (sub, cent) =>
-      cent.map { case (code, rv) =>
-        struct(lit(sub).as("sub"), lit(code).as("code"),
-          dot_product(slice(col("qv"), lit(sub * w + 1), lit(w)),
-            typedLit(rv)).as("qpd"))
-      }
-    }
-    val tables = qv0
-      .select(col("qid"), col("qnrm"), col("qv"),
-        explode(array(tableEntries: _*)).as("e"))
-      .select(col("qid"), col("qnrm"), col("qv"), col("e.sub").as("sub"),
-        col("e.code").as("code"), col("e.qpd").as("qpd"))
-      .join(probeCells, "qid")
-      .select(col("qid"), col("qnrm"), col("cell"), col("sub"), col("code"),
-        // pd = (q − c)_sub · r̂ = q_sub·r̂ − c_sub·r̂
-        (col("qpd") - element_at(crMap,
-          concat_ws(":", col("cell"), col("sub"), col("code")))).as("pd"),
-        // rc2 = 2·c_sub·r̂ + ‖r̂_sub‖², the per-sub ‖x̂‖² increment
-        (lit(2.0) * element_at(crMap,
-          concat_ws(":", col("cell"), col("sub"), col("code"))) +
-          element_at(rn2Map, concat_ws(":", col("sub"), col("code"))))
-          .as("rc2"),
-        dot_product(col("qv"), element_at(centMap, col("cell"))).as("qc"),
-        element_at(cn2Map, col("cell")).as("cn2"))
-    val scored = codes.join(broadcast(tables), Seq("cell", "sub", "code"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(min(col("qnrm")).as("qnrm"),
-        min(col("qc")).as("qc"), min(col("cn2")).as("cn2"),
-        aggregate(transform(
-          array_sort(collect_list(struct(col("sub"), col("pd")))),
-          s => s.getField("pd")), lit(0.0), (a, x) => a + x).as("rdot"),
-        aggregate(transform(
-          array_sort(collect_list(struct(col("sub"), col("rc2")))),
-          s => s.getField("rc2")), lit(0.0), (a, x) => a + x).as("rrec"))
-      .withColumn("adot", col("qc") + col("rdot"))
-      .withColumn("rec2", col("cn2") + col("rrec"))
-      .withColumn("cos_adc",
-        when(col("qnrm") > 0 && col("rec2") > 0,
-          round(col("adot") / (col("qnrm") * sqrt(col("rec2"))), 6))
-          .otherwise(lit(0.0)))
-    val win = Window.partitionBy(col("qid"))
-      .orderBy(col("cos_adc").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("vec_id").as("nid"), col("cos_adc"), col("rank"))
-      .orderBy(col("qid"), col("rank"))
-  }
-
-  /** [[ivfPqResidualTopK]]'s index-as-relation path. Same algebra
-    * (q·x̂ = q·c + Σ q_sub·r̂ − c_sub·r̂; ‖x̂‖² = ‖c‖² + Σ 2·c_sub·r̂ +
-    * ‖r̂‖²), but the crMap/rn2Map/cn2Map literals become relations:
-    * rn2/cn2 are the stored folds of [[codebookRelation]]/
-    * [[centroidRelation]], and cr(cell, sub, code) = c_sub·r̂ is
-    * DERIVED by a distributed cross of the two small relations — the
-    * codegen'd dot over the centroid slice runs the identical
-    * left-to-right accumulation the driver fold ran, so the constants
-    * are bit-equal (spec-enforced). Residuals come from one broadcast
-    * join on `cell` instead of `element_at` of a literal map; the
-    * scoring join and fold/argmax discipline are unchanged.
-    */
-  private def ivfPqResidualTopKRelationPath(vectors: DataFrame,
-      queries: DataFrame, k: Int, numCells: Int, cellIters: Int, probes: Int,
       numSub: Int, codebookK: Int, pqIters: Int): DataFrame = {
-    val spark = vectors.sparkSession
-    val coarse = kmeansCentroidSeq(vectors, numCells, cellIters)
-    val centRel = centroidRelation(spark, coarse)
-    val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val asn = assignCellsRelationAuto(v, centRel, probes = 1, numCells)
-      .select(col("vec_id"), col("v"), col("cell"))
-    // residuals r = v − c(cell): one broadcast join on cell, the same
-    // elementwise IEEE subtraction as the literal map lookup
-    val resid = asn
-      .join(broadcast(centRel.select(col("cid").as("cell"), col("cv"))), "cell")
-      .select(col("vec_id"), col("cell"),
-        zip_with(col("v"), col("cv"), (a, b) => a - b).as("r"))
-    val (w, books) = pqCodebooks(
-      resid.select(col("vec_id"), col("r").as("embedding")),
-      numSub, codebookK, pqIters)
-    val bookRel = codebookRelation(spark, w, books)
-    val memberCells = asn.select(col("vec_id"), col("cell"))
-    val codes = encodeViaRelation(
-      subSliced(resid.select(col("vec_id"), col("r").as("v")), numSub, w),
-      bookRel)
-      .join(memberCells, "vec_id")
-    ivfPqResidualServe(codes, centRel, bookRel, queries, k, probes,
-      numSub, w)
+    require(k > 0 && probes > 0, s"bad search config: k=$k probes=$probes")
+    val (centRel, bookRel, w) = ivfPqTrain(vectors, IndexStore.KindPqResidual,
+      numCells, cellIters, numSub, codebookK, pqIters)
+    ivfPqResidualServe(ivfPqEncode(vectors, centRel, bookRel,
+      IndexStore.KindPqResidual, numCells, numSub, w),
+      centRel, bookRel, queries, k, probes, numSub, w)
   }
 
-  /** The pure ADC serving stage of the RESIDUAL relation path — the
-    * residual twin of [[ivfPqServe]], with the same contract: every
-    * corpus-sized input arrives already encoded (`codes` =
-    * (vec_id, sub, code, cell) ints over residuals r = x − c(x)),
-    * `centRel`/`bookRel` are [[centroidRelation]]/[[codebookRelation]]
-    * frames (the codebooks trained on residuals), and in production
-    * all three are READ from the index store's parquet. The cr/rn2/cn2
-    * correction relation is derived distributively per query batch
-    * (centroid relation × codebook relation — index-sized, both
-    * broadcastable), so serving costs one probe assignment over the
-    * QUERIES, one broadcast of the query-sized tables, and one scan of
-    * the probed code stream; the reconstruction algebra
-    * q·x̂ = q·c + Σ q_sub·r̂ and ‖x̂‖² = ‖c‖² + Σ(2c·r̂ + ‖r̂‖²),
-    * fold order, rounding and tie-breaks are
-    * [[ivfPqResidualTopK]]'s verbatim (the store round-trip spec pins
-    * serve-from-parquet ≡ in-memory relation path bit-for-bit).
+  /** The ADC serving stage of the RESIDUAL search — the residual twin
+    * of [[ivfPqServe]], with the same contract: every corpus-sized
+    * input arrives already encoded (`codes` = (vec_id, sub, code,
+    * cell) ints over residuals r = x − c(x)), `centRel`/`bookRel` are
+    * [[centroidRelation]]/[[codebookRelation]] frames (the codebooks
+    * trained on residuals), and in production all three are READ from
+    * the index store's parquet. The cr/rn2/cn2 correction relation is
+    * derived distributively per query batch (centroid relation ×
+    * codebook relation — index-sized, both broadcastable): rn2/cn2 are
+    * the stored folds, and cr(cell, sub, code) = c_sub·r̂ is one
+    * codegen'd dot over the centroid slice, the same left-to-right
+    * accumulation a driver fold runs. Serving costs one probe
+    * assignment over the QUERIES, one broadcast of the query-sized
+    * tables, and one scan of the probed code stream; fold order,
+    * rounding and tie-breaks are [[ivfPqServe]]'s (the store
+    * round-trip spec pins serve-from-parquet ≡ [[ivfPqResidualTopK]]
+    * bit-for-bit).
     *
     * `allowed` is the same filtered-ANN pre-scoring allow-list as
     * [[ivfPqServe]]'s: semi-joined onto the code stream BEFORE the
@@ -2290,8 +1955,7 @@ object Similarity {
     */
   def ivfPqResidualServe(codes: DataFrame, centRel: DataFrame,
       bookRel: DataFrame, queries: DataFrame, k: Int, probes: Int,
-      numSub: Int, w: Int, allowed: Option[DataFrame] = None,
-      precomputedProbes: Option[DataFrame] = None): DataFrame = {
+      numSub: Int, w: Int, allowed: Option[DataFrame] = None): DataFrame = {
     require(k > 0 && probes > 0, s"bad serve config: k=$k probes=$probes")
     val served = allowed match {
       case Some(a) =>
@@ -2301,12 +1965,10 @@ object Similarity {
     val qv0 = queries.select(col("vec_id").as("qid"),
       asDouble(col("embedding")).as("qv"))
       .withColumn("qnrm", l2norm(col("qv")))
-    val probeCells = precomputedProbes.getOrElse {
-      assignCellsRelation(
+    val probeCells = assignCellsRelation(
         queries.select(col("vec_id"), asDouble(col("embedding")).as("v")),
         centRel, probes)
-        .select(col("vec_id").as("qid"), col("cell"))
-    }
+      .select(col("vec_id").as("qid"), col("cell"))
     // cr(cell, sub, code) = c_sub·r̂ — computed WHERE the data is:
     // centroid relation × codebook relation (index-sized output, both
     // inputs broadcastable), one codegen'd dot per row

@@ -119,9 +119,10 @@ class DriverBoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
     ("q181_ivf_drift", 4096L, "k centroids × (Lloyd iters + 1 refresh)"),
     ("q183_knn_pagerank", 4096L, "k centroids × Lloyd iterations"),
     ("q184_bpe_fertility", 64L, "1-row argmax per merge"),
-    // relation-path twins: index TRAINING still folds k×d centroids on
-    // the driver (the documented kmeansCentroidSeq bound); the SEARCH
-    // plan itself adds no collect (index rides broadcast relations)
+    // q121/q171's calls under their second ids: index TRAINING folds
+    // k×d centroids on the driver (the documented kmeansCentroidSeq
+    // bound); the SEARCH plan itself adds no collect (index rides
+    // broadcast relations)
     ("q187_ivfpq_relation", 4096L, "centroids + sub-codebooks"),
     ("q188_residual_relation", 4096L, "centroids + residual sub-codebooks"),
     // auto-geometry: cells = autoCells(N) ≤ 65536 but the per-iteration
@@ -130,11 +131,10 @@ class DriverBoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
     ("q191_knn_pagerank_auto", 4096L, "autoCells(N) centroids × Lloyd iterations"),
     ("q192_knn_pagerank_sampled", 4096L, "autoCells(N) centroids × Lloyd iterations"),
     // store lifecycle: BUILD folds k×d centroids (the documented Lloyd
-    // bound) + one meta row; the DEFAULT serve's only driver action is
-    // the 1-row meta head — the code-stream scan is restricted by
-    // Catalyst's dynamic partition pruning INSIDE the execution (the
-    // opt-in prune=true path folds ≤ probes × |queries| cell ids,
-    // capped at IndexStore.MaxPrunedCells = the same 4096)
+    // bound) + one meta row; the serve's only driver action is the
+    // 1-row meta head — the code-stream scan is restricted by
+    // Catalyst's dynamic partition pruning INSIDE the execution, with
+    // no driver fold of the probed cells
     ("q193_store_serve", 4096L, "build-time Lloyd folds + 1-row meta"),
     ("q194_filtered_ann", 4096L, "build-time Lloyd folds + 1-row meta"),
     ("q197_store_serve_residual", 4096L,

@@ -312,16 +312,36 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      // q86/q88: the projection matrix / codebooks are driver-side
-      // LITERALS — the distributed plan must contain NO join at all
-      // (assignment and projection happen inside the scan)
-      for (q <- Seq("q86_random_projection", "q88_pq_codes")) {
-        val p = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
-        val joins = p.toString.linesIterator
-          .filter(l => l.contains("Join") || l.contains("CartesianProduct"))
-          .toSeq
-        assert(joins.isEmpty, s"$q plans a join: ${joins.mkString("; ")}")
-      }
+      // q86: the projection matrix is a driver-side LITERAL — the
+      // distributed plan must contain NO join at all (projection happens
+      // inside the scan)
+      val p86 = SparkEntry.queries("q86_random_projection")(spark, sf)
+        .queryExecution.executedPlan
+      val joins86 = p86.toString.linesIterator
+        .filter(l => l.contains("Join") || l.contains("CartesianProduct"))
+        .toSeq
+      assert(joins86.isEmpty, s"q86 plans a join: ${joins86.mkString("; ")}")
+      // q88: the codebooks ride a broadcast RELATION — every join is a
+      // broadcast hash join whose build side is that local relation,
+      // never a corpus scan, and no shuffle carries the vector or its
+      // slices (only ids, codes and cosines are exchanged)
+      import org.apache.spark.sql.catalyst.optimizer.BuildRight
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+      val p88 = SparkEntry.queries("q88_pq_codes")(spark, sf)
+        .queryExecution.executedPlan
+      val joins88 = p88.collect { case j: BaseJoinExec => j }
+      assert(joins88.nonEmpty && joins88.forall {
+        case b: BroadcastHashJoinExec =>
+          val built = if (b.buildSide == BuildRight) b.right else b.left
+          built.collect { case f: FileSourceScanExec => f }.isEmpty
+        case _ => false
+      }, s"q88 joins more than the broadcast codebooks: ${joins88.mkString("; ")}")
+      val arrays88 = for {
+        e <- p88.collect { case e: ShuffleExchangeExec => e }
+        a <- e.output if a.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]
+      } yield a.name
+      assert(arrays88.isEmpty, s"q88: vectors ride an exchange: ${arrays88.mkString(", ")}")
       // q93: tokens hash to (dim, sign) INSIDE the scan — no character
       // data may ride any exchange (the q71-strength claim)
       import org.apache.spark.sql.types._

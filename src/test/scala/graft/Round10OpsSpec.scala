@@ -477,16 +477,14 @@ class Round10OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       numSub = 4, codebookK = 8, pqIters = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pruned.nonEmpty)
+    // cells from the independent driver replay of the assignment
     val coarse = Similarity.kmeansCentroidSeq(e, 8, 2)
-    val vv = e.select(col("vec_id"),
-      org.apache.spark.sql.functions.transform(col("embedding"),
-        _.cast("double")).as("v"))
-    val memberCell = Similarity.assignCells(vv, coarse, probes = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val probedCells = Similarity.assignCells(
-        vv.filter(col("vec_id") < 3), coarse, probes = 2)
-      .collect().groupBy(_.getLong(0))
-      .map { case (qid, rs) => qid -> rs.map(_.getLong(2)).toSet }
+    val data = LloydReplay.corpus(e)
+    val memberCell = LloydReplay.assign(data, coarse, probes = 1)
+      .map(a => a._1 -> a._3).toMap
+    val probedCells = LloydReplay.assign(data.filter(_._1 < 3), coarse,
+        probes = 2)
+      .groupBy(_._1).map { case (qid, as) => qid -> as.map(_._3).toSet }
     pruned.foreach { case (qid, nid) =>
       assert(probedCells(qid).contains(memberCell(nid)),
         s"neighbor $nid of query $qid lies outside the probed cells")

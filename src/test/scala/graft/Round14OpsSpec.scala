@@ -7,12 +7,12 @@ import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.Similarity
 
-/** Round-14 specs: the index-as-relation search path must be
-  * output-IDENTICAL to the plan-literal path (the q94↔q105
-  * swap-equality discipline) — same cosine arithmetic, same zero-norm
-  * pins, same tie orders — at more than one index geometry, so the
-  * literal→relation swap is a pure plan-shape decision a deployment
-  * makes on index size, never a semantics change.
+/** Round-14 specs: the index-as-relation search path. Its training
+  * and cell assignment must equal an independent driver-side replay
+  * ([[LloydReplay]]) — same cosine arithmetic, same zero-norm pins,
+  * same tie orders — at more than one index geometry, and no search
+  * plan may grow with the index: the index rides broadcast relations,
+  * never plan expressions.
   */
 class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -44,21 +44,34 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("assignCellsRelation equals assignCells (probes 1 and 3)") {
+  test("assignCellsRelation and assignCellsRelationArr equal the driver replay (7 and 40 cells, probes 1 and 3)") {
     val e = embeddings
+    // one zero-norm vector and one zero-norm centroid exercise the pins:
+    // the vector ties at 0.0 on every cell (lowest cid wins) and the
+    // centroid scores 0.0 against every vector
+    val d = LloydReplay.corpus(e).head._2.length
+    val zero = Seq.fill(d)(0.0)
+    val s0 = spark; import s0.implicits._
     val v = e.select(col("vec_id"),
-      Similarity.asDouble(col("embedding")).as("v"))
-    val cent = Similarity.kmeansCentroidSeq(e, numCells = 7, iters = 2)
-    val centRel = Similarity.centroidRelation(spark, cent)
-    for (probes <- Seq(1, 3)) {
-      val lit0 = Similarity.assignCells(v, cent, probes)
-        .orderBy(col("vec_id"), col("probe"))
-      val rel = Similarity.assignCellsRelation(v, centRel, probes)
-        .orderBy(col("vec_id"), col("probe"))
-      assert(lit0.columns.toSeq == rel.columns.toSeq,
-        s"probes=$probes schema: ${rel.columns.toSeq}")
-      assert(rows(lit0) == rows(rel),
-        s"probes=$probes: literal and relation assignment diverge")
+        Similarity.asDouble(col("embedding")).as("v"))
+      .unionByName(Seq((1000000L, zero)).toDF("vec_id", "v"))
+    val data = LloydReplay.corpus(e) :+ (1000000L -> zero.toArray)
+    def got(df: DataFrame) = df.orderBy(col("vec_id"), col("probe"))
+      .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1),
+        r.getLong(2), r.getDouble(3), r.getInt(4)))
+    for (nc <- Seq(7, 40)) {
+      val cent = Similarity.kmeansCentroidSeq(e, numCells = nc, iters = 2) :+
+        (1000L -> zero)
+      val centRel = Similarity.centroidRelation(spark, cent)
+      for (probes <- Seq(1, 3)) {
+        val want = LloydReplay.assign(data, cent, probes)
+        val join = Similarity.assignCellsRelation(v, centRel, probes)
+        assert(join.columns.toSeq == Seq("vec_id", "v", "cell", "sim", "probe"))
+        assert(got(join) == want,
+          s"assignCellsRelation ≠ replay at $nc cells, probes=$probes")
+        assert(got(Similarity.assignCellsRelationArr(v, centRel, probes)) == want,
+          s"assignCellsRelationArr ≠ replay at $nc cells, probes=$probes")
+      }
     }
   }
 
@@ -68,44 +81,7 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Similarity.asDouble(col("embedding")).as("v"))
     val empty = Similarity.centroidRelation(spark, Nil)
     assert(Similarity.assignCellsRelation(v, empty, 1).count() == 0L)
-    intercept[IllegalArgumentException] {
-      Similarity.assignCells(v, Nil, 1)
-    }
-  }
-
-  test("ivfPqTopK: indexAsRelation output identical at two configs") {
-    val e = embeddings
-    val q = e.filter(col("vec_id") < 3)
-    val configs = Seq(
-      // the q121 geometry and a deliberately different one (odd cell
-      // count, wider PQ, deeper probes) so the equality isn't an
-      // artifact of one shape
-      (8, 2, 2, 4, 8, 2, 5),
-      (5, 1, 3, 8, 4, 1, 4))
-    for ((nc, ci, pr, ns, ck, pi, k) <- configs) {
-      val lit0 = Similarity.ivfPqTopK(e, q, k, nc, ci, pr, ns, ck, pi)
-      val rel = Similarity.ivfPqTopK(e, q, k, nc, ci, pr, ns, ck, pi,
-        indexAsRelation = true)
-      assert(lit0.columns.toSeq == rel.columns.toSeq)
-      assert(rows(lit0) == rows(rel),
-        s"ivfPqTopK literal≠relation at ($nc,$ci,$pr,$ns,$ck,$pi,$k)")
-    }
-  }
-
-  test("ivfPqResidualTopK: indexAsRelation output identical at two configs") {
-    val e = embeddings
-    val q = e.filter(col("vec_id") < 3)
-    val configs = Seq(
-      (8, 2, 2, 4, 8, 2, 5),
-      (5, 1, 3, 8, 4, 1, 4))
-    for ((nc, ci, pr, ns, ck, pi, k) <- configs) {
-      val lit0 = Similarity.ivfPqResidualTopK(e, q, k, nc, ci, pr, ns, ck, pi)
-      val rel = Similarity.ivfPqResidualTopK(e, q, k, nc, ci, pr, ns, ck, pi,
-        indexAsRelation = true)
-      assert(lit0.columns.toSeq == rel.columns.toSeq)
-      assert(rows(lit0) == rows(rel),
-        s"ivfPqResidualTopK literal≠relation at ($nc,$ci,$pr,$ns,$ck,$pi,$k)")
-    }
+    assert(Similarity.assignCellsRelationArr(v, empty, 1).count() == 0L)
   }
 
   test("ivfIndexMaintain: decision thresholds, rebuild = full retrain, persistence round-trip") {
@@ -138,7 +114,8 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Similarity.asDouble(col("embedding")).as("v"))
     val viaDisk = Similarity.assignCellsRelation(v, reloaded, 1)
       .orderBy(col("vec_id")).collect().toSeq.map(_.toSeq)
-    val viaMem = Similarity.assignCells(v, refreshed, 1)
+    val viaMem = Similarity.assignCellsRelation(v,
+        Similarity.centroidRelation(spark, refreshed), 1)
       .orderBy(col("vec_id")).collect().toSeq.map(_.toSeq)
     assert(viaDisk == viaMem, "persisted index diverges from trained index")
   }
@@ -154,17 +131,16 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Similarity.autoCells(Long.MaxValue) == 65536) // cap
   }
 
-  test("ivfKnnGraph: salt and viaRelation are output-identical") {
+  test("ivfKnnGraph: salt is output-identical") {
     val e = embeddings
     val base = Similarity.ivfKnnGraph(e, k = 3, numCells = 8,
       iters = 2, probes = 2).orderBy(col("qid"), col("rank"))
-    for ((vr, s) <- Seq((false, 4), (true, 1), (true, 3))) {
+    for (s <- Seq(4, 3)) {
       val got = Similarity.ivfKnnGraph(e, k = 3, numCells = 8,
-        iters = 2, probes = 2, viaRelation = vr, salt = s)
+        iters = 2, probes = 2, salt = s)
         .orderBy(col("qid"), col("rank"))
       assert(got.columns.toSeq == base.columns.toSeq)
-      assert(rows(got) == rows(base),
-        s"ivfKnnGraph diverges at viaRelation=$vr salt=$s")
+      assert(rows(got) == rows(base), s"ivfKnnGraph diverges at salt=$s")
     }
   }
 
@@ -187,15 +163,14 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "seeds must come from the full corpus, not the sample")
   }
 
-  test("knnPageRank: salted relation path matches the literal path") {
+  test("knnPageRank: salt is output-identical") {
     val e = embeddings
     val base = Similarity.knnPageRank(e, k = 3, numCells = 8, iters = 2,
       probes = 2, prIters = 3, top = 20)
     val got = Similarity.knnPageRank(e, k = 3, numCells = 8, iters = 2,
-      probes = 2, prIters = 3, top = 20, viaRelation = true, salt = 4)
+      probes = 2, prIters = 3, top = 20, salt = 4)
     assert(got.columns.toSeq == base.columns.toSeq)
-    assert(rows(got) == rows(base),
-      "knnPageRank diverges under viaRelation + salt")
+    assert(rows(got) == rows(base), "knnPageRank diverges under salt")
   }
 
   test("CurationPipeline stageDir: staged output identical to one-lineage output") {
@@ -222,27 +197,47 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("relation search plan carries no index-sized literals") {
-    // The point of the swap: the literal plan embeds the index as
-    // expressions (k·d doubles in typedLit maps/arrays); the relation
-    // plan must not. Proxy check: the analyzed plan's string dump of
-    // the relation path contains no Lloyd centroid double (6-dp
-    // rounded mean) as an expression literal, and is dramatically
-    // smaller than the literal plan's.
+    // Every search op's analyzed plan has EXACTLY the same expression
+    // count at a small and a large index: the index rides broadcast
+    // relations (LocalRelation rows are data, not expressions), so
+    // nothing in the plan scales with cells or codewords. The
+    // assignment shape switches at DenseCellsThreshold (join + max_by
+    // below, codeword array at or above), so each shape is compared at
+    // two geometries of its own: 8 cells / 4×8 vs 16 cells / 4×32 and
+    // 32 cells / 4×8 vs 64 cells / 4×32. Zero Lloyd iterations: the
+    // seeds are the index, and training stays out of the plan either
+    // way.
     val e = embeddings
     val q = e.filter(col("vec_id") < 3)
-    val lit0 = Similarity.ivfPqResidualTopK(e, q, 5, 8, 2, 2, 4, 8, 2)
-    val rel = Similarity.ivfPqResidualTopK(e, q, 5, 8, 2, 2, 4, 8, 2,
-      indexAsRelation = true)
-    val litPlan = lit0.queryExecution.analyzed.toString
-    val relPlan = rel.queryExecution.analyzed.toString
-    // margin 2× (was 5×): the round-18 one-pass encode removed the
-    // union-of-numSub branches from the LITERAL plan, shrinking it ~4×
-    // — the relation plan must still be materially smaller, but the
-    // literal side no longer duplicates the whole index per subspace
-    assert(relPlan.length * 2 < litPlan.length,
-      s"relation plan (${relPlan.length} chars) is not materially " +
-        s"smaller than the literal plan (${litPlan.length} chars)")
-    assert(!relPlan.contains("keys:"),
-      "relation plan still carries a literal map (typedLit CreateMap)")
+    def exprCount(df: DataFrame): Int =
+      df.queryExecution.analyzed.collect { case p =>
+        p.expressions.map(_.collect { case x => x }.size).sum
+      }.sum
+    val ops: Seq[(String, (Int, Int) => DataFrame)] = Seq(
+      "ivfPqTopK" -> ((nc, ck) =>
+        Similarity.ivfPqTopK(e, q, 5, nc, 0, 2, 4, ck, 0)),
+      "ivfPqResidualTopK" -> ((nc, ck) =>
+        Similarity.ivfPqResidualTopK(e, q, 5, nc, 0, 2, 4, ck, 0)),
+      "pqAdcTopK" -> ((_, ck) => Similarity.pqAdcTopK(e, q, 5, 4, ck, 0)),
+      "pqCodes" -> ((_, ck) => Similarity.pqCodes(e, 4, ck, 0)),
+      "ivfKnnGraph" -> ((nc, _) =>
+        Similarity.ivfKnnGraph(e, k = 3, numCells = nc, iters = 0)),
+      "ivfTopKMultiprobe" -> ((nc, _) =>
+        Similarity.ivfTopKMultiprobe(e, q, 5, nc, 0, 2)),
+      "clusterSummary" -> ((nc, _) => Similarity.clusterSummary(e, nc, 0)),
+      "semanticDedup" -> ((nc, _) => Similarity.semanticDedup(e, 0.4, nc, 0)),
+      "clusterBalancedSample" -> ((nc, _) =>
+        Similarity.clusterBalancedSample(e, 40, nc, 0)))
+    assert(16 < Similarity.DenseCellsThreshold &&
+      Similarity.DenseCellsThreshold <= 32)
+    val grown = for {
+      (name, op) <- ops
+      ((nc0, ck0), (nc1, ck1)) <- Seq((8, 8) -> (16, 32), (32, 8) -> (64, 32))
+      small = exprCount(op(nc0, ck0))
+      large = exprCount(op(nc1, ck1))
+      if small != large
+    } yield s"$name: $small expressions at $nc0 cells / 4×$ck0, " +
+      s"$large at $nc1 / 4×$ck1"
+    assert(grown.isEmpty, grown.mkString("plans grow with the index:\n", "\n", ""))
   }
 }

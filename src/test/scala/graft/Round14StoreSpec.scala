@@ -50,7 +50,7 @@ class Round14StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       val served = IndexStore.serveIvfPq(spark, dir, q, k = 4, probes = 2)
       val mem = Similarity.ivfPqTopK(e, q, k = 4, numCells = nc,
         cellIters = 2, probes = 2, numSub = 4, codebookK = ck,
-        pqIters = 2, indexAsRelation = true)
+        pqIters = 2)
       assert(served.columns.toSeq == mem.columns.toSeq)
       assert(rows(served) == rows(mem),
         s"store round-trip diverges from in-memory path at ($nc, $ck)")

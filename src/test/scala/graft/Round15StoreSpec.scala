@@ -52,7 +52,7 @@ class Round15StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       val served = IndexStore.serveIvfPq(spark, dir, q, k = 5, probes = 2)
       val mem = Similarity.ivfPqResidualTopK(e, q, k = 5, numCells = nc,
         cellIters = 2, probes = 2, numSub = 4, codebookK = ck,
-        pqIters = 2, indexAsRelation = true)
+        pqIters = 2)
       assert(served.columns.toSeq == mem.columns.toSeq)
       assert(rows(served) == rows(mem),
         s"residual store round-trip diverges from in-memory at ($nc, $ck)")
@@ -383,56 +383,38 @@ class Round15StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       else IndexStore.buildIvfPq(e, dir, numCells = 8, cellIters = 2,
         numSub = 4, codebookK = 6, pqIters = 2)
       // semantics first: the scan restriction must be invisible in the
-      // results (the isin is a superset of the ADC join's cell keying)
-      val served = IndexStore.serveIvfPq(spark, dir, q, k = 4, probes = 2,
-        prune = true)
-      val full = IndexStore.serveIvfPq(spark, dir, q, k = 4, probes = 2,
-        prune = false)
-      assert(rows(served) == rows(full),
-        s"pruned serve diverges from the full-scan plan (resid=$resid)")
-      // plan shape: the code-stream scan carries a `cell` PARTITION
-      // filter (not a post-scan predicate) and reads strictly fewer
-      // files than the artifact holds (AQE off so the executed plan is
-      // final at inspection time — the repo's PlanSpec discipline)
+      // results — the in-memory search scores the FULL code stream
+      val full =
+        if (resid) Similarity.ivfPqResidualTopK(e, q, k = 4, numCells = 8,
+          cellIters = 2, probes = 2, numSub = 4, codebookK = 6, pqIters = 2)
+        else Similarity.ivfPqTopK(e, q, k = 4, numCells = 8, cellIters = 2,
+          probes = 2, numSub = 4, codebookK = 6, pqIters = 2)
+      assert(rows(IndexStore.serveIvfPq(spark, dir, q, k = 4, probes = 2))
+        == rows(full),
+        s"pruned serve diverges from the full-scan search (resid=$resid)")
+      // plan shape: the broadcast ADC join keys on the partition column,
+      // so Catalyst inserts a DYNAMIC partition-pruning filter on the
+      // code-stream scan — the probed cells' files only, one execution,
+      // zero extra jobs (AQE off so the executed plan is final at
+      // inspection time — the repo's PlanSpec discipline)
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {
-        val again = IndexStore.serveIvfPq(spark, dir, q, k = 4, probes = 2,
-          prune = true)
-        again.collect()
         val codesPath = IndexStore.artifactPaths(spark, dir)("codes")
-        val scans = again.queryExecution.executedPlan.collect {
+        val totalFiles = spark.read.parquet(codesPath).inputFiles.length.toLong
+        val dflt = IndexStore.serveIvfPq(spark, dir, q, k = 4, probes = 2)
+        dflt.collect()
+        val scans = dflt.queryExecution.executedPlan.collect {
           case f: FileSourceScanExec if f.relation.location.rootPaths
             .exists(_.toString.contains("codes-")) => f
         }
         assert(scans.nonEmpty, "no code-stream scan in the served plan")
-        val scan = scans.head
-        assert(scan.partitionFilters.exists(_.toString.contains("cell")),
-          s"no cell partition filter: ${scan.partitionFilters.mkString(", ")}")
-        val totalFiles = spark.read.parquet(codesPath).inputFiles.length.toLong
-        val scanned = scan.metrics("numFiles").value
-        assert(scanned > 0 && scanned < totalFiles,
-          s"scan read $scanned of $totalFiles code files — pruning is " +
-            s"not restricting the scan (resid=$resid)")
-        // the restriction is exactly the probed width: ≤ probes×|q|
-        // distinct cells, one file per (batch, cell) by layout
-        assert(scanned <= 2L * 3L,
-          s"scan read $scanned files > probes × |queries| (resid=$resid)")
-        // the DEFAULT path needs no driver fold at all: the broadcast
-        // ADC join keys on the partition column, so Catalyst inserts a
-        // DYNAMIC partition-pruning filter — same files read, one
-        // execution, zero extra jobs (ServeBench measured the static
-        // isin ~0.5 s slower for identical I/O)
-        val dflt = IndexStore.serveIvfPq(spark, dir, q, k = 4, probes = 2,
-          prune = false)
-        dflt.collect()
-        val dscan = dflt.queryExecution.executedPlan.collect {
-          case f: FileSourceScanExec if f.relation.location.rootPaths
-            .exists(_.toString.contains("codes-")) => f
-        }.head
+        val dscan = scans.head
         assert(dscan.partitionFilters
           .exists(_.toString.contains("dynamicpruning")),
           s"no dynamic partition filter on the default serve: " +
             s"${dscan.partitionFilters.mkString(", ")} (resid=$resid)")
+        // the restriction is exactly the probed width: ≤ probes×|q|
+        // distinct cells, one file per (batch, cell) by layout
         val dScanned = dscan.metrics("numFiles").value
         assert(dScanned > 0 && dScanned <= 2L * 3L,
           s"DPP read $dScanned of $totalFiles code files (resid=$resid)")

@@ -19,8 +19,8 @@ import org.scalatest.BeforeAndAfterAll
   *    rows and leaves no persisted RDDs behind.
   *  - pqCodebooks (batched across subspaces): identical centroids to
   *    the per-subspace kmeansCentroidSeq recurrence it replaced.
-  *  - encodeLiteral (one-scan PQ encode): identical (vec_id, sub, code)
-  *    rows to the union-of-assignCells-branches shape it replaced.
+  *  - encodeViaRelation (the PQ encode every IVF-PQ path runs): the
+  *    (vec_id, sub, code) rows of an independent driver replay.
   *  - lloydBooks (the one Lloyd trainer): joint training of the coarse
   *    cells and the PQ codebooks equals separate one-book and
   *    numSub-book calls, and both equal an independent driver-side
@@ -187,23 +187,19 @@ class Round18OptSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n > 0 && n < 20, s"buildIvfPq ran $n jobs")
   }
 
-  test("encodeLiteral equals the union-of-assignCells encode it replaced") {
-    val e = Tables.embeddings(spark, sf)
-    val (w, books) = Similarity.pqCodebooks(e, numSub = 4, codebookK = 8,
-      iters = 1)
-    val v = e.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val got = Similarity.encodeLiteral(v, w, books)
+  test("encodeViaRelation equals the driver-replayed PQ encode (4×8)") {
+    val (w, books) = Similarity.pqCodebooks(embeddings, numSub = 4,
+      codebookK = 8, iters = 1)
+    // a zero-norm codeword in subspace 0 exercises the 0.0 pin
+    val pinned = books.map { case (sub, cent) =>
+      sub -> (if (sub == 0) cent :+ (100L -> Seq.fill(w)(0.0)) else cent) }
+    val v = embeddings.select(col("vec_id"),
+      Similarity.asDouble(col("embedding")).as("v"))
+    val got = Similarity.encodeViaRelation(Similarity.subSliced(v, 4, w),
+        Similarity.codebookRelation(spark, w, pinned))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .sorted.toSeq
-    val want = books.map { case (sub, cent) =>
-      Similarity.assignCells(v.select(col("vec_id"),
-        slice(col("v"), lit(sub * w + 1), lit(w)).as("v")), cent, probes = 1)
-        .select(col("vec_id"), lit(sub).as("sub"), col("cell").as("code"))
-    }.reduce(_ unionAll _)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      .sorted.toSeq
-    assert(got == want)
+    assert(got == LloydReplay.encode(data, w, pinned))
   }
 
   test("assignCellsRelationArr equals assignCellsRelation on both probes branches") {

@@ -346,16 +346,13 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("semanticDedup: keep verdicts match a driver-side within-cell replay (q76)") {
     val emb = Tables.embeddings(spark, sf)
-    // independent replay: same centroids, same assignment operator,
-    // pairwise cosine recomputed driver-side with the kernel's strict
-    // left-to-right fold, greedy earlier-id drop within each cell
+    // independent replay: same centroids, the driver-side replay of
+    // the assignment, pairwise cosine recomputed driver-side with the
+    // kernel's strict left-to-right fold, greedy earlier-id drop within
+    // each cell
     val cent = Similarity.kmeansCentroidSeq(emb, numCells = 8, iters = 2)
-    val asn = Similarity.assignCells(
-        emb.select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v")),
-        cent, probes = 1)
-      .select(col("vec_id"), col("cell"), col("v"))
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getSeq[Double](2).toArray))
+    val asn = LloydReplay.assign(LloydReplay.corpus(emb), cent, probes = 1)
+      .map(a => (a._1, a._3, a._2.toArray)).toArray
     def dot(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var k = 0
       while (k < a.length) { s += a(k) * b(k); k += 1 }; s
@@ -376,11 +373,25 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(wantDrop.nonEmpty, "no within-cell dups at τ=0.4; test is vacuous")
     // the scale shape: the pair search is an equi-join keyed by cell,
-    // never a broadcast nested loop or cartesian over the corpus
-    val plan = Similarity.semanticDedup(emb, 0.4)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
+    // never a broadcast nested loop or cartesian over the corpus. The
+    // one nested loop allowed is the cell assignment's, whose broadcast
+    // side is the k-row centroid relation, never a corpus scan.
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val physical = Similarity.semanticDedup(emb, 0.4)
+      .queryExecution.sparkPlan
+    val plan = physical.toString
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
+    for (j <- physical.collect { case j: BroadcastNestedLoopJoinExec => j }) {
+      val built = j.buildSide match {
+        case BuildLeft => j.left
+        case BuildRight => j.right
+      }
+      assert(built.collect { case s: FileSourceScanExec => s }.isEmpty &&
+        built.collect { case s: LocalTableScanExec => s }.nonEmpty,
+        s"a nested loop broadcasts more than the centroid relation: ${j.toString.take(2000)}")
+    }
   }
 
   test("ivfKnnGraph: in-probe neighbors are exact-cosine candidates with measured recall") {
