@@ -38,7 +38,10 @@ object ReadingsLayout {
     readings
       .withColumn("date", to_date(col("ts")))
       .repartition(col("series"), col("date"))
-      .sortWithinPartitions(col("meterId"), col("ts"))
+      // led by the partition columns: the planned write sorts by them
+      // and would otherwise replace a (meterId, ts)-only order
+      .sortWithinPartitions(col("series"), col("date"), col("meterId"),
+        col("ts"))
       .write.mode("overwrite")
       .partitionBy("series", "date")
       .parquet(path)

@@ -565,7 +565,7 @@ object IndexStore {
     val (centRel, bookRel, w) = Similarity.ivfPqTrain(live, kind, numCells,
       cellIters, numSub, codebookK, pqIters)
     val codes = Similarity.ivfPqEncode(live, centRel, bookRel, kind,
-      numCells, numSub, w)
+      numSub, w)
     val m = IndexManifest(v1, kind, s"centroids-$v1", s"codebooks-$v1",
       s"codes-$v1", s"meta-$v1")
     centRel.write.mode("overwrite").parquet(artifactPath(dir, m.centroids))
@@ -593,10 +593,11 @@ object IndexStore {
     * all: the ADC serve joins the code stream to a BROADCAST
     * query-sized table keyed on the partition column, so Catalyst
     * inserts a dynamic partition-pruning filter and the scan reads
-    * only the probed cells' directories inside one execution — zero
-    * extra driver jobs, serve stays fully lazy (spec-pinned:
-    * `dynamicpruning` in the scan's partitionFilters, files read ≤
-    * probes × |queries|).
+    * only the probed cells' directories inside one execution — no
+    * driver job for the pruning (spec-pinned: `dynamicpruning` in the
+    * scan's partitionFilters, files read ≤ probes × |queries|). The
+    * serve's one driver fold is the k-row centroid array its probe
+    * assignment collects ([[Similarity.assignCellsRelation]]).
     *
     * `refineWith` composes the exact re-rank stage
     * ([[Similarity.refineTopK]]) over the served shortlist — the
@@ -684,8 +685,8 @@ object IndexStore {
     // a tombstoned id arriving (late replay of a pre-takedown feed)
     // must not re-enter the stream — store truth outranks arrivals
     val batchCodes = Similarity.ivfPqEncode(antiTombstones(vectors, dir),
-      centRel, bookRel, m.kind, meta.getAs[Int]("num_cells"),
-      meta.getAs[Int]("num_sub"), meta.getAs[Int]("w"))
+      centRel, bookRel, m.kind, meta.getAs[Int]("num_sub"),
+      meta.getAs[Int]("w"))
     writeCodes(batchCodes, artifactPath(dir, m.codes), batch = batchId)
     }
   }
@@ -1135,21 +1136,19 @@ object IndexStore {
     // codes; the residual path re-encodes from the corpus and would
     // not)
     val live = antiTombstones(vectors, dir)
-    // meta is one stored row (num_sub, w, num_cells, codebook_k); the
-    // cell count routes the assignment shape (assignCellsRelationAuto)
-    val meta = spark.read.parquet(artifactPath(dir, m.meta)).head()
-    val numCells = meta.getAs[Int]("num_cells")
     if (m.kind == KindPq) {
-      val cells = Similarity.assignCellsRelationAuto(live.select(
+      val cells = Similarity.assignCellsRelation(live.select(
           col("vec_id"), Similarity.asDouble(col("embedding")).as("v")),
-        centRel, probes = 1, numCells)
-        .select(col("vec_id"), col("v"), col("cell"))
+        centRel, probes = 1)
       readCodes(spark, dir, m).drop("cell")
         .join(cells.select(col("vec_id"), col("cell")), "vec_id")
-    } else
+    } else {
+      // meta is one stored row (num_sub, w, num_cells, codebook_k)
+      val meta = spark.read.parquet(artifactPath(dir, m.meta)).head()
       Similarity.ivfPqEncode(live, centRel,
-        spark.read.parquet(artifactPath(dir, m.codebooks)), m.kind, numCells,
+        spark.read.parquet(artifactPath(dir, m.codebooks)), m.kind,
         meta.getAs[Int]("num_sub"), meta.getAs[Int]("w"))
+    }
   }
 
   /** Write `newCodes` as the next version's code stream (row-count

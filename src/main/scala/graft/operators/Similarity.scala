@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DotProduct.dot_product
+import org.apache.spark.sql.graft.NearestCodes
+import org.apache.spark.sql.graft.NearestCodes.nearest_codes
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Vector-similarity operators over an `array<float>` embedding column.
   *
@@ -348,12 +351,8 @@ object Similarity {
   final case class LloydBook(id: Int, part: Int, parts: Int, k: Int,
       iters: Int)
 
-  /** A dense book's codeword, an element of its broadcast array. */
-  private[graft] final case class Codeword(code: Long, cv: Seq[Double],
-      cnrm: Double)
-
   // the driver-side left fold every codeword relation carries (the
-  // centroidRelation discipline), so the join reproduces it bit-for-bit
+  // centroidRelation discipline), so the kernel reproduces it bit-for-bit
   private def foldNorm(cv: Seq[Double]): Double =
     math.sqrt(cv.foldLeft(0.0)((a, x) => a + x * x))
 
@@ -363,14 +362,12 @@ object Similarity {
     *  - Seeds: one collect of the FULL corpus' `vec_id < max k` rows;
     *    book b's seeds are the ids below its own k, sliced driver-side.
     *  - The training rows (the `trainSampleMod` sample) are decoded and
-    *    sliced once per call, one cached row per (vector, book).
-    *  - Each iteration is one action: every slice is broadcast-joined on
-    *    its book id against the (book, code, cv, cnrm) relation, the
-    *    argmax is [[assignCellsRelation]]'s guard tree and (sim desc,
-    *    code asc) tie order, and the centroids are the `round(avg, 6)`
-    *    means per (book, cell, d). The argmax shape follows
-    *    [[assignCellsRelationAuto]]'s [[DenseCellsThreshold]] rule on
-    *    the largest book.
+    *    sliced once per call, one row per (vector, book), cached when
+    *    more than one iteration reads them.
+    *  - Each iteration is one action ([[lloydStep]]): every slice finds
+    *    its nearest codeword with the [[NearestCodes]] kernel against
+    *    its book's broadcast codeword array, map-side, and the
+    *    centroids are the `round(avg, 6)` means per (book, cell, d).
     *  - A book takes part in iterations 1..iters only, so books with
     *    different iteration counts share one call. An empty cell drops
     *    out of its book's set.
@@ -406,13 +403,15 @@ object Similarity {
       val train =
         if (trainSampleMod == 1) vAll
         else vAll.filter(pmod(col("vec_id"), lit(trainSampleMod)) === 0)
-      val sliced = lloydSlices(train, span.toSeq).cache()
-      val dense = books.map(_.k).max >= DenseCellsThreshold
+      // cached only when a second iteration reads it again
+      val sliced =
+        if (maxIters > 1) lloydSlices(train, span.toSeq).cache()
+        else lloydSlices(train, span.toSeq)
       try {
         for (i <- 1 to maxIters) {
           val active = books.filter(_.iters >= i).map(_.id)
-          val means = lloydStep(sliced, active.map(id => id -> cent(id)),
-            dense).as[(Int, Long, Seq[Double])].collect().groupBy(_._1)
+          val means = lloydStep(sliced, active.map(id => id -> cent(id)))
+            .as[(Int, Long, Seq[Double])].collect().groupBy(_._1)
           cent = cent ++ active.map { id =>
             id -> means.getOrElse(id, Array.empty[(Int, Long, Seq[Double])])
               .map { case (_, cid, cv) => (cid, cv) }.toSeq.sortBy(_._1)
@@ -439,51 +438,27 @@ object Similarity {
       .withColumn("_svnrm", l2norm(col("sv")))
   }
 
-  /** One [[lloydBooks]] iteration over [[lloydSlices]] rows: the
-    * nearest-codeword argmax per (vector, book) against `books`'
-    * current centroids, then the rounded means as (book, cell, cv) —
-    * one row per centroid, so the driver fold is k rows per book, not
-    * k·d. Books absent from `books` take no part (their rows find no
+  /** One [[lloydBooks]] iteration over [[lloydSlices]] rows: each
+    * slice's nearest codeword among its book's current centroids
+    * ([[NearestCodes]] against a broadcast (book, codeword array) row —
+    * map-only, the slices never shuffle), then the rounded means as
+    * (book, cell, cv) — one row per centroid, so the driver fold is k
+    * rows per book, not k·d. The two exchanges are the (book, cell, d)
+    * means and the (book, cell) vector assembly. Books absent from
+    * `books`, or left with no centroid, take no part (their rows find no
     * join partner).
     */
   private[graft] def lloydStep(sliced: DataFrame,
-      books: Seq[(Int, Seq[(Long, Seq[Double])])], dense: Boolean): DataFrame = {
+      books: Seq[(Int, Seq[(Long, Seq[Double])])]): DataFrame = {
     val spark = sliced.sparkSession
-    import spark.implicits._
-    // assignCellsRelation's guard tree: a zero-norm codeword OR slice
-    // pins the cosine to 0.0 (NaN sort order is engine-dependent)
-    def sim(cv: Column, cnrm: Column): Column =
-      when(cnrm === 0.0, lit(0.0))
-        .otherwise(when(col("_svnrm") > 0,
-          dot_product(col("sv"), cv) / (col("_svnrm") * cnrm))
-          .otherwise(lit(0.0)))
-    val won =
-      if (dense) {
-        // a book left with no centroid has no array row (array_max of
-        // an empty array is null)
-        val rel = books.filter(_._2.nonEmpty).map { case (b, cent) =>
-          (b, cent.map { case (code, cv) => Codeword(code, cv, foldNorm(cv)) })
-        }.toDF("book", "_cw")
-        sliced.join(broadcast(rel), "book")
-          .select(col("book"), col("sv"), array_max(transform(col("_cw"), c =>
-            struct(sim(c.getField("cv"), c.getField("cnrm")).as("sim"),
-              (-c.getField("code")).as("nc"), c.getField("code").as("code"))))
-            .getField("code").as("cell"))
-      } else {
-        val rel = books.flatMap { case (b, cent) =>
-          cent.map { case (code, cv) => (b, code, cv, foldNorm(cv)) }
-        }.toDF("book", "code", "cv", "cnrm")
-        // (sim, -code) ordering struct: unique per (vector, book), so
-        // the partial merge is deterministic
-        sliced.join(broadcast(rel), "book")
-          .select(col("vec_id"), col("book"), col("sv"), col("code"),
-            sim(col("cv"), col("cnrm")).as("_sim"))
-          .groupBy(col("vec_id"), col("book"))
-          .agg(max_by(struct(col("code"), col("sv")),
-            struct(col("_sim"), (-col("code")).as("nc"))).as("_w"))
-          .select(col("book"), col("_w.code").as("cell"), col("_w.sv").as("sv"))
-      }
-    won.select(col("book"), col("cell"), posexplode(col("sv")).as(Seq("d", "x")))
+    val rel = codewordArrays(spark, books.filter(_._2.nonEmpty).map {
+      case (b, cent) =>
+        b -> cent.map { case (code, cv) => (code, cv, foldNorm(cv)) }
+    }).withColumnRenamed("_key", "book")
+    sliced.join(broadcast(rel), "book")
+      .select(col("book"), col("sv"),
+        nearestCode(col("sv"), col("_svnrm"), col("_cw")).as("cell"))
+      .select(col("book"), col("cell"), posexplode(col("sv")).as(Seq("d", "x")))
       .groupBy(col("book"), col("cell"), col("d"))
       .agg(round(avg(col("x")), 6).as("m"))
       .groupBy(col("book"), col("cell"))
@@ -491,13 +466,44 @@ object Similarity {
         s => s.getField("m")).as("cv"))
   }
 
+  /** [[NearestCodes]]' codeword input: one `(_key, _cw)` row per key,
+    * `_cw` the key's array<struct<code, cv, cnrm>>. A LOCAL relation,
+    * so the plan that reads it gains no aggregate and no shuffle; its
+    * rows are data, never expressions, so the plan has the same size at
+    * any index geometry.
+    */
+  private def codewordArrays(spark: org.apache.spark.sql.SparkSession,
+      keyed: Seq[(Int, Seq[(Long, Seq[Double], Double)])]): DataFrame = {
+    val rows = keyed.map { case (k, cws) =>
+      Row(k, cws.map { case (code, cv, cnrm) => Row(code, cv, cnrm) }) }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("_key", IntegerType, nullable = false),
+        StructField("_cw", NearestCodes.codewordsType, nullable = false))))
+  }
+
+  /** [[codewordArrays]] of a stored relation's (key, code, cv, cnrm)
+    * rows: one collect of the k·d index (the bytes a broadcast of the
+    * row relation moves anyway; free for a local relation). */
+  private def collectCodewords(rel: DataFrame, key: Column,
+      code: String): DataFrame =
+    codewordArrays(rel.sparkSession,
+      rel.select(key, col(code), col("cv"), col("cnrm")).collect().toSeq
+        .groupBy(_.getInt(0)).toSeq.map { case (k, rs) =>
+          k -> rs.map(r => (r.getLong(1), r.getSeq[Double](2), r.getDouble(3)))
+        })
+
+  /** The code of the one nearest codeword (`_cw` must be non-empty). */
+  private def nearestCode(v: Column, vnrm: Column, cw: Column): Column =
+    nearest_codes(v, vnrm, cw, 1).getItem(0).getField("code")
+
   /** A trained centroid set materialized as a RELATION — (cid, cv,
     * cnrm, cn2) rows, one per centroid — never plan literals. cnrm/cn2
     * are driver-side left folds (`math.sqrt(Σx²)` / `Σx²`) over the
     * 6-dp-rounded centroid, the same folds every oracle mirror runs.
     * In production the same schema is simply READ from the index's
     * parquet — every search op accepts any DataFrame with these
-    * columns, so a 65k-cell index never transits the driver at all.
+    * columns; the assignment collects it once into [[NearestCodes]]'
+    * codeword array (k·d doubles, the bytes a broadcast moves anyway).
     */
   def centroidRelation(spark: org.apache.spark.sql.SparkSession,
       cent: Seq[(Long, Seq[Double])]): DataFrame = {
@@ -526,138 +532,32 @@ object Similarity {
   }
 
   /** Assign each (vec_id, v) row to its `probes` highest-cosine
-    * centroids, carrying the winning cosine as `sim`, with the index as
-    * a BROADCAST RELATION (nothing index-sized is an expression, so the
-    * plan has the same size at any cell count). A zero-norm centroid or
-    * vector pins the cosine to 0.0 (NaN sort order is engine-dependent)
-    * and exactly-equal cosines break toward the LOWER cid — the
-    * `ORDER BY cos DESC, cid` every DuckDB oracle mirror encodes; both
-    * are pinned against the driver replay in the specs (LloydReplay
-    * .assign). Shape: one
-    * broadcast nested-loop join (k rows per vector) folded by a
-    * map-side-partial argmax aggregation — all of a vector's k
-    * candidate rows are colocated by construction, so the partial
-    * aggregate collapses them before the (vec_id)-keyed exchange and
-    * the shuffle carries ONE narrow row per vector. probes > 1 keeps
-    * the same shape with a sorted-slice aggregate; it is meant for the
-    * QUERY side (query-bounded), corpus membership always uses
-    * probes = 1.
+    * centroids, carrying the cosine as `sim` and the rank as `probe`,
+    * with the index as a BROADCAST RELATION (nothing index-sized is an
+    * expression, so the plan has the same size at any cell count). A
+    * zero-norm centroid or vector pins the cosine to 0.0 (NaN sort order
+    * is engine-dependent) and exactly-equal cosines break toward the
+    * LOWER cid — the `ORDER BY cos DESC, cid` every DuckDB oracle mirror
+    * encodes; both are pinned against the driver replay in the specs
+    * (LloydReplay.assign). Shape: the centroids ride ONE broadcast row
+    * holding their codeword array, and the [[NearestCodes]] kernel
+    * returns each vector's `probes` best cells inside the scan, which
+    * `posexplode` turns into rows — map-only, no exchange, no aggregate.
     *
     * `centroids` must have [[centroidRelation]]'s (cid, cv, cnrm)
-    * columns. An EMPTY relation yields an empty result (a relation's
-    * cardinality isn't knowable without an action, and a scale caller
-    * validates its index store, not each query plan).
+    * columns; they are collected once to build the array (k·d doubles).
+    * An EMPTY relation yields an empty result.
     */
   def assignCellsRelation(v: DataFrame, centroids: DataFrame,
-      probes: Int): DataFrame = {
-    val c = broadcast(centroids.select(col("cid"), col("cv"), col("cnrm")))
-    // zero-norm centroid OR vector pins the cosine to 0.0 (NaN sort
-    // order is engine-dependent)
-    val sim = when(col("cnrm") === 0.0, lit(0.0))
-      .otherwise(when(col("_vnrm") > 0,
-        dot_product(col("v"), col("cv")) / (col("_vnrm") * col("cnrm")))
-        .otherwise(lit(0.0)))
-    val scored = v.withColumn("_vnrm", l2norm(col("v")))
-      .crossJoin(c)
-      .select(col("vec_id"), col("v"), col("cid"), sim.as("_sim"))
-    if (probes == 1) {
-      // argmax by (sim desc, cid asc) via max_by on a (sim, -cid)
-      // ordering struct — unique because cid is unique, so the partial
-      // merge is deterministic
-      scored.groupBy(col("vec_id"))
-        .agg(max_by(struct(col("v"), col("cid"), col("_sim")),
-          struct(col("_sim"), (-col("cid")).as("nc"))).as("_w"))
-        .select(col("vec_id"), col("_w.v").as("v"), col("_w.cid").as("cell"),
-          col("_w._sim").as("sim"), lit(0).cast("int").as("_p"))
-        .select(col("vec_id"), col("v"), col("cell"), col("sim"),
-          (col("_p") + 1).as("probe"))
-    } else {
-      // sort_array(desc)+slice over (sim, -cid, cid) structs, fed by
-      // collect_list (order-free: the sort key is unique). `first(v)`
-      // is deterministic here — every row of the group carries the SAME
-      // vector.
-      scored.groupBy(col("vec_id"))
-        .agg(first(col("v")).as("v"),
-          slice(sort_array(collect_list(struct(col("_sim").as("sim"),
-            (-col("cid")).as("nc"), col("cid").as("cid"))), asc = false),
-            1, probes).as("_top"))
-        .select(col("vec_id"), col("v"),
-          posexplode(col("_top")).as(Seq("_p", "_c")))
-        .select(col("vec_id"), col("v"), col("_c.cid").as("cell"),
-          col("_c.sim").as("sim"), (col("_p") + 1).as("probe"))
-    }
-  }
-
-  /** Cell-count threshold above which [[assignCellsRelationArr]] beats
-    * the join+aggregate [[assignCellsRelation]] shape. Measured
-    * (round-18 A/B, sf0.1): at 8 cells the codegen'd broadcast-join +
-    * max_by aggregate is ~1.4× faster (q187); at 128 cells the
-    * aggregate's ObjectHashAggregate buffers copy every vector's full
-    * embedding once per candidate row and the array shape is ~2×
-    * faster (q191 13.0 → 6.5 s). 32 splits the measured decades; both
-    * shapes are output-identical (spec-pinned), so the switch is a
-    * pure cost choice that scales with the index, not the corpus.
-    */
-  val DenseCellsThreshold = 32
-
-  /** Shape chooser over the two output-identical relation assignments
-    * — callers that know their cell count route dense indexes to the
-    * array form. */
-  def assignCellsRelationAuto(v: DataFrame, centroids: DataFrame,
-      probes: Int, numCells: Int): DataFrame =
-    if (numCells >= DenseCellsThreshold)
-      assignCellsRelationArr(v, centroids, probes)
-    else assignCellsRelation(v, centroids, probes)
-
-  /** [[assignCellsRelation]] with the index riding ONE broadcast row
-    * holding the centroid ARRAY, the argmax an array expression INSIDE
-    * the scan — map-only, no exchange, no aggregate. The join+agg
-    * shape moves every vector's FULL embedding through
-    * ObjectHashAggregate buffers — one array copy per candidate row, k
-    * copies per vector — which dominated the round-18 thread-dump
-    * profile at dense cell counts. Arithmetic, zero-norm pins and the
-    * (sim desc, cid asc) tie order are unchanged: array_max /
-    * sort_array order (sim, -cid, cid) structs exactly like the
-    * aggregate's ordering struct, and cid is unique. Plan size stays
-    * O(1) in the index (the array is a runtime broadcast, never a
-    * literal); broadcast bytes are the same k·d doubles. The array
-    * lambdas evaluate interpreted (higher-order functions are
-    * codegen-fallback), which is why the join+agg form stays the
-    * default below [[DenseCellsThreshold]].
-    */
-  def assignCellsRelationArr(v: DataFrame, centroids: DataFrame,
-      probes: Int): DataFrame = {
-    val centArr = broadcast(centroids.select(col("cid"), col("cv"), col("cnrm"))
-      .agg(collect_list(struct(col("cid"), col("cv"), col("cnrm")))
-        .as("__cents")))
-    // assignCellsRelation's guard tree: zero-norm centroid OR vector
-    // pins the cosine to 0.0 (NaN sort order is engine-dependent)
-    val simStructs = transform(col("__cents"), c =>
-      struct(
-        when(c.getField("cnrm") === 0.0, lit(0.0))
-          .otherwise(when(col("_vnrm") > 0,
-            dot_product(col("v"), c.getField("cv")) /
-              (col("_vnrm") * c.getField("cnrm")))
-            .otherwise(lit(0.0))).as("sim"),
-        (-c.getField("cid")).as("nc"),
-        c.getField("cid").as("cid")))
-    // an EMPTY relation yields an empty result (contract unchanged)
-    val based = v.withColumn("_vnrm", l2norm(col("v")))
-      .crossJoin(centArr)
-      .filter(size(col("__cents")) > 0)
-    if (probes == 1) {
-      based.withColumn("_w", array_max(simStructs))
-        .select(col("vec_id"), col("v"), col("_w.cid").as("cell"),
-          col("_w.sim").as("sim"), lit(1).cast("int").as("probe"))
-    } else {
-      based.withColumn("_top",
-          slice(sort_array(simStructs, asc = false), 1, probes))
-        .select(col("vec_id"), col("v"),
-          posexplode(col("_top")).as(Seq("_p", "_c")))
-        .select(col("vec_id"), col("v"), col("_c.cid").as("cell"),
-          col("_c.sim").as("sim"), (col("_p") + 1).as("probe"))
-    }
-  }
+      probes: Int): DataFrame =
+    v.withColumn("_vnrm", l2norm(col("v")))
+      .crossJoin(broadcast(
+        collectCodewords(centroids, lit(0), "cid").select(col("_cw"))))
+      .select(col("vec_id"), col("v"),
+        posexplode(nearest_codes(col("v"), col("_vnrm"), col("_cw"), probes))
+          .as(Seq("_p", "_c")))
+      .select(col("vec_id"), col("v"), col("_c.code").as("cell"),
+        col("_c.sim").as("sim"), (col("_p") + 1).as("probe"))
 
   /** Corpus-clustering readout over the embedding column: the k-means
     * index (same deterministic Lloyd recurrence the IVF search builds)
@@ -665,7 +565,7 @@ object Similarity {
     * the centroid. The standard curation view for a training corpus:
     * undersized cells flag modality gaps, low min-cosine flags
     * outliers/noise documents. Assignment is against the broadcast
-    * centroid relation ([[assignCellsRelationAuto]]); the summary is one
+    * centroid relation ([[assignCellsRelation]]); the summary is one
     * narrow aggregation keyed by cell, so the readout scales with the
     * vector count at any corpus size.
     */
@@ -675,9 +575,9 @@ object Similarity {
     // the assignment already carries each vector's cosine to its
     // winning centroid — the summary is a pure groupBy, no second
     // kernel pass over the embeddings
-    assignCellsRelationAuto(
+    assignCellsRelation(
         vectors.select(col("vec_id"), asDouble(col("embedding")).as("v")),
-        centroidRelation(vectors.sparkSession, cent), probes = 1, numCells)
+        centroidRelation(vectors.sparkSession, cent), probes = 1)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_members"),
         round(avg(col("sim")), 6).as("avg_cos"),
@@ -751,8 +651,8 @@ object Similarity {
     val spark0 = vectors.sparkSession
     val all = vectors.select(col("vec_id"),
       asDouble(col("embedding")).as("v"))
-    val a0 = assignCellsRelationAuto(all, centroidRelation(spark0, cent0),
-      probes = 1, numCells)
+    val a0 = assignCellsRelation(all, centroidRelation(spark0, cent0),
+      probes = 1)
       .select(col("vec_id"), col("v"), col("cell").as("cell0"))
     // one Lloyd refresh over the merged corpus: means of the stale
     // assignment, rounded to 6 decimals (the kmeansCentroidSeq
@@ -768,8 +668,8 @@ object Similarity {
         s => s.getField("m")).as("cv"))
       .select(col("cell").cast("long"), col("cv"))
       .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-    val a1 = assignCellsRelationAuto(all, centroidRelation(spark0, cent1),
-      probes = 1, numCells)
+    val a1 = assignCellsRelation(all, centroidRelation(spark0, cent1),
+      probes = 1)
       .select(col("vec_id"), col("cell").as("cell1"))
     (a0.select(col("vec_id"), col("cell0")).join(a1, "vec_id"),
       cent0, cent1)
@@ -925,15 +825,15 @@ object Similarity {
       probes: Int = 2): DataFrame = {
     val cent = centroidRelation(vectors.sparkSession,
       kmeansCentroidSeq(vectors, numCells, iters))
-    val members = assignCellsRelationAuto(
+    val members = assignCellsRelation(
       vectors.select(col("vec_id"), asDouble(col("embedding")).as("v")), cent,
-      probes = 1, numCells)
+      probes = 1)
       .withColumn("vnrm", l2norm(col("v")))
       .select(col("vec_id").as("nid"), col("v").as("nv"),
         col("vnrm").as("nv_nrm"), col("cell"))
-    val probed = assignCellsRelationAuto(
+    val probed = assignCellsRelation(
       queries.select(col("vec_id"), asDouble(col("embedding")).as("v")), cent,
-      probes, numCells)
+      probes)
       .withColumn("vnrm", l2norm(col("v")))
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("vnrm").as("qv_nrm"), col("cell"))
@@ -975,7 +875,7 @@ object Similarity {
     * qid probes exactly one replica of every member row), it exists
     * because a small-nlist join otherwise runs on ≤ numCells cores
     * (jstack at sf10: 7 of 32 busy). Both assignments run against the
-    * broadcast centroid relation ([[assignCellsRelationAuto]]), so the
+    * broadcast centroid relation ([[assignCellsRelation]]), so the
     * plan has the same size at any nlist.
     */
   def ivfKnnGraph(
@@ -987,11 +887,11 @@ object Similarity {
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val cent = centroidRelation(spark,
       kmeansCentroidSeq(vectors, numCells, iters, trainSampleMod))
-    val members = assignCellsRelationAuto(v, cent, probes = 1, numCells)
+    val members = assignCellsRelation(v, cent, probes = 1)
       .withColumn("nv_nrm", l2norm(col("v")))
       .select(col("vec_id").as("nid"), col("v").as("nv"),
         col("nv_nrm"), col("cell"))
-    val probed = assignCellsRelationAuto(v, cent, probes, numCells)
+    val probed = assignCellsRelation(v, cent, probes)
       .withColumn("qv_nrm", l2norm(col("v")))
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("qv_nrm"), col("cell"))
@@ -1238,8 +1138,8 @@ object Similarity {
       numCells: Int = 8, iters: Int = 2): DataFrame = {
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val cent = kmeansCentroidSeq(vectors, numCells, iters)
-    val asn = assignCellsRelationAuto(v,
-        centroidRelation(vectors.sparkSession, cent), probes = 1, numCells)
+    val asn = assignCellsRelation(v,
+        centroidRelation(vectors.sparkSession, cent), probes = 1)
       .select(col("vec_id"), col("v"), col("cell"))
       .withColumn("nrm", l2norm(col("v")))
     val a = asn.select(col("cell"), col("vec_id").as("i"),
@@ -1285,8 +1185,8 @@ object Similarity {
     val cent = kmeansCentroidSeq(vectors, numCells, iters)
     val w = Window.partitionBy(col("cell"))
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-    assignCellsRelationAuto(v, centroidRelation(vectors.sparkSession, cent),
-        probes = 1, numCells)
+    assignCellsRelation(v, centroidRelation(vectors.sparkSession, cent),
+        probes = 1)
       .select(col("vec_id"), col("cell"))
       .withColumn("rk", row_number().over(w).cast("long"))
       .withColumn("keep", col("rk") <= perCellCap)
@@ -1600,8 +1500,9 @@ object Similarity {
     * 4 bytes at 4×8: a 64× shrink). The encode is [[encodeViaRelation]]
     * against the broadcast [[codebookRelation]] (numSub·k·(d/numSub)
     * = k·d doubles TOTAL, independent of the corpus): one broadcast
-    * hash join on the subspace and one per-(vector, sub) argmax, with
-    * nothing index-sized in the plan. Returns (vec_id, sub, code)
+    * hash join on the subspace and one map-side nearest-codeword
+    * kernel per (vector, sub), with nothing index-sized in the plan.
+    * Returns (vec_id, sub, code)
     * long-form — one downstream `groupBy(vec_id)` packs codes into a
     * row when a packed layout is wanted.
     */
@@ -1721,42 +1622,38 @@ object Similarity {
     val (centRel, bookRel, w) = ivfPqTrain(vectors, IndexStore.KindPq,
       numCells, cellIters, numSub, codebookK, pqIters)
     ivfPqServe(ivfPqEncode(vectors, centRel, bookRel, IndexStore.KindPq,
-      numCells, numSub, w), centRel, bookRel, queries, k, probes, numSub, w)
+      numSub, w), centRel, bookRel, queries, k, probes, numSub, w)
   }
 
-  /** Explode (id, v) into one row per PQ subspace slice, norm attached
-    * — the shared front of every encode and distance-table build. The
-    * unrolled array is numSub entries (config-sized, not index-sized).
+  /** Explode (vec_id, v, …) into one row per PQ subspace slice, norm
+    * attached, every column but `v` carried along — the shared front of
+    * every encode and distance-table build. The unrolled array is numSub
+    * entries (config-sized, not index-sized).
     */
-  private[graft] def subSliced(df: DataFrame, numSub: Int, w: Int): DataFrame =
-    df.select(col("vec_id"), explode(array((0 until numSub).map(sub =>
+  private[graft] def subSliced(df: DataFrame, numSub: Int, w: Int): DataFrame = {
+    val carried = df.columns.toSeq.filter(_ != "v").map(col)
+    df.select(carried :+ explode(array((0 until numSub).map(sub =>
         struct(lit(sub).as("sub"), slice(col("v"), sub * w + 1, w).as("sv"))
-      ): _*)).as("e"))
-      .select(col("vec_id"), col("e.sub").as("sub"), col("e.sv").as("sv"))
+      ): _*)).as("e"): _*)
+      .select(carried ++ Seq(col("e.sub").as("sub"), col("e.sv").as("sv")): _*)
       .withColumn("_svnrm", l2norm(col("sv")))
+  }
 
-  /** Per-subspace nearest-codeword encode against a broadcast codebook
-    * relation: equi-join on `sub` (broadcast hash, not nested-loop),
-    * then the [[assignCellsRelation]] argmax per (vec_id, sub). Emits
-    * (vec_id, sub, code) — [[pqCodes]]' exact rows.
+  /** Per-subspace nearest-codeword encode against a codebook relation:
+    * a broadcast hash join on `sub` against ONE codeword-array row per
+    * subspace, then the [[NearestCodes]] kernel per (vector, sub) —
+    * map-only, no exchange, no aggregate. Emits (vec_id, sub, code) —
+    * [[pqCodes]]' exact rows — followed by any other column `vSub`
+    * carries.
     */
   private[graft] def encodeViaRelation(vSub: DataFrame, bookRel: DataFrame): DataFrame = {
-    // join+aggregate kept deliberately: unlike assignCellsRelation's
-    // probes path, the agg buffer here carries only the winning CODE
-    // (never a vector), so the shape has no copy problem — a round-18
-    // A/B of a map-side array-argmax variant read ~1.4× WORSE at the
-    // tested codebook sizes (interpreted higher-order lambdas, and the
-    // groupBy's output partitioning feeds the downstream vec_id joins)
-    val sim = when(col("cnrm") === 0.0, lit(0.0))
-      .otherwise(when(col("_svnrm") > 0,
-        dot_product(col("sv"), col("cv")) / (col("_svnrm") * col("cnrm")))
-        .otherwise(lit(0.0)))
-    vSub.join(broadcast(bookRel.select(col("sub"), col("code"), col("cv"),
-        col("cnrm"))), "sub")
-      .select(col("vec_id"), col("sub"), col("code"), sim.as("_sim"))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(max_by(col("code"),
-        struct(col("_sim"), (-col("code")).as("nc"))).as("code"))
+    val carried = vSub.columns.toSeq
+      .filterNot(Set("vec_id", "sub", "sv", "_svnrm")).map(col)
+    vSub.join(broadcast(collectCodewords(bookRel, col("sub"), "code")
+        .withColumnRenamed("_key", "sub")), "sub")
+      .select(Seq(col("vec_id"), col("sub"),
+        nearestCode(col("sv"), col("_svnrm"), col("_cw")).as("code")) ++
+        carried: _*)
   }
 
   /** Train an IVF-PQ index of `kind` ([[IndexStore.KindPq]] or
@@ -1781,7 +1678,7 @@ object Similarity {
         kmeansCentroidSeq(vectors, numCells, cellIters))
       val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
       val (w, books) = pqCodebooks(
-        residuals(memberCells(v, centRel, numCells), centRel)
+        residuals(memberCells(v, centRel), centRel)
           .select(col("vec_id"), col("v").as("embedding")),
         numSub, codebookK, pqIters)
       (centRel, codebookRelation(spark, w, books), w)
@@ -1789,37 +1686,35 @@ object Similarity {
   }
 
   /** THE IVF-PQ encode: the (vec_id, sub, code, cell) code stream of a
-    * (vec_id, embedding) batch against a trained index — each vector's
-    * member cell (probes = 1, [[assignCellsRelationAuto]]'s shape by
-    * `numCells`), then the per-subspace [[encodeViaRelation]] of x
-    * itself (kind pq) or of the residual x − c(x) (kind pq_residual).
+    * (vec_id, embedding) batch against a trained index, in ONE map-only
+    * pass over each vector row: its member cell ([[assignCellsRelation]],
+    * probes = 1), then the per-subspace [[encodeViaRelation]] of x itself
+    * (kind pq) or of the residual x − c(x) (kind pq_residual), the cell
+    * riding along — no exchange, no aggregate, no join back on vec_id.
     * [[ivfPqTopK]], [[ivfPqResidualTopK]] and [[IndexStore]]'s build,
     * append and refresh all encode through it, so the in-memory search
     * and the persisted store carry the same codes.
     */
   private[graft] def ivfPqEncode(vectors: DataFrame, centRel: DataFrame,
-      bookRel: DataFrame, kind: String, numCells: Int, numSub: Int,
-      w: Int): DataFrame = {
+      bookRel: DataFrame, kind: String, numSub: Int, w: Int): DataFrame = {
     val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val asn = memberCells(v, centRel, numCells)
-    val toEncode = if (kind == IndexStore.KindPq) v else residuals(asn, centRel)
+    val asn = memberCells(v, centRel)
+    val toEncode = if (kind == IndexStore.KindPq) asn else residuals(asn, centRel)
     encodeViaRelation(subSliced(toEncode, numSub, w), bookRel)
-      .join(asn.select(col("vec_id"), col("cell")), "vec_id")
   }
 
   /** (vec_id, v, cell): each vector's nearest cell. */
-  private def memberCells(v: DataFrame, centRel: DataFrame,
-      numCells: Int): DataFrame =
-    assignCellsRelationAuto(v, centRel, probes = 1, numCells)
+  private def memberCells(v: DataFrame, centRel: DataFrame): DataFrame =
+    assignCellsRelation(v, centRel, probes = 1)
       .select(col("vec_id"), col("v"), col("cell"))
 
-  /** (vec_id, v = x − c(cell)) over [[memberCells]] rows: one broadcast
-    * join on cell, exact elementwise IEEE subtraction. */
+  /** (vec_id, v = x − c(cell), cell) over [[memberCells]] rows: one
+    * broadcast join on cell, exact elementwise IEEE subtraction. */
   private def residuals(asn: DataFrame, centRel: DataFrame): DataFrame =
     asn.join(broadcast(centRel.select(col("cid").as("cell"), col("cv"))),
         "cell")
       .select(col("vec_id"),
-        zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
+        zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"), col("cell"))
 
   /** The ADC SERVING stage of the IVF-PQ search — the query-time half
     * with training and corpus encoding amortized away. Everything
@@ -1927,7 +1822,7 @@ object Similarity {
     val (centRel, bookRel, w) = ivfPqTrain(vectors, IndexStore.KindPqResidual,
       numCells, cellIters, numSub, codebookK, pqIters)
     ivfPqResidualServe(ivfPqEncode(vectors, centRel, bookRel,
-      IndexStore.KindPqResidual, numCells, numSub, w),
+      IndexStore.KindPqResidual, numSub, w),
       centRel, bookRel, queries, k, probes, numSub, w)
   }
 

@@ -121,8 +121,8 @@ class DriverBoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
     ("q184_bpe_fertility", 64L, "1-row argmax per merge"),
     // q121/q171's calls under their second ids: index TRAINING folds
     // k×d centroids on the driver (the documented kmeansCentroidSeq
-    // bound); the SEARCH plan itself adds no collect (index rides
-    // broadcast relations)
+    // bound); the SEARCH collects only the k-row centroid and
+    // numSub-row codebook arrays its nearest-codeword kernel reads
     ("q187_ivfpq_relation", 4096L, "centroids + sub-codebooks"),
     ("q188_residual_relation", 4096L, "centroids + residual sub-codebooks"),
     // auto-geometry: cells = autoCells(N) ≤ 65536 but the per-iteration
@@ -131,14 +131,15 @@ class DriverBoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
     ("q191_knn_pagerank_auto", 4096L, "autoCells(N) centroids × Lloyd iterations"),
     ("q192_knn_pagerank_sampled", 4096L, "autoCells(N) centroids × Lloyd iterations"),
     // store lifecycle: BUILD folds k×d centroids (the documented Lloyd
-    // bound) + one meta row; the serve's only driver action is the
-    // 1-row meta head — the code-stream scan is restricted by
-    // Catalyst's dynamic partition pruning INSIDE the execution, with
-    // no driver fold of the probed cells
-    ("q193_store_serve", 4096L, "build-time Lloyd folds + 1-row meta"),
-    ("q194_filtered_ann", 4096L, "build-time Lloyd folds + 1-row meta"),
+    // bound) + one meta row; the serve's driver folds are the 1-row
+    // meta head and the k-row centroid array of its probe assignment —
+    // the code-stream scan is restricted by Catalyst's dynamic
+    // partition pruning INSIDE the execution, with no driver fold of
+    // the probed cells
+    ("q193_store_serve", 4096L, "Lloyd folds + 1-row meta + k centroids"),
+    ("q194_filtered_ann", 4096L, "Lloyd folds + 1-row meta + k centroids"),
     ("q197_store_serve_residual", 4096L,
-      "build-time Lloyd folds + 1-row meta"))
+      "Lloyd folds + 1-row meta + k centroids"))
 
   // Ops whose scaladoc claims a FULLY LAZY plan — zero driver collects.
   // q165 binaryHammingRecall is a broadcast-limit join + two windows;

@@ -159,6 +159,32 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"character data rides an exchange: ${offending.mkString(", ")}")
   }
 
+  test("(series, date) layout files are each sorted by (meterId, ts)") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("readings_sorted")
+      .toFile.getAbsolutePath
+    // a file's rows are one contiguous run of a scan partition, in file
+    // order, so the row position orders them within their file
+    val rows = try {
+      ReadingsLayout.write(Tables.readings(spark, sf), dir)
+      spark.read.parquet(dir)
+        .select(input_file_name().as("f"),
+          monotonically_increasing_id().as("i"), col("meterId"), col("ts"))
+        .collect().toSeq
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    val files = rows.groupBy(_.getString(0)).values.toSeq
+      .map(_.sortBy(_.getLong(1)))
+    assert(files.size > 2, s"layout produced only ${files.size} files")
+    val unsorted = files.filter(_.sliding(2).exists {
+      case Seq(a, b) =>
+        val m = a.getString(2).compareTo(b.getString(2))
+        m > 0 || (m == 0 && a.getTimestamp(3).after(b.getTimestamp(3)))
+      case _ => false
+    })
+    assert(unsorted.isEmpty, s"${unsorted.size} of ${files.size} files " +
+      s"are not in (meterId, ts) order: ${unsorted.map(_.head.getString(0))}")
+  }
+
   test("(series, date) layout prunes partitions at file-listing time") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.functions._

@@ -22,6 +22,13 @@ class PollSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** A device payload under src/test/resources/poll (FIXTURES.md §2). */
+  private def fixture(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/poll/$name")
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
   private val telegram =
     "/ISK5\\2M550T-1012\r\n\r\n" +
       "1-0:1.7.0(00.421*kW)\r\n1-0:2.7.0(00.000*kW)\r\n" +
@@ -164,8 +171,7 @@ class PollSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Weewx golden index.html drives the full table-scrape pipeline (S15)") {
-    val html = java.nio.file.Files.readString(
-      java.nio.file.Path.of("/root/reference/TelemetryToRaven/Weewx/index.html"))
+    val html = fixture("weewx_index.html")
     val zone = java.time.ZoneId.of("Europe/Amsterdam")
     val rows = PollSource.weewxReadingRows("meters/WeatherStation", html, zone)
     // the golden current-conditions table has 13 rows, all parseable
@@ -201,8 +207,7 @@ class PollSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Tapo golden tapo.json drives device info + PowerEnergy append (S14)") {
-    val json = java.nio.file.Files.readString(
-      java.nio.file.Path.of("/root/reference/TelemetryTests/tapo.json"))
+    val json = fixture("tapo.json")
     val info = PollSource.tapoDeviceInfo(json).get
     assert(info.model == "P115")
     assert(info.mac == "34-60-F9-3A-41-17")
@@ -222,8 +227,7 @@ class PollSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("poll cycles stream through the Weewx HTML scrape (S15 connector shape)") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val html = java.nio.file.Files.readString(
-      java.nio.file.Path.of("/root/reference/TelemetryToRaven/Weewx/index.html"))
+    val html = fixture("weewx_index.html")
     val ticks = MemoryStream[Long]
     val readings = PollSource.decodePollCycles(
       ticks.toDS(),
@@ -247,8 +251,7 @@ class PollSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("poll cycles stream through the Tapo JSON decoder (S14 connector shape)") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val json = java.nio.file.Files.readString(
-      java.nio.file.Path.of("/root/reference/TelemetryTests/tapo.json"))
+    val json = fixture("tapo.json")
     val ticks = MemoryStream[Long]
     val readings = PollSource.decodePollCycles(
       ticks.toDS(),

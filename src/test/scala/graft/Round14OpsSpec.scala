@@ -44,33 +44,47 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("assignCellsRelation and assignCellsRelationArr equal the driver replay (7 and 40 cells, probes 1 and 3)") {
+  test("NearestCodes cells equal replay (7, 40 cells; probes 1, 3; pins, tie, -0.0)") {
     val e = embeddings
-    // one zero-norm vector and one zero-norm centroid exercise the pins:
-    // the vector ties at 0.0 on every cell (lowest cid wins) and the
-    // centroid scores 0.0 against every vector
-    val d = LloydReplay.corpus(e).head._2.length
+    val corpus = LloydReplay.corpus(e)
+    val d = corpus.head._2.length
     val zero = Seq.fill(d)(0.0)
     val s0 = spark; import s0.implicits._
-    val v = e.select(col("vec_id"),
-        Similarity.asDouble(col("embedding")).as("v"))
-      .unionByName(Seq((1000000L, zero)).toDF("vec_id", "v"))
-    val data = LloydReplay.corpus(e) :+ (1000000L -> zero.toArray)
-    def got(df: DataFrame) = df.orderBy(col("vec_id"), col("probe"))
-      .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1),
-        r.getLong(2), r.getDouble(3), r.getInt(4)))
     for (nc <- Seq(7, 40)) {
-      val cent = Similarity.kmeansCentroidSeq(e, numCells = nc, iters = 2) :+
-        (1000L -> zero)
+      val trained = Similarity.kmeansCentroidSeq(e, numCells = nc, iters = 2)
+      val c0 = trained.head._2
+      // pins: a zero-norm centroid scores 0.0 against every vector, and so
+      // does an all -0.0 one (its norm is 0.0); a zero-norm vector ties at
+      // 0.0 on every cell, so the lowest cids win. An exact tie: cid 1001
+      // is a copy of the first centroid, so every vector scores the two
+      // equally and the lower cid ranks first. -0.0 entries in a vector
+      // and a centroid compare as 0.0.
+      val cent = trained ++ Seq(1000L -> zero, 1001L -> c0,
+        1002L -> Seq.fill(d)(-0.0), 1003L -> (-0.0 +: c0.tail))
+      val extra = Seq(1000000L -> zero, 1000001L -> c0.map(-_),
+        1000002L -> (-0.0 +: c0.tail.map(_ * 0.5)))
+      val v = e.select(col("vec_id"),
+          Similarity.asDouble(col("embedding")).as("v"))
+        .unionByName(extra.toDF("vec_id", "v"))
+      val data = corpus ++ extra.map { case (id, x) => id -> x.toArray }
       val centRel = Similarity.centroidRelation(spark, cent)
       for (probes <- Seq(1, 3)) {
         val want = LloydReplay.assign(data, cent, probes)
-        val join = Similarity.assignCellsRelation(v, centRel, probes)
-        assert(join.columns.toSeq == Seq("vec_id", "v", "cell", "sim", "probe"))
-        assert(got(join) == want,
+        val asn = Similarity.assignCellsRelation(v, centRel, probes)
+        assert(asn.columns.toSeq == Seq("vec_id", "v", "cell", "sim", "probe"))
+        val got = asn.orderBy(col("vec_id"), col("probe"))
+          .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Double](1),
+            r.getLong(2), r.getDouble(3), r.getInt(4)))
+        assert(got == want,
           s"assignCellsRelation ≠ replay at $nc cells, probes=$probes")
-        assert(got(Similarity.assignCellsRelationArr(v, centRel, probes)) == want,
-          s"assignCellsRelationArr ≠ replay at $nc cells, probes=$probes")
+        // the fixture must exercise the tie: some vector ranks 1001
+        // right after the centroid it copies
+        if (probes == 3)
+          assert(want.sliding(2).exists {
+            case Seq(a, b) => a._1 == b._1 && a._3 == trained.head._1 &&
+              b._3 == 1001L && a._4 == b._4
+            case _ => false
+          }, s"no exact tie exercised at $nc cells")
       }
     }
   }
@@ -80,8 +94,8 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val v = e.select(col("vec_id"),
       Similarity.asDouble(col("embedding")).as("v"))
     val empty = Similarity.centroidRelation(spark, Nil)
-    assert(Similarity.assignCellsRelation(v, empty, 1).count() == 0L)
-    assert(Similarity.assignCellsRelationArr(v, empty, 1).count() == 0L)
+    for (probes <- Seq(1, 3))
+      assert(Similarity.assignCellsRelation(v, empty, probes).count() == 0L)
   }
 
   test("ivfIndexMaintain: decision thresholds, rebuild = full retrain, persistence round-trip") {
@@ -200,13 +214,10 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Every search op's analyzed plan has EXACTLY the same expression
     // count at a small and a large index: the index rides broadcast
     // relations (LocalRelation rows are data, not expressions), so
-    // nothing in the plan scales with cells or codewords. The
-    // assignment shape switches at DenseCellsThreshold (join + max_by
-    // below, codeword array at or above), so each shape is compared at
-    // two geometries of its own: 8 cells / 4×8 vs 16 cells / 4×32 and
-    // 32 cells / 4×8 vs 64 cells / 4×32. Zero Lloyd iterations: the
-    // seeds are the index, and training stays out of the plan either
-    // way.
+    // nothing in the plan scales with cells or codewords. Two pairs of
+    // geometries: 8 cells / 4×8 vs 16 cells / 4×32 and 32 cells / 4×8 vs
+    // 64 cells / 4×32. Zero Lloyd iterations: the seeds are the index,
+    // and training stays out of the plan either way.
     val e = embeddings
     val q = e.filter(col("vec_id") < 3)
     def exprCount(df: DataFrame): Int =
@@ -228,8 +239,6 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "semanticDedup" -> ((nc, _) => Similarity.semanticDedup(e, 0.4, nc, 0)),
       "clusterBalancedSample" -> ((nc, _) =>
         Similarity.clusterBalancedSample(e, 40, nc, 0)))
-    assert(16 < Similarity.DenseCellsThreshold &&
-      Similarity.DenseCellsThreshold <= 32)
     val grown = for {
       (name, op) <- ops
       ((nc0, ck0), (nc1, ck1)) <- Seq((8, 8) -> (16, 32), (32, 8) -> (64, 32))

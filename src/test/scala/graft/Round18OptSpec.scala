@@ -5,7 +5,11 @@ import graft.operators.Similarity.LloydBook
 import org.apache.spark.GraftListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -21,14 +25,15 @@ import org.scalatest.BeforeAndAfterAll
   *    the per-subspace kmeansCentroidSeq recurrence it replaced.
   *  - encodeViaRelation (the PQ encode every IVF-PQ path runs): the
   *    (vec_id, sub, code) rows of an independent driver replay.
+  *  - ivfPqEncode: the replayed cell and codes of every vector, in one
+  *    map-only pass (no exchange, no aggregate in its plan).
   *  - lloydBooks (the one Lloyd trainer): joint training of the coarse
   *    cells and the PQ codebooks equals separate one-book and
   *    numSub-book calls, and both equal an independent driver-side
-  *    replay ([[LloydReplay]]) — at q193's geometry (join + max_by
-  *    argmax) and at a dense one (codeword-array argmax), with unequal
-  *    iteration counts too. Its per-iteration plan does not grow with
-  *    the index geometry, and an IndexStore build runs a bounded number
-  *    of Spark jobs.
+  *    replay ([[LloydReplay]]) — at q193's 8 cells and at 40, with
+  *    unequal iteration counts too. Its per-iteration plan does not grow
+  *    with the index geometry and shuffles only the small means, and an
+  *    IndexStore build runs an exact number of Spark jobs.
   */
 class Round18OptSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -119,20 +124,15 @@ class Round18OptSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(coarse != LloydReplay.train(data, 0, d, numCells, 0), geom)
   }
 
-  test("joint, separate and replayed training agree at q193's geometry (join argmax)") {
-    assert(8 < Similarity.DenseCellsThreshold)
+  test("joint, separate and replayed training agree at q193's geometry (8 cells)") {
     checkGeometry(numCells = 8, cellIters = 2, numSub = 4, codebookK = 8,
       pqIters = 2)
     checkGeometry(numCells = 8, cellIters = 2, numSub = 4, codebookK = 8,
       pqIters = 1)
   }
 
-  test("joint, separate and replayed training agree at a dense geometry (array argmax)") {
-    val dense = 40
-    assert(dense >= Similarity.DenseCellsThreshold)
-    // joint: the 40-cell book makes every book take the array form,
-    // while the separate 4×8 call takes the join form
-    checkGeometry(numCells = dense, cellIters = 2, numSub = 4,
+  test("joint, separate and replayed training agree at 40 cells") {
+    checkGeometry(numCells = 40, cellIters = 2, numSub = 4,
       codebookK = 8, pqIters = 1)
     // 8×32: the codebook geometry whose literal argmax outgrew codegen
     val (w, books) = Similarity.pqCodebooks(embeddings, 8, 32, 1)
@@ -141,27 +141,46 @@ class Round18OptSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the per-iteration Lloyd plan has the same size at 4×8 and 8×32") {
-    val v = embeddings.select(col("vec_id"),
-      Similarity.asDouble(col("embedding")).as("v"))
     def exprCount(df: DataFrame): Int =
       df.queryExecution.optimizedPlan.collect { case p =>
         p.expressions.map(_.collect { case e => e }.size).sum
       }.sum
-    def stepPlan(numSub: Int, codebookK: Int, dense: Boolean): DataFrame = {
-      val books = LloydBook(0, 0, 1, 8, 0) +:
-        (0 until numSub).map(s => LloydBook(1 + s, s, numSub, codebookK, 0))
-      // iters = 0: the seeds are the centroids the first step assigns to
-      val (_, seeds) = Similarity.lloydBooks(embeddings, books)
-      val span = books.map(b => b.id -> (b.part * (d / b.parts), d / b.parts))
-      Similarity.lloydStep(Similarity.lloydSlices(v, span),
-        books.map(b => b.id -> seeds(b.id)), dense)
-    }
-    for (dense <- Seq(false, true)) {
-      val small = exprCount(stepPlan(4, 8, dense))
-      val large = exprCount(stepPlan(8, 32, dense))
-      assert(small == large,
-        s"dense=$dense: plan grows with the index ($small → $large)")
-    }
+    val small = exprCount(stepPlan(4, 8))
+    val large = exprCount(stepPlan(8, 32))
+    assert(small == large, s"plan grows with the index ($small → $large)")
+  }
+
+  /** One Lloyd iteration over q193's coarse book and `numSub`×`codebookK`
+    * codebooks, at their seeds. */
+  private def stepPlan(numSub: Int, codebookK: Int): DataFrame = {
+    val v = embeddings.select(col("vec_id"),
+      Similarity.asDouble(col("embedding")).as("v"))
+    val books = LloydBook(0, 0, 1, 8, 0) +:
+      (0 until numSub).map(s => LloydBook(1 + s, s, numSub, codebookK, 0))
+    // iters = 0: the seeds are the centroids the first step assigns to
+    val (_, seeds) = Similarity.lloydBooks(embeddings, books)
+    val span = books.map(b => b.id -> (b.part * (d / b.parts), d / b.parts))
+    Similarity.lloydStep(Similarity.lloydSlices(v, span),
+      books.map(b => b.id -> seeds(b.id)))
+  }
+
+  /** The physical plan with AQE off, so it is final before execution. */
+  private def physical(df: => DataFrame): SparkPlan = {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try df.queryExecution.executedPlan
+    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("a Lloyd iteration shuffles twice, never an array<double>") {
+    val plan = physical(stepPlan(4, 8))
+    val shuffles = plan.collect { case x: ShuffleExchangeLike => x }
+    assert(shuffles.size == 2, s"expected the two means exchanges:\n$plan")
+    val arrays = shuffles.flatMap(_.output).filter(_.dataType match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    })
+    assert(arrays.isEmpty, s"an exchange carries vectors: $arrays")
+    assert(plan.collect { case a: BaseAggregateExec => a }.nonEmpty)
   }
 
   test("IndexStore.buildIvfPq at one Lloyd iteration runs fewer than 20 jobs") {
@@ -184,7 +203,9 @@ class Round18OptSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val n = listener.synchronized(jobs)
     info(s"buildIvfPq ran $n jobs")
-    assert(n > 0 && n < 20, s"buildIvfPq ran $n jobs")
+    // exact, not a ceiling: any change in the build's job count is a
+    // plan change to look at
+    assert(n == 14, s"buildIvfPq ran $n jobs")
   }
 
   test("encodeViaRelation equals the driver-replayed PQ encode (4×8)") {
@@ -202,23 +223,34 @@ class Round18OptSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == LloydReplay.encode(data, w, pinned))
   }
 
-  test("assignCellsRelationArr equals assignCellsRelation on both probes branches") {
-    val e = Tables.embeddings(spark, sf)
-    val v = e.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val cent = Similarity.kmeansCentroidSeq(e, numCells = 8, iters = 1)
-    val rel = Similarity.centroidRelation(spark, cent)
-    for (probes <- Seq(1, 3)) {
-      val a = Similarity.assignCellsRelation(v, rel, probes)
-        .collect().map(_.toString).sorted.toSeq
-      val b = Similarity.assignCellsRelationArr(v, rel, probes)
-        .collect().map(_.toString).sorted.toSeq
-      assert(a == b, s"probes=$probes diverges")
+  test("ivfPqEncode equals the replayed cells and codes in one map-only pass") {
+    val (coarse, w, books) = Similarity.ivfPqBooks(embeddings, numCells = 8,
+      cellIters = 1, numSub = 4, codebookK = 8, pqIters = 1)
+    val centRel = Similarity.centroidRelation(spark, coarse)
+    val bookRel = Similarity.codebookRelation(spark, w, books)
+    val cells = LloydReplay.assign(data, coarse, 1).map(a => a._1 -> a._3).toMap
+    val cv = coarse.toMap
+    for (kind <- Seq(IndexStore.KindPq, IndexStore.KindPqResidual)) {
+      val enc = Similarity.ivfPqEncode(embeddings, centRel, bookRel, kind, 4, w)
+      assert(enc.columns.toSeq == Seq("vec_id", "sub", "code", "cell"))
+      val got = enc.collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+        .sorted.toSeq
+      // residual: x − c(x), elementwise, as the encode subtracts
+      val encoded =
+        if (kind == IndexStore.KindPq) data
+        else data.map { case (id, x) =>
+          id -> x.zip(cv(cells(id))).map { case (a, b) => a - b } }
+      val want = LloydReplay.encode(encoded, w, books)
+        .map { case (id, sub, code) => (id, sub, code, cells(id)) }
+      assert(got == want, s"$kind encode ≠ replay")
+      val plan = physical(
+        Similarity.ivfPqEncode(embeddings, centRel, bookRel, kind, 4, w))
+      assert(plan.collect { case x: ShuffleExchangeLike => x }.isEmpty,
+        s"$kind encode shuffles:\n$plan")
+      assert(plan.collect { case a: BaseAggregateExec => a }.isEmpty,
+        s"$kind encode aggregates:\n$plan")
     }
-    // empty relation: both shapes yield an empty result
-    val empty = rel.filter(col("cid") < 0)
-    assert(Similarity.assignCellsRelationArr(v, empty, 1).count() == 0L)
-    assert(Similarity.assignCellsRelation(v, empty, 1).count() == 0L)
   }
 
   test("connectedComponents returned frame survives the loop caches being dropped") {
