@@ -65,12 +65,6 @@ object Meters {
     "purchase" -> Seq("Value"),
     "error" -> Seq("Value"))
 
-  /** The registered column names of one series (≙ the registration
-    * document the reference stores per collection).
-    */
-  def seriesSchema(series: String): Seq[String] =
-    defaultRegistry.getOrElse(series, Seq.empty)
-
   /** Derive the deterministic meters dimension from the events table
     * (the driver testdata ships no meters parquet; every attribute is a
     * pure function of user_id so the DuckDB oracle reproduces it

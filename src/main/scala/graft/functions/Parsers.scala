@@ -81,17 +81,6 @@ object Parsers {
     instant.getEpochSecond * 1000000L + instant.getNano / 1000L
   }
 
-  /** Column twin for bulk parsing: wall-clock text in `zone` → UTC
-    * timestamp (to_timestamp parses in the session zone — always UTC
-    * here — so the result is reinterpreted from the site zone).
-    */
-  def localTimestamp(
-      text: org.apache.spark.sql.Column,
-      fmt: String,
-      zone: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.to_utc_timestamp(
-      org.apache.spark.sql.functions.to_timestamp(text, fmt), zone)
-
   // -------------------------------------------------------------------
   // S15 — Weewx dynamic series discovery (WeewxLogger.cs:37-50): the
   // scraped current-conditions rows become the series registry at

@@ -351,9 +351,9 @@ object Curation {
       rates: Map[String, (Int, Int)],
       defaultNum: Int = 1, defaultDen: Int = 2,
       seed: Int = 42): DataFrame = {
-    // no terminal sort: the body must stay streaming-legal (it IS the
-    // streaming twin, Ingest.sampleStream) — batch callers order at
-    // the query level, the gopherRules discipline
+    // no terminal sort: the body must stay streaming-legal (StreamingSpec
+    // runs it on a MemoryStream) — batch callers order at the query
+    // level, the gopherRules discipline
     docs.select(col(idCol).as("doc_id"), col(sourceCol).as("source"))
       .withColumn("kept",
         sampleKeptCol(idCol, sourceCol, rates, defaultNum, defaultDen, seed))
@@ -977,8 +977,8 @@ object Curation {
     * proportional to the temperature weights (up to the den-grid
     * floor), where a min(1, target/current) clip would silently miss
     * the target wherever the target upsamples. Feed the (num, den)
-    * pairs straight into `seededSourceSample` / `Ingest.sampleStream`
-    * and the persisted corpus lands on the temperature mixture —
+    * pairs straight into `seededSourceSample` (batch or stream) and
+    * the persisted corpus lands on the temperature mixture —
     * planning and execution in the same integer arithmetic, so the
     * oracle replays the plan bit-for-bit.
     *

@@ -1586,8 +1586,8 @@ object Dedup {
     * predicate pushdown into an O(m³) interpreted tree — see the
     * kernel's docstring). Downstream shuffles see only the selected
     * ~2m/(w+1) fingerprints per doc. Being per-document and
-    * stateless, the same body IS the streaming twin
-    * (Ingest.winnowStream). Envelope: 48-bit hashes ⇒ expected
+    * stateless, the operator is streaming-legal (StreamingSpec runs
+    * it on a MemoryStream). Envelope: 48-bit hashes ⇒ expected
     * cross-doc collisions V²/2⁴⁹ (V = distinct grams) — below one
     * until V ≈ 2×10⁷; raise to the full 16-hex prefix if a
     * trillion-gram corpus needs it. The 32767 position bound caps

@@ -121,9 +121,9 @@ object TextOps {
     * ID, and word-repetition fraction scored per document, plus a
     * `keep` boolean from the thresholds. Every signal is a per-row
     * Column expression, so the plan is scan-speed with NO shuffle —
-    * which is also why the SAME function body serves as the streaming
-    * twin (`streaming.Ingest.curationStream` delegates here): stateless
-    * per-document math runs unchanged on a micro-batch. Filter-first
+    * which is also why it is streaming-legal: stateless per-document
+    * math runs unchanged on a micro-batch (StreamingSpec runs it on a
+    * MemoryStream against the batch result). Filter-first
     * ordering is deliberate — cross-document work (dedup) runs AFTER
     * this verdict has shrunk the corpus, never before.
     */
@@ -582,7 +582,8 @@ object TextOps {
   /** Bucketed grams → (r, b, c) sketch cells. The groupBy key space is
     * depth·width regardless of vocabulary, which is the whole point —
     * and also why this works UNCHANGED as a streaming aggregation with
-    * permanently bounded state (Ingest.cmsSketchStream).
+    * permanently bounded state (StreamingSpec pins the running sketch
+    * to the batch sketch).
     */
   def cmsCellsOf(bucketed: DataFrame, depth: Int): DataFrame =
     bucketed
@@ -653,9 +654,10 @@ object TextOps {
   /** Bucketed occurrences → (grp, bucket, rho) registers: max(rho) per
     * register, the HLL state. The groupBy key space is 256·groups
     * regardless of vocabulary — and, like the CMS cells, max is an
-    * idempotent monoid, so the SAME body is the streaming aggregation
-    * with permanently bounded state (Ingest.hllSketchStream), and
-    * region-sharded register sets union by max before estimating.
+    * idempotent monoid, so the SAME body is a streaming aggregation
+    * with permanently bounded state (StreamingSpec pins it to the
+    * batch registers), and region-sharded register sets union by max
+    * before estimating.
     */
   def hllRegisters(bucketed: DataFrame): DataFrame =
     bucketed.groupBy("grp", "bucket").agg(max("rho").as("rho"))
@@ -960,9 +962,8 @@ object TextOps {
     val rMl = meanLen >= minMeanLen && meanLen <= maxMeanLen
     val rSt = stopHits >= minStopHits
     val rRep = topFrac <= maxTopFrac
-    // no terminal sort: the body must stay streaming-legal (it IS the
-    // streaming twin, Ingest.gopherStream) — batch callers order at the
-    // query level
+    // no terminal sort: the body must stay streaming-legal (StreamingSpec
+    // runs it on a MemoryStream) — batch callers order at the query level
     docs.select(col(idCol).as("doc_id"),
         nWords.as("n_words"), meanLen.as("mean_word_len"),
         stopHits.as("n_stop_distinct"), topFrac.as("top_frac"),
@@ -1766,7 +1767,7 @@ object TextOps {
     * that fixed order), and a keep verdict (= no PII found — the
     * drop-mode gate; production pipelines usually persist the redacted
     * column instead). Pure per-row regex at scan speed, zero shuffle,
-    * streaming-legal (twin: `Ingest.piiStream`).
+    * streaming-legal (Round11OpsSpec runs it on a MemoryStream).
     *
     * The synthetic fixture corpus contains no PII, so the oracle gate
     * verifies the all-zero profile plus md5(redacted) == md5(text);

@@ -35,21 +35,6 @@ object TimeSeriesOps {
     truncateTo(ts, intervalMillis)
 
   // ---------------------------------------------------------------------
-  // A1/A2 — time-bucketed aggregation
-  // (ref: RandomQueries/Program.cs:71-75 — GroupBy(Hours(1)).Average();
-  //  RandomQueries/ZeroExport.cs:86-104 — per-minute client-side re-impl).
-  // One shuffle; map-side partial aggregation is automatic.
-  // ---------------------------------------------------------------------
-  def bucketedAgg(
-      df: DataFrame,
-      tsCol: Column,
-      intervalMillis: Long,
-      keys: Seq[Column],
-      aggs: Seq[Column]): DataFrame =
-    df.groupBy(keys :+ bucket(tsCol, intervalMillis).as("bucket"): _*)
-      .agg(aggs.head, aggs.tail: _*)
-
-  // ---------------------------------------------------------------------
   // A3 — last entry of a series (ref: KasaLogger.cs:59-68 `ts.Last()`).
   // max_by over a struct keeps a single shuffle + partial agg; no global
   // sort. At 100 TB this is the idiomatic "latest value per device".
@@ -114,23 +99,6 @@ object TimeSeriesOps {
     df.groupBy(bucket(tsCol, intervalMillis).as("bucket"))
       .pivot(seriesCol, seriesNames)
       .agg(avg(valueCol))
-
-  // ---------------------------------------------------------------------
-  // A6 — percentile over a trailing window
-  // (ref: Deploy/switchboiler.sh — RQL `select percentile(50)` over
-  // `last 5 minutes`). Exact percentile for oracle parity; callers at
-  // scale swap in percentile_approx (same signature).
-  // ---------------------------------------------------------------------
-  def trailingPercentile(
-      df: DataFrame,
-      keys: Seq[Column],
-      tsCol: Column,
-      valueCol: Column,
-      cutoff: Column,
-      p: Double): DataFrame =
-    df.filter(tsCol >= cutoff)
-      .groupBy(keys: _*)
-      .agg(percentile(valueCol, lit(p)).as("pct"))
 
   // ---------------------------------------------------------------------
   // J5 / W5 — rate from a cumulative counter

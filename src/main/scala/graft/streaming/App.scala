@@ -300,7 +300,8 @@ object App {
     * upsert. Only meter IDs ride the stream; the doc merge reads the
     * snapshot, flips the bit, and rewrites through the staged swap
     * (`Ingest.swapSnapshot`) so a crash mid-write keeps the previous
-    * snapshot readable.
+    * snapshot readable; a crash between the swap's two renames is
+    * undone by `Ingest.restoreSnapshot` before the next batch reads.
     */
   def pollHealthSink(
       readings: DataFrame, metersDir: String, checkpointDir: String) =
@@ -310,6 +311,7 @@ object App {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val polled = batch.select(col("meterId")).distinct()
+        Ingest.restoreSnapshot(spark, metersDir)
         val current = spark.read.parquet(metersDir)
         val updates = current.join(polled, "meterId")
           .withColumn("lastPollSuccessful", lit(true))

@@ -109,22 +109,6 @@ object Ingest {
       .dropDuplicatesWithinWatermark("i", "j")
   }
 
-  /** The text-curation pipeline's streaming twin: the same scan-speed
-    * Column expressions the batch queries use (q14-q16, q51 operators)
-    * applied to a document stream — language ID, quality signals, and
-    * the keep/drop verdict computed per micro-batch with NO state and
-    * NO shuffle, so an ingest crawl can be scored and filtered at wire
-    * speed before anything is persisted. Stateless by construction:
-    * every signal is per-document, which is exactly why this runs as a
-    * stream without watermarks (contrast dedupStream, whose cross-
-    * document semantics need keyed state).
-    */
-  def curationStream(
-      docs: DataFrame,
-      minTokens: Int = 5,
-      maxDupWordFrac: Double = 0.9): DataFrame =
-    graft.operators.TextOps.curationVerdict(docs, minTokens, maxDupWordFrac)
-
   /** The composed ingest-side curation chain — every STATELESS stage
     * of [[graft.CurationPipeline]] fused into one per-document
     * projection a crawl stream runs at wire speed: Gopher rules (L72)
@@ -135,9 +119,10 @@ object Ingest {
     * shuffle, no state, identical decisions on replay — so the chain
     * composes with exactly-once sinks and with the stream-static
     * stages (chunk dedup L111, contamination L6) that need a static
-    * index. The batch operators ARE the stage bodies (the
-    * gopherStream discipline); the dedup and perplexity stages stay
-    * batch-side by design — they need corpus-wide state.
+    * index. Each stage body is its batch operator's Column core, so
+    * there is no second implementation to drift; the dedup and
+    * perplexity stages stay batch-side by design — they need
+    * corpus-wide state.
     */
   def curationChainStream(
       docs: DataFrame,
@@ -181,93 +166,6 @@ object Ingest {
           && col("keep_entropy") && col("keep_classifier")
           && col("keep_pii") && col("keep_sample"))
   }
-
-  /** L72's streaming twin — the Gopher rule gate applied at ingest
-    * time, so a crawl stream carries its keep/drop verdict from the
-    * first moment it exists (per-document, stateless, shuffle-free;
-    * the batch body IS the twin — no second implementation to drift,
-    * the curationStream/chunkStream discipline).
-    */
-  def gopherStream(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    graft.operators.TextOps.gopherRules(docs, idCol, textCol)
-
-  /** L84's streaming twin — the blocklist gate applied at ingest time
-    * (per-document, stateless, shuffle-free; the batch body IS the
-    * twin, the gopherStream discipline). A crawl stream drops
-    * blocklisted documents before anything is persisted — the filter
-    * every production ingest runs FIRST, since it's the cheapest.
-    */
-  def blocklistStream(
-      docs: DataFrame,
-      blocklist: Seq[String],
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      maxHits: Int = 0): DataFrame =
-    graft.operators.TextOps.blocklistFilter(docs, idCol, textCol,
-      blocklist, maxHits)
-
-  /** L117's streaming twin — the duplicate-n-gram repetition gate at
-    * ingest time (per-document, stateless, shuffle-free; the batch
-    * body IS the twin, the gopherStream discipline): loop/spam text
-    * is flagged before it is ever persisted.
-    */
-  def dupNgramStream(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    graft.operators.TextOps.duplicateNgramFraction(docs, idCol, textCol)
-
-  /** The token-entropy gate (L-series q155) at ingest time — same
-    * stateless per-document discipline; the order-pinned fold runs
-    * identically in a micro-batch.
-    */
-  def entropyStream(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    graft.operators.TextOps.tokenEntropyGate(docs, idCol, textCol)
-
-  /** L122's streaming twin — the hashed linear classifier scored at
-    * ingest (the fastText-shape gate is a pure per-row fold, so the
-    * learned quality filter runs on the stream with zero state).
-    */
-  def classifierStream(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    graft.operators.TextOps.hashedLinearQuality(docs, idCol, textCol)
-
-  /** L129's streaming twin — PII detection/redaction applied at ingest
-    * so nothing un-redacted ever persists. Pure per-row regex:
-    * stateless, shuffle-free, identical verdicts on replay.
-    */
-  def piiStream(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    graft.operators.TextOps.piiRedactGate(docs, idCol, textCol)
-
-  /** L81's streaming twin — the seeded per-source downsample applied
-    * at ingest time: a crawl stream is mixture-rebalanced as it
-    * arrives (kept iff 16-bit md5(doc_id:seed) prefix · den < 65536 ·
-    * num), so the persisted corpus already HAS the target mixture.
-    * Per-document, stateless, shuffle-free, and deterministic in
-    * doc_id — a replayed micro-batch reaches the same verdicts, so
-    * the sample composes with exactly-once sinks.
-    */
-  def sampleStream(
-      docs: DataFrame,
-      rates: Map[String, (Int, Int)],
-      idCol: String = "doc_id",
-      sourceCol: String = "source",
-      defaultNum: Int = 1,
-      defaultDen: Int = 2,
-      seed: Int = 42): DataFrame =
-    graft.operators.Curation.seededSourceSample(docs, idCol, sourceCol,
-      rates, defaultNum, defaultDen, seed)
 
   /** L6's streaming twin — ingest-time benchmark contamination guard:
     * every arriving document is probed against the STATIC benchmark
@@ -353,87 +251,6 @@ object Ingest {
         slice(col("__w"), col("__s") + 1, lit(maxLen)))).as("h"))
       .distinct()
   }
-
-  /** L61's streaming twin — a running count-min sketch over the bigram
-    * stream. The aggregation state is the depth×width cell grid
-    * (3072 counters by default): FIXED SIZE by construction, so unlike
-    * every other keyed-state twin this one needs no watermark to stay
-    * bounded on an unbounded crawl — the sketch simply keeps absorbing
-    * occurrences, and any batch can read heavy-hitter estimates off the
-    * current cells (min over rows; never an undercount, the batch
-    * operator's exact-verify contract applies when candidates are
-    * re-counted). Run in update/complete output mode.
-    */
-  def cmsSketchStream(
-      docs: DataFrame,
-      textCol: String = "text",
-      depth: Int = 3,
-      width: Int = 1024): DataFrame =
-    graft.operators.TextOps.cmsCellsOf(
-      graft.operators.TextOps.cmsBucketed(docs, textCol, depth, width), depth)
-
-  /** L90's streaming twin — HyperLogLog registers as a streaming
-    * aggregation (the cmsSketchStream discipline): max(rho) per
-    * (group, bucket) over the same md5-derived front half the batch
-    * estimate uses, so state is permanently bounded at 256 rows per
-    * group on an unbounded crawl — no watermark needed, max is an
-    * idempotent monoid, replayed micro-batches are absorbed. Any
-    * batch can read a per-source vocabulary estimate off the current
-    * registers at any time; register sets from independent
-    * streams/shards union by the same max before estimating.
-    * Run in update/complete output mode.
-    */
-  def hllSketchStream(
-      docs: DataFrame,
-      textCol: String = "text",
-      groupCol: String = "source"): DataFrame =
-    graft.operators.TextOps.hllRegisters(
-      graft.operators.TextOps.hllBucketed(docs, textCol, groupCol))
-
-  /** L88's streaming twin — winnowed MOSS fingerprints emitted at
-    * ingest: the selection is computed entirely on the document row
-    * (array higher-order functions, the chunkStream flatMap shape),
-    * so a crawl stream carries each document's fingerprint set from
-    * the moment it arrives — ready for a stream-static overlap join
-    * against an indexed corpus. Stateless, shuffle-free, append mode;
-    * the batch body IS the twin.
-    */
-  def winnowStream(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      k: Int = 3,
-      w: Int = 4): DataFrame =
-    graft.operators.Dedup.winnowedFingerprints(docs, idCol, textCol, k, w)
-
-  /** L95's streaming twin — train/valid/test assignment at ingest:
-    * the same pure map-side md5-cutoff verdict (stateless,
-    * shuffle-free, deterministic in doc_id), so an arriving crawl
-    * stream routes to split-partitioned sinks immediately and a
-    * replayed micro-batch reaches identical verdicts. The batch body
-    * IS the twin.
-    */
-  def splitStream(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      sourceCol: String = "source",
-      cut1: Int = 52429,
-      cut2: Int = 58982,
-      seed: Int = 42): DataFrame =
-    graft.operators.Curation.splitAssignment(
-      docs, idCol, sourceCol, cut1, cut2, seed)
-
-  /** Sequence chunking's streaming twin — the same per-document
-    * sequence+posexplode body the batch operator uses (Packing.chunk,
-    * q72), applied to a document stream: stateless, shuffle-free,
-    * flatMap-shaped (one input document → its window rows), so an
-    * ingest crawl can emit training-window plans at wire speed. Like
-    * curationStream, the batch body IS the twin — there is no second
-    * implementation to drift.
-    */
-  def chunkStream(
-      docs: DataFrame, maxLen: Int = 32, stride: Int = 24): DataFrame =
-    graft.operators.Packing.chunk(docs, "doc_id", "text", maxLen, stride)
 
   /** A1's streaming twin: tumbling averages with a watermark; emits
     * finalized windows only (append mode compatible).
@@ -767,26 +584,17 @@ object Ingest {
     ()
   }
 
-  /** S6 — meters document upsert sink: each micro-batch carries full
-    * updated docs (the reference's poll cycle mutates the doc — offset,
-    * poll health — then StoreAsync's the whole document,
-    * KasaLogger.cs:44,73; TapoLogger.cs:77,104). Last-wins merge into
-    * the parquet-backed meters snapshot via the staged swap.
+  /** Undo a [[swapSnapshot]] cut between its two renames: the live dir
+    * is gone and `<dir>.bak` still holds the previous snapshot. Renaming
+    * it back restores the last committed state, so the micro-batch that
+    * crashed (never committed to its checkpoint) re-runs against it.
     */
-  def metersUpsertSink(
-      docUpdates: DataFrame,
-      metersDir: String,
-      checkpointDir: String) =
-    docUpdates.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val current = spark.read.parquet(metersDir)
-        swapSnapshot(
-          graft.Meters.upsert(current, batch.withColumn("_seq", lit(batchId))),
-          metersDir)
-      }
+  private[graft] def restoreSnapshot(spark: SparkSession, dir: String): Unit = {
+    val live = new Path(dir)
+    val bak = new Path(dir + ".bak")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(live) && fs.exists(bak)) fs.rename(bak, live)
+  }
 
   /** S18 actuator sink stub: the control loop's side-effect boundary.
     * The callback receives finalized decisions per micro-batch (in

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -112,25 +113,58 @@ class MetersSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("metersUpsertSink merges micro-batch doc updates into the snapshot") {
+  /** Drives `App.pollHealthSink` with one micro-batch of polled meter
+    * ids against the snapshot in `dir`.
+    */
+  private def pollOnce(dir: String, polled: String*): Unit = {
+    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("meters").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
-    val srcDir = java.nio.file.Files.createTempDirectory("updates").toString
-    Meters.fromEvents(eventsDf).write.mode("overwrite").parquet(dir)
-    // a poll cycle writes one updated doc as a JSON-lines file
-    val schema = spark.read.parquet(dir).schema
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(srcDir, "batch1.json"),
-      """{"meterId":"meters/3","userId":3,"vendorInfo":"SDM630","medium":"Electricity","energyOffset":130.0,"lastPollSuccessful":false,"extendRuns":true,"switchThermostat":false,"desiredModulation":5.0,"minimumFlowTemperature":24.0,"maximumFlowTemperature":30.0,"registers":[],"switchTimePeriods":[]}""")
-    val stream = spark.readStream.schema(schema).json(srcDir)
-    val q = graft.streaming.Ingest.metersUpsertSink(stream, dir, ckpt).start()
-    q.processAllAvailable(); q.stop()
+    val mem = MemoryStream[String]
+    val q = graft.streaming.App.pollHealthSink(mem.toDF().toDF("meterId"), dir, ckpt).start()
+    try {
+      mem.addData(polled: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  /** Writes the meters snapshot with every doc's last poll failed. */
+  private def failedSnapshot(dir: String): Unit =
+    Meters.fromEvents(eventsDf).withColumn("lastPollSuccessful", lit(false))
+      .write.mode("overwrite").parquet(dir)
+
+  private def pollHealth(dir: String): Map[String, Boolean] =
+    spark.read.parquet(dir).collect()
+      .map(r => r.getAs[String]("meterId") -> r.getAs[Boolean]("lastPollSuccessful"))
+      .toMap
+
+  test("pollHealthSink flips lastPollSuccessful only for polled meters") {
+    val dir = java.nio.file.Files.createTempDirectory("meters").toString + "/snap"
+    failedSnapshot(dir)
+    // meters/9 has no doc: the join drops it instead of minting one
+    pollOnce(dir, "meters/3", "meters/5", "meters/3", "meters/9")
+    assert(pollHealth(dir) ==
+      Map("meters/0" -> false, "meters/3" -> true, "meters/5" -> true))
+    // the rest of each doc passes through the upsert unchanged
     val after = spark.read.parquet(dir)
-    assert(after.count() == 3)
     assert(after.filter(col("userId") === 3).collect()(0)
-      .getAs[Double]("energyOffset") == 130.0)
-    assert(after.filter(col("userId") === 0).collect()(0)
-      .getAs[Double]("energyOffset") == 0.0)
+      .getAs[Double]("energyOffset") == 30.0)
+  }
+
+  test("pollHealthSink restores a snapshot cut between swapSnapshot's two renames") {
+    val dir = java.nio.file.Files.createTempDirectory("meters").toString + "/snap"
+    failedSnapshot(dir)
+    // the crash window: rename(live, bak) happened, rename(staged, live)
+    // did not — the staged merge of the uncommitted batch is left over
+    spark.read.parquet(dir).withColumn("lastPollSuccessful", lit(true))
+      .write.parquet(s"$dir.staging")
+    java.nio.file.Files.move(java.nio.file.Paths.get(dir),
+      java.nio.file.Paths.get(s"$dir.bak"))
+    pollOnce(dir, "meters/0")
+    // the old snapshot came back and the batch ran against it, not
+    // against the staged state of the batch that crashed
+    assert(pollHealth(dir) ==
+      Map("meters/0" -> true, "meters/3" -> false, "meters/5" -> false))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir.bak")))
   }
 }

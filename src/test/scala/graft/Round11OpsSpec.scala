@@ -8,6 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{Curation, Dedup, Similarity, TextOps}
 import graft.streaming.Ingest
+import StreamingSpec.streamMatchesBatch
 
 /** Hand-math specs for the round-11 operators (q151–q153). */
 class Round11OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -127,36 +128,14 @@ class Round11OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dupNgram and entropy streaming twins match the batch bodies row-for-row") {
-    implicit val sq = spark.sqlContext
     val s = spark; import s.implicits._
-    val mem = MemoryStream[DocEvent]
-    val q1 = Ingest.dupNgramStream(mem.toDF())
-      .writeStream.format("memory").queryName("dupngram_stream")
-      .outputMode("append").start()
-    val q2 = Ingest.entropyStream(mem.toDF())
-      .writeStream.format("memory").queryName("entropy_stream")
-      .outputMode("append").start()
-    try {
-      val input = Seq(
-        DocEvent(1L, "a b a b a b", new java.sql.Timestamp(1000L)),
-        DocEvent(2L, "x y z w", new java.sql.Timestamp(2000L)))
-      mem.addData(input: _*)
-      q1.processAllAvailable(); q2.processAllAvailable()
-      val sg = spark.table("dupngram_stream")
-        .select("doc_id", "dup_frac_2", "keep").collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2))).toSet
-      val bg = TextOps.duplicateNgramFraction(input.toDF(), "doc_id", "text")
-        .select("doc_id", "dup_frac_2", "keep").collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getBoolean(2))).toSet
-      assert(sg == bg && sg.nonEmpty)
-      val se = spark.table("entropy_stream")
-        .select("doc_id", "norm_entropy").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSet
-      val be = TextOps.tokenEntropyGate(input.toDF(), "doc_id", "text")
-        .select("doc_id", "norm_entropy").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(se == be && se.nonEmpty)
-    } finally { q1.stop(); q2.stop() }
+    val input = Seq(Seq(
+      DocEvent(1L, "a b a b a b", new java.sql.Timestamp(1000L)),
+      DocEvent(2L, "x y z w", new java.sql.Timestamp(2000L))))
+    assert(streamMatchesBatch(spark,
+      TextOps.duplicateNgramFraction(_, "doc_id", "text"), input).nonEmpty)
+    assert(streamMatchesBatch(spark,
+      TextOps.tokenEntropyGate(_, "doc_id", "text"), input).nonEmpty)
   }
 
   private def md5Hex(s: String): String =
@@ -340,53 +319,22 @@ class Round11OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out(1).getString(6) == m("ssn <SSN> from <IP> and <IP>"))
     assert(out(2).getString(6) ==
       m("totally clean text with numbers 12345 and v1.2 only"))
-    // streaming twin: identical verdicts per micro-batch
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[DocEvent]
-    val q = Ingest.piiStream(mem.toDF())
-      .writeStream.format("memory").queryName("pii_stream")
-      .outputMode("append").start()
-    try {
-      val input = Seq(
+    // streaming-legal: identical verdicts per micro-batch
+    val streamed = streamMatchesBatch(spark,
+      TextOps.piiRedactGate(_, "doc_id", "text"), Seq(Seq(
         DocEvent(1L, "mail me a@b.io now", new java.sql.Timestamp(1000L)),
-        DocEvent(2L, "clean", new java.sql.Timestamp(2000L)))
-      mem.addData(input: _*)
-      q.processAllAvailable()
-      val sg = spark.table("pii_stream")
-        .select("doc_id", "pii_total", "redacted_md5", "keep").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-          r.getBoolean(3))).toSet
-      val bg = TextOps.piiRedactGate(input.toDF(), "doc_id", "text")
-        .select("doc_id", "pii_total", "redacted_md5", "keep").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-          r.getBoolean(3))).toSet
-      assert(sg == bg && sg.nonEmpty)
-    } finally { q.stop() }
+        DocEvent(2L, "clean", new java.sql.Timestamp(2000L)))))
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("keep")).toMap
+    assert(streamed == Map(1L -> false, 2L -> true))
   }
 
-  test("classifierStream twin matches the batch body row-for-row") {
-    implicit val sq = spark.sqlContext
+  test("hashedLinearQuality on a stream matches the batch body") {
     val s = spark; import s.implicits._
-    val mem = MemoryStream[DocEvent]
-    val q = Ingest.classifierStream(mem.toDF())
-      .writeStream.format("memory").queryName("classifier_stream")
-      .outputMode("append").start()
-    try {
-      val input = Seq(
+    assert(streamMatchesBatch(spark,
+      TextOps.hashedLinearQuality(_, "doc_id", "text"), Seq(Seq(
         DocEvent(1L, "a b c d e", new java.sql.Timestamp(1000L)),
-        DocEvent(2L, "table scan merge join", new java.sql.Timestamp(2000L)))
-      mem.addData(input: _*)
-      q.processAllAvailable()
-      val sg = spark.table("classifier_stream")
-        .select("doc_id", "score_int", "prob", "keep").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getBoolean(3))).toSet
-      val bg = TextOps.hashedLinearQuality(input.toDF(), "doc_id", "text")
-        .select("doc_id", "score_int", "prob", "keep").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-          r.getBoolean(3))).toSet
-      assert(sg == bg && sg.nonEmpty)
-    } finally { q.stop() }
+        DocEvent(2L, "table scan merge join", new java.sql.Timestamp(2000L)))))
+      .nonEmpty)
   }
 
   test("CurationPipeline modelGates: survivors honor classifier/perplexity/PII, subset of base run") {

@@ -1,15 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import graft.operators.{Curation, Dedup, Packing, TextOps}
 import graft.streaming.Ingest
 import graft.streaming.Ingest.Reading
+import StreamingSpec.streamMatchesBatch
 
 /** Streaming twins vs their batch kernels: windowed averages with
-  * watermark and the per-meter trapezoid interpolation state.
+  * watermark and the per-meter trapezoid interpolation state. Stateless
+  * batch operators are run as they are on a MemoryStream and checked
+  * against the same rows as a static frame (`streamMatchesBatch`).
   */
 case class DocEvent(doc_id: Long, text: String, ts: java.sql.Timestamp)
 case class SourcedDoc(doc_id: Long, text: String, source: String)
@@ -31,6 +37,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def reading(meter: String, sec: Long, v: Double): Reading =
     Reading(meter, "Power", new java.sql.Timestamp(sec * 1000L), Seq(v), "W")
+
+  private def doc(id: Long, text: String): DocEvent =
+    DocEvent(id, text, new java.sql.Timestamp(id * 1000L))
 
   test("streaming dedup admits first occurrence only, keyed by content hash") {
     implicit val sq = spark.sqlContext
@@ -102,31 +111,15 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("gopher stream gates documents at ingest, matching the batch body row-for-row") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val mem = MemoryStream[DocEvent]
-    val q = Ingest.gopherStream(mem.toDF())
-      .writeStream.format("memory").queryName("gopher")
-      .outputMode("append").start()
-    try {
-      def doc(id: Long, text: String) =
-        DocEvent(id, text, new java.sql.Timestamp(id * 1000L))
-      val input = Seq(
-        doc(1, "the of is " + (1 to 27).map(i => f"wrd$i%02d").mkString(" ")), // keep
-        doc(2, "the of tiny"),                                                 // too short
-        doc(3, (1 to 30).map(i => f"wrd$i%02d").mkString(" ")))                // no stopwords
-      mem.addData(input: _*)
-      q.processAllAvailable()
-      val rows = spark.table("gopher")
-        .select("doc_id", "keep")
-        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      assert(rows == Map(1L -> true, 2L -> false, 3L -> false))
-      val batch = graft.operators.TextOps
-        .gopherRules(input.toDF(), "doc_id", "text")
-        .select("doc_id", "keep")
-        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      assert(rows == batch)
-    } finally q.stop()
+    val input = Seq(
+      doc(1, "the of is " + (1 to 27).map(i => f"wrd$i%02d").mkString(" ")), // keep
+      doc(2, "the of tiny"),                                                 // too short
+      doc(3, (1 to 30).map(i => f"wrd$i%02d").mkString(" ")))                // no stopwords
+    val rows = streamMatchesBatch(spark,
+        TextOps.gopherRules(_, "doc_id", "text"), Seq(input))
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("keep")).toMap
+    assert(rows == Map(1L -> true, 2L -> false, 3L -> false))
   }
 
   test("contamination stream counts shared bench shingles, matching batch exactly") {
@@ -162,141 +155,76 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("curation stream scores and filters documents statelessly, matching batch") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val mem = MemoryStream[DocEvent]
-    val q = Ingest.curationStream(mem.toDF(), minTokens = 3)
-      .writeStream.format("memory").queryName("curation")
-      .outputMode("append").start()
-    try {
-      def doc(id: Long, text: String) =
-        DocEvent(id, text, new java.sql.Timestamp(id * 1000L))
-      mem.addData(
-        doc(1, "the quick brown fox jumps"), // keeps: 5 tokens, en markers
-        doc(2, "hi"),                        // drops: under min tokens
-        doc(3, "spam spam spam spam spam spam spam spam spam spam spam")) // drops: 10/11 dup
-      q.processAllAvailable()
-      val rows = spark.table("curation")
-        .select("doc_id", "pred_lang", "keep")
-        .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getBoolean(2)))).toMap
-      assert(rows(1L) == (("en", true)))
-      assert(rows(2L)._2 == false)
-      assert(rows(3L)._2 == false) // dup_word_frac 10/11 > 0.9
-      // batch twin must agree row-for-row on the same inputs
-      val batch = Ingest.curationStream(Seq(
-          doc(1, "the quick brown fox jumps"), doc(2, "hi"),
-          doc(3, "spam spam spam spam spam spam spam spam spam spam spam")).toDF(),
-          minTokens = 3)
-        .select("doc_id", "pred_lang", "keep")
-        .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getBoolean(2)))).toMap
-      assert(rows == batch)
-    } finally q.stop()
+    val rows = streamMatchesBatch(spark,
+        TextOps.curationVerdict(_, minTokens = 3), Seq(Seq(
+          doc(1, "the quick brown fox jumps"), // keeps: 5 tokens, en markers
+          doc(2, "hi"),                        // drops: under min tokens
+          doc(3, "spam spam spam spam spam spam spam spam spam spam spam")))) // drops: 10/11 dup
+      .map(r => r.getAs[Long]("doc_id") ->
+        ((r.getAs[String]("pred_lang"), r.getAs[Boolean]("keep")))).toMap
+    assert(rows(1L) == (("en", true)))
+    assert(rows(2L)._2 == false)
+    assert(rows(3L)._2 == false) // dup_word_frac 10/11 > 0.9
   }
 
   test("cms sketch stream: fixed-size cells accumulate across batches, estimates never undercount") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val mem = MemoryStream[DocEvent]
     val depth = 3; val width = 1024
-    val q = Ingest.cmsSketchStream(mem.toDF(), depth = depth, width = width)
-      .writeStream.format("memory").queryName("cms")
-      .outputMode("complete").start()
-    try {
-      def doc(id: Long, text: String) =
-        DocEvent(id, text, new java.sql.Timestamp(id * 1000L))
-      val batch1 = Seq(doc(1, "foo bar foo bar foo bar"), doc(2, "one two three"))
-      val batch2 = Seq(doc(3, "foo bar baz qux"), doc(4, "one two one two"))
-      mem.addData(batch1: _*)
-      q.processAllAvailable()
-      mem.addData(batch2: _*)
-      q.processAllAvailable()
-      val streamCells = spark.table("cms")
-        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-      // state stays inside the fixed grid
-      assert(streamCells.size <= depth * width)
-      assert(streamCells.keys.forall { case (r, b) => r < depth && b < width })
-      // the running sketch equals the batch sketch over the union
-      val batchCells = graft.operators.TextOps.cmsCellsOf(
-          graft.operators.TextOps.cmsBucketed(
-            (batch1 ++ batch2).toDF(), "text", depth, width), depth)
-        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-      assert(streamCells == batchCells)
-      // CMS law: min-over-rows estimate >= true count for every gram
-      val trueCounts = (batch1 ++ batch2).toDF()
-        .select(explode(graft.operators.TextOps.tokenNgramsOfTokens(
-          graft.operators.TextOps.tokens(col("text")), 2)).as("gram"))
-        .groupBy("gram").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1))
-      val bucketsOf = (g: String) => (0 until depth).map { r =>
-        val hex = java.security.MessageDigest.getInstance("MD5")
-          .digest(g.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        r -> java.lang.Long.parseLong(hex.substring(5 * r, 5 * r + 5), 16) % width
-      }
-      trueCounts.foreach { case (g, c) =>
-        val est = bucketsOf(g).map { case (r, b) => streamCells.getOrElse((r, b), 0L) }.min
-        assert(est >= c, s"CMS undercounts '$g': est $est < true $c")
-      }
-    } finally q.stop()
+    val batch1 = Seq(doc(1, "foo bar foo bar foo bar"), doc(2, "one two three"))
+    val batch2 = Seq(doc(3, "foo bar baz qux"), doc(4, "one two one two"))
+    // the running sketch equals the batch sketch over the union
+    val streamCells = streamMatchesBatch(spark,
+        df => TextOps.cmsCellsOf(TextOps.cmsBucketed(df, "text", depth, width), depth),
+        Seq(batch1, batch2), outputMode = "complete")
+      .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
+    // state stays inside the fixed grid
+    assert(streamCells.size <= depth * width)
+    assert(streamCells.keys.forall { case (r, b) => r < depth && b < width })
+    // CMS law: min-over-rows estimate >= true count for every gram
+    val trueCounts = (batch1 ++ batch2).toDF()
+      .select(explode(TextOps.tokenNgramsOfTokens(
+        TextOps.tokens(col("text")), 2)).as("gram"))
+      .groupBy("gram").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+    val bucketsOf = (g: String) => (0 until depth).map { r =>
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(g.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      r -> java.lang.Long.parseLong(hex.substring(5 * r, 5 * r + 5), 16) % width
+    }
+    trueCounts.foreach { case (g, c) =>
+      val est = bucketsOf(g).map { case (r, b) => streamCells.getOrElse((r, b), 0L) }.min
+      assert(est >= c, s"CMS undercounts '$g': est $est < true $c")
+    }
   }
 
   test("hll sketch stream: bounded registers accumulate across batches, equal the batch sketch") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val mem = MemoryStream[DocEvent]
-    val withSrc = (df: org.apache.spark.sql.DataFrame) =>
+    val withSrc = (df: DataFrame) =>
       df.withColumn("source",
         when(col("doc_id") % 2 === 0, "even").otherwise("odd"))
-    val q = Ingest.hllSketchStream(withSrc(mem.toDF()))
-      .writeStream.format("memory").queryName("hll")
-      .outputMode("complete").start()
-    try {
-      def doc(id: Long, text: String) =
-        DocEvent(id, text, new java.sql.Timestamp(id * 1000L))
-      val batch1 = Seq(doc(1, "foo bar foo baz"), doc(2, "one two three"))
-      val batch2 = Seq(doc(3, "foo qux quux corge"), doc(4, "one two four"))
-      mem.addData(batch1: _*)
-      q.processAllAvailable()
-      mem.addData(batch2: _*)
-      q.processAllAvailable()
-      val streamRegs = spark.table("hll")
-        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
-      // state stays inside the fixed register grid: <= 256 per group
-      assert(streamRegs.keys.forall { case (_, b) => b >= 0 && b < 256 })
-      assert(streamRegs.groupBy(_._1._1).forall(_._2.size <= 256))
-      // the running registers equal the batch registers over the union
-      val batchRegs = graft.operators.TextOps.hllRegisters(
-          graft.operators.TextOps.hllBucketed(
-            withSrc((batch1 ++ batch2).toDF()), "text", "source"))
-        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
-      assert(streamRegs == batchRegs)
-    } finally q.stop()
+    val batch1 = Seq(doc(1, "foo bar foo baz"), doc(2, "one two three"))
+    val batch2 = Seq(doc(3, "foo qux quux corge"), doc(4, "one two four"))
+    // the running registers equal the batch registers over the union
+    val streamRegs = streamMatchesBatch(spark,
+        df => TextOps.hllRegisters(TextOps.hllBucketed(withSrc(df), "text", "source")),
+        Seq(batch1, batch2), outputMode = "complete")
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
+    // state stays inside the fixed register grid: <= 256 per group
+    assert(streamRegs.keys.forall { case (_, b) => b >= 0 && b < 256 })
+    assert(streamRegs.groupBy(_._1._1).forall(_._2.size <= 256))
   }
 
   test("winnow stream: stateless append fingerprints equal the batch selection") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val mem = MemoryStream[DocEvent]
-    val q = Ingest.winnowStream(mem.toDF())
-      .writeStream.format("memory").queryName("winnow")
-      .outputMode("append").start()
-    try {
-      def doc(id: Long, text: String) =
-        DocEvent(id, text, new java.sql.Timestamp(id * 1000L))
-      val batch1 = Seq(doc(1, "a b c d e f g h i j"), doc(2, "x y"))
-      val batch2 = Seq(doc(3, "p q r s t u v w"))
-      mem.addData(batch1: _*)
-      q.processAllAvailable()
-      mem.addData(batch2: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("winnow")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-      val batch = graft.operators.Dedup.winnowedFingerprints(
-          (batch1 ++ batch2).toDF(), "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-      assert(streamed == batch && streamed.nonEmpty)
-      // doc 2 is shorter than w+k-1: no fingerprint rows
-      assert(!streamed.exists(_._1 == 2L))
-    } finally q.stop()
+    val streamed = streamMatchesBatch(spark,
+        Dedup.winnowedFingerprints(_, "doc_id", "text"),
+        Seq(Seq(doc(1, "a b c d e f g h i j"), doc(2, "x y")),
+          Seq(doc(3, "p q r s t u v w"))))
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+    assert(streamed.nonEmpty)
+    // doc 2 is shorter than w+k-1: no fingerprint rows
+    assert(!streamed.exists(_._1 == 2L))
   }
 
   test("chunk-dedup gate: stream-static window probe counts dup windows per doc") {
@@ -324,53 +252,25 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("split stream: stateless verdicts equal the batch assignment across batches") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val mem = MemoryStream[DocEvent]
-    val withSrc = (df: org.apache.spark.sql.DataFrame) =>
-      df.withColumn("source", lit("crawl"))
-    val q = Ingest.splitStream(withSrc(mem.toDF()))
-      .writeStream.format("memory").queryName("splits")
-      .outputMode("append").start()
-    try {
-      def doc(id: Long) = DocEvent(id, s"text $id",
-        new java.sql.Timestamp(id * 1000L))
-      mem.addData((1L to 50L).map(doc): _*)
-      q.processAllAvailable()
-      mem.addData((51L to 100L).map(doc): _*)
-      q.processAllAvailable()
-      val streamed = spark.table("splits")
-        .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-      val batch = graft.operators.Curation.splitAssignment(
-          withSrc((1L to 100L).map(doc).toDF()), "doc_id", "source")
-        .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
-      assert(streamed == batch)
-      assert(streamed.values.toSet.subsetOf(Set("train", "valid", "test")))
-    } finally q.stop()
+    val streamed = streamMatchesBatch(spark,
+        df => Curation.splitAssignment(
+          df.withColumn("source", lit("crawl")), "doc_id", "source"),
+        Seq((1L to 50L).map(i => doc(i, s"text $i")),
+          (51L to 100L).map(i => doc(i, s"text $i"))))
+      .map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(streamed.size == 100)
+    assert(streamed.values.toSet.subsetOf(Set("train", "valid", "test")))
   }
 
   test("chunk stream emits window plans statelessly, matching batch (q72 twin)") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val mem = MemoryStream[DocEvent]
-    val q = Ingest.chunkStream(mem.toDF(), maxLen = 4, stride = 3)
-      .writeStream.format("memory").queryName("chunks")
-      .outputMode("append").start()
-    try {
-      def doc(id: Long, text: String) =
-        DocEvent(id, text, new java.sql.Timestamp(id * 1000L))
-      val input = Seq(doc(1, "a b c d e f g"), doc(2, "x y")) // 7 and 2 tokens
-      mem.addData(input: _*)
-      q.processAllAvailable()
-      val rows = spark.table("chunks")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSet
-      // doc 1: starts 1,4,7 → lengths 4,4,1; doc 2: one short window
-      assert(rows == Set((1L, 0, 1, 4), (1L, 1, 4, 4), (1L, 2, 7, 1), (2L, 0, 1, 2)))
-      // batch twin must agree row-for-row on the same inputs
-      val batch = Ingest.chunkStream(input.toDF(), maxLen = 4, stride = 3)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSet
-      assert(rows == batch)
-    } finally q.stop()
+    val rows = streamMatchesBatch(spark,
+        Packing.chunk(_, "doc_id", "text", 4, 3),
+        Seq(Seq(doc(1, "a b c d e f g"), doc(2, "x y")))) // 7 and 2 tokens
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSet
+    // doc 1: starts 1,4,7 → lengths 4,4,1; doc 2: one short window
+    assert(rows == Set((1L, 0, 1, 4), (1L, 1, 4, 4), (1L, 2, 7, 1), (2L, 0, 1, 2)))
   }
 
   test("windowed averages finalize per watermark (A1 streaming twin)") {
@@ -586,64 +486,69 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
   test("blocklist stream gates documents at ingest, matching the batch body row-for-row") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val mem = MemoryStream[SourcedDoc]
-    val q = Ingest.blocklistStream(mem.toDF(), blocklist = Seq("bad", "worse"),
-        maxHits = 1)
-      .writeStream.format("memory").queryName("blockgate")
-      .outputMode("append").start()
-    try {
-      val input = Seq(
-        SourcedDoc(1L, "good clean text", "src0"),
-        SourcedDoc(2L, "bad text bad again", "src0"),
-        SourcedDoc(3L, "worse text", "src1"))
-      mem.addData(input: _*)
-      q.processAllAvailable()
-      val rows = spark.table("blockgate").select("doc_id", "n_hits", "keep")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      assert(rows == Set((1L, 0L, true), (2L, 2L, false), (3L, 1L, true)))
-      val batch = graft.operators.TextOps
-        .blocklistFilter(input.toDF(), "doc_id", "text", Seq("bad", "worse"), 1)
-        .select("doc_id", "n_hits", "keep")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-      assert(rows == batch)
-    } finally q.stop()
+    val rows = streamMatchesBatch(spark,
+        TextOps.blocklistFilter(_, "doc_id", "text", Seq("bad", "worse"), 1),
+        Seq(Seq(
+          SourcedDoc(1L, "good clean text", "src0"),
+          SourcedDoc(2L, "bad text bad again", "src0"),
+          SourcedDoc(3L, "worse text", "src1"))))
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_hits"), r.getAs[Boolean]("keep")))
+      .toSet
+    assert(rows == Set((1L, 0L, true), (2L, 2L, false), (3L, 1L, true)))
   }
 
   test("sample stream rebalances the mixture at ingest, deterministically across replays") {
-    implicit val sq = spark.sqlContext
     import spark.implicits._
-    val mem = MemoryStream[SourcedDoc]
     val rates = Map("src0" -> (1, 4), "src1" -> (3, 4))
-    val q = Ingest.sampleStream(mem.toDF(), rates)
-      .writeStream.format("memory").queryName("samplegate")
-      .outputMode("append").start()
-    try {
-      val input = (1L to 200L).map(i =>
-        SourcedDoc(i, s"doc $i", if (i % 2 == 0) "src0" else "src1"))
-      mem.addData(input: _*)
-      q.processAllAvailable()
-      val got = spark.table("samplegate").select("doc_id", "kept")
-        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      // identical verdicts to the batch operator (the stream IS the body)
-      val batch = graft.operators.Curation
-        .seededSourceSample(input.toDF(), "doc_id", "source", rates)
-        .select("doc_id", "kept")
-        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      assert(got == batch)
-      // a replayed micro-batch reaches the same verdicts (exactly-once
-      // composition): feed the same rows again, verdicts must not flip
-      mem.addData(input.take(50): _*)
-      q.processAllAvailable()
-      val replay = spark.table("samplegate").select("doc_id", "kept")
-        .collect().map(r => r.getLong(0) -> r.getBoolean(1))
-      replay.foreach { case (id, k) => assert(got(id) == k, s"doc $id flipped") }
-      // the mixture actually moved: src1 keeps ~3x the fraction of src0
-      val keptBySrc = input.groupBy(_.source).map { case (src, docs2) =>
-        src -> docs2.count(d => got(d.doc_id)).toDouble / docs2.size
-      }
-      assert(keptBySrc("src1") > keptBySrc("src0"))
+    val input = (1L to 200L).map(i =>
+      SourcedDoc(i, s"doc $i", if (i % 2 == 0) "src0" else "src1"))
+    // the second micro-batch replays 50 documents (exactly-once
+    // composition): the stream must reach the batch operator's verdicts
+    // on the replay too
+    val verdicts = streamMatchesBatch(spark,
+        Curation.seededSourceSample(_, "doc_id", "source", rates),
+        Seq(input, input.take(50)))
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("kept"))
+    verdicts.groupBy(_._1).foreach { case (id, vs) =>
+      assert(vs.map(_._2).distinct.size == 1, s"doc $id flipped")
+    }
+    val got = verdicts.toMap
+    // the mixture actually moved: src1 keeps ~3x the fraction of src0
+    val keptBySrc = input.groupBy(_.source).map { case (src, docs2) =>
+      src -> docs2.count(d => got(d.doc_id)).toDouble / docs2.size
+    }
+    assert(keptBySrc("src1") > keptBySrc("src0"))
+  }
+}
+
+object StreamingSpec {
+  private val sinkIds = new AtomicInteger()
+
+  /** Runs the batch operator `op` on a MemoryStream fed `batches` (one
+    * micro-batch each) and on their union as a static frame, asserts
+    * that both hold the same rows, and returns the streamed rows. An
+    * aggregation runs in "complete" mode, so its sink holds the running
+    * result over every batch.
+    */
+  private[graft] def streamMatchesBatch[T: Encoder](
+      spark: SparkSession,
+      op: DataFrame => DataFrame,
+      batches: Seq[Seq[T]],
+      outputMode: String = "append"): Seq[Row] = {
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[T]
+    val name = s"stream_matches_batch_${sinkIds.incrementAndGet()}"
+    val q = op(mem.toDF()).writeStream.format("memory").queryName(name)
+      .outputMode(outputMode).start()
+    val streamed = try {
+      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      spark.table(name).collect().toSeq
     } finally q.stop()
+    val batch = op(spark.createDataset(batches.flatten).toDF()).collect().toSeq
+    org.scalatest.Assertions.assert(
+      streamed.sortBy(_.toString) == batch.sortBy(_.toString),
+      s"stream $streamed vs batch $batch")
+    streamed
   }
 }
