@@ -568,18 +568,22 @@ object Ingest {
     * the live data before the first new byte lands, so any failure
     * destroys the snapshot (the DocumentsLayout discipline; a
     * production deployment on an object store would use a
-    * transactional table format instead).
+    * transactional table format instead). A rename that returns false
+    * throws: renaming the staged dir onto a live dir that is still there
+    * would nest it inside and report success.
     */
   private[graft] def swapSnapshot(df: DataFrame, dir: String): Unit = {
-    val staged = dir + ".staging"
-    df.write.mode("overwrite").parquet(staged)
-    val hc = df.sparkSession.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hc)
-    val live = new org.apache.hadoop.fs.Path(dir)
-    val bak = new org.apache.hadoop.fs.Path(dir + ".bak")
+    val staged = new Path(dir + ".staging")
+    df.write.mode("overwrite").parquet(staged.toString)
+    val live = new Path(dir)
+    val bak = new Path(dir + ".bak")
+    val fs = live.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"snapshot swap could not rename $from to $to")
     fs.delete(bak, true)
-    if (fs.exists(live)) fs.rename(live, bak)
-    fs.rename(new org.apache.hadoop.fs.Path(staged), live)
+    if (fs.exists(live)) rename(live, bak)
+    rename(staged, live)
     fs.delete(bak, true)
     ()
   }

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.functions.ControlLaws
 import graft.streaming.{App, Ingest}
 import graft.streaming.App.Connector
@@ -15,17 +13,7 @@ import graft.streaming.Ingest.Reading
   * readings sink, the per-cycle doc-health write, and the two
   * stateful control loops emitting actuator decisions.
   */
-class AppSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-app-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class AppSpec extends AnyFunSuite with SharedSpark {
 
   private val telegram =
     "/ISK5\\2M550T-1012\r\n\r\n" +
@@ -63,7 +51,7 @@ class AppSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val s = spark
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_app").toString
+    val base = tmpDir("graft_app")
     val readingsDir = s"$base/readings"
     val metersDir = s"$base/meters"
     // seed the doc snapshot the health sink mutates
@@ -229,7 +217,7 @@ class AppSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val mem = MemoryStream[Int]
     mem.addData(1, 2, 3)
-    val ckpt = java.nio.file.Files.createTempDirectory("supervise-spec").toString
+    val ckpt = tmpDir("supervise-spec")
     def startQuery() = mem.toDS().writeStream
       .option("checkpointLocation", ckpt)
       .queryName("supervised-spec")
@@ -256,7 +244,7 @@ class AppSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(successes.get() >= 1)
     // give-up: a permanently broken query rethrows after maxRestarts
     poison.set(true)
-    val ckpt2 = java.nio.file.Files.createTempDirectory("supervise-spec2").toString
+    val ckpt2 = tmpDir("supervise-spec2")
     def broken() = mem.toDS().writeStream
       .option("checkpointLocation", ckpt2)
       .foreachBatch { (_: org.apache.spark.sql.Dataset[Int], _: Long) =>

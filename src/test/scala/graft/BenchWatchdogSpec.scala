@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.udf
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Bench watchdog laws (round-15 item 5): a query that blows its
   * wall-clock budget is cancelled (its job group aborts), reported as
@@ -12,16 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * medians behind it (the q183 grind poisoned three neighbors before
   * this existed).
   */
-class BenchWatchdogSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-bench-watchdog-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BenchWatchdogSpec extends AnyFunSuite with SharedSpark {
 
   test("budget breach cancels the job group, reports timeout, and isolates neighbors") {
     // deliberately slow: 4 tasks that each sleep 60 s, under a 2 s

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Curation
 
 /** Corpus-curation operators (q67–q69): mixture accounting, the
@@ -13,16 +11,7 @@ import graft.operators.Curation
   * computable math, the two-phase-rank exactness claim, and the flag
   * composition on a corpus engineered to light every flag.
   */
-class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CurationSpec extends AnyFunSuite with SharedSpark {
 
   test("sourceMixture: shares and uniform weights match hand math") {
     val s = spark; import s.implicits._

@@ -1,25 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Dedup
 
 /** Scale-path dedup hygiene: the two-phase hash-grouped exact dedup
   * (full text never rides the main shuffle) and the LSH hot-bucket cap
   * (one degenerate (band, bandsig) bucket can't go quadratic).
   */
-class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DedupSpec extends AnyFunSuite with SharedSpark {
 
   test("two-phase exactDedup equals direct groupBy(text)") {
     val s = spark; import s.implicits._

@@ -1,12 +1,10 @@
 package graft
 
 import org.apache.spark.GraftListenerDrain
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Driver-bound enforcement: every documented `collect()` in the
   * operator surface claims a bound in its scaladoc (k×d centroids,
@@ -20,16 +18,7 @@ import org.scalatest.BeforeAndAfterAll
   * whose "bounded" driver fold silently scales with the corpus fails
   * here before it ships.
   */
-class DriverBoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DriverBoundsSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.1"
 

@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The native expressions must be reachable from plain SQL once the
   * extensions are installed.
   */
-class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-ext-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraftExtensionsSpec extends AnyFunSuite with SharedSpark {
 
   test("dot_product is SQL-callable") {
     val r = spark.sql(

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Harness
 
@@ -54,5 +57,24 @@ class HarnessSpec extends AnyFunSuite {
       Harness.retryOnce() { calls2 += 1; throw new RuntimeException(s"fail$calls2") }
     }
     assert(e.getMessage == "fail2" && calls2 == 2)
+  }
+
+  test("only the SharedSpark fixture builds or stops a Spark session") {
+    // split literals, so this file does not match its own scan
+    val calls = Seq("SparkSession" + ".builder", "spark" + ".stop()")
+    val root = Paths.get("src/test/scala")
+    val files: Seq[Path] = {
+      val s = Files.walk(root)
+      try s.filter(_.toString.endsWith(".scala")).toArray.toSeq.map(_.asInstanceOf[Path])
+      finally s.close()
+    }
+    assert(files.exists(_.getFileName.toString == "SharedSpark.scala"),
+      s"the scan of $root missed the fixture")
+    val offenders = files.filter { p =>
+      // ISO-8859-1 reads any byte, so a spec holding binary fixtures scans too
+      val text = new String(Files.readAllBytes(p), StandardCharsets.ISO_8859_1)
+      p.getFileName.toString != "SharedSpark.scala" && calls.exists(text.contains)
+    }
+    assert(offenders.isEmpty, "use the SharedSpark session instead")
   }
 }

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.graft.Signatures
 import org.apache.spark.sql.graft.DotProduct.dot_product
 
@@ -13,16 +11,7 @@ import org.apache.spark.sql.graft.DotProduct.dot_product
   * similarity operators silently rely on; a kernel regression that
   * preserves the golden cases but breaks the algebra fails here.
   */
-class KernelLawsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class KernelLawsSpec extends AnyFunSuite with SharedSpark {
 
   test("jaccard_longs equals set-math Jaccard on random pairs (incl. empty)") {
     val s = spark; import s.implicits._

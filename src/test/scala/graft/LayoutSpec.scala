@@ -1,26 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{Layout, Similarity}
 
 /** Round-13 layout planners (Z-order, compaction) + two-stage
   * retrieval (refine re-rank, hard-negative mining).
   */
-class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-layout-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LayoutSpec extends AnyFunSuite with SharedSpark {
 
   /** Reference Morton interleave on the driver (bit-by-bit). */
   private def mortonRef(x: Long, y: Long, bits: Int): Long =
@@ -249,10 +237,10 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect().map(r => (r.getLong(1), r.getLong(2)))
       by
     }
-    val zDir = java.nio.file.Files.createTempDirectory("graft_zw").toString
+    val zDir = tmpDir("graft_zw")
     Layout.zOrderWrite(grid, "x", "y", files = 16, bits = 6)
       .write.mode("overwrite").parquet(zDir)
-    val lDir = java.nio.file.Files.createTempDirectory("graft_lw").toString
+    val lDir = tmpDir("graft_lw")
     grid.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
       .write.mode("overwrite").parquet(lDir)
     val zs = fileSpans(zDir)
@@ -272,7 +260,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fileManifest lists written part files with real sizes; layoutHealth consumes it") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_manifest").toString
+    val dir = tmpDir("graft_manifest")
     (0 until 1000).map(i => (i.toLong, s"row $i payload"))
       .toDF("id", "t").repartition(4).write.mode("overwrite").parquet(dir)
     val m = Layout.fileManifest(spark, dir)
@@ -294,7 +282,7 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("compactionRewrite executes the plan: row set preserved, fewer files, healthy, idempotent") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = tmpDir("graft_compact")
     // 12 small files of INCOMPRESSIBLE rows (md5 hex — dictionary and
     // snappy can't shrink a merged group much below its input bytes),
     // target at ~3.5 file-sizes so each packed group's INPUT is ~1.14×

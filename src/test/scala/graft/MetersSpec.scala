@@ -1,25 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.net.URI
+
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+
+import MetersSpec.{BakRenameFails, NoBak}
 
 /** The meters dimension: doc derivation, last-wins upsert (S6), the
   * Kasa rolling-offset law, and named value-column resolution through
   * the series registry.
   */
-class MetersSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MetersSpec extends AnyFunSuite with SharedSpark {
 
   private def eventsDf = {
     import spark.implicits._
@@ -119,7 +113,7 @@ class MetersSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def pollOnce(dir: String, polled: String*): Unit = {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val ckpt = tmpDir("ckpt")
     val mem = MemoryStream[String]
     val q = graft.streaming.App.pollHealthSink(mem.toDF().toDF("meterId"), dir, ckpt).start()
     try {
@@ -139,7 +133,7 @@ class MetersSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toMap
 
   test("pollHealthSink flips lastPollSuccessful only for polled meters") {
-    val dir = java.nio.file.Files.createTempDirectory("meters").toString + "/snap"
+    val dir = tmpDir("meters") + "/snap"
     failedSnapshot(dir)
     // meters/9 has no doc: the join drops it instead of minting one
     pollOnce(dir, "meters/3", "meters/5", "meters/3", "meters/9")
@@ -152,7 +146,7 @@ class MetersSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pollHealthSink restores a snapshot cut between swapSnapshot's two renames") {
-    val dir = java.nio.file.Files.createTempDirectory("meters").toString + "/snap"
+    val dir = tmpDir("meters") + "/snap"
     failedSnapshot(dir)
     // the crash window: rename(live, bak) happened, rename(staged, live)
     // did not — the staged merge of the uncommitted batch is left over
@@ -166,5 +160,42 @@ class MetersSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pollHealth(dir) ==
       Map("meters/0" -> true, "meters/3" -> false, "meters/5" -> false))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir.bak")))
+  }
+
+  test("swapSnapshot throws when a rename returns false and keeps the live snapshot") {
+    val dir = tmpDir("meters") + "/snap"
+    failedSnapshot(dir)
+    val before = spark.read.parquet(dir).collect().toSet
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set(s"fs.$NoBak.impl", classOf[BakRenameFails].getName)
+    hc.setBoolean(s"fs.$NoBak.impl.disable.cache", true)
+    try {
+      val merged = spark.read.parquet(dir).withColumn("lastPollSuccessful", lit(true))
+      val err = intercept[java.io.IOException] {
+        graft.streaming.Ingest.swapSnapshot(merged, s"$NoBak:$dir")
+      }
+      assert(err.getMessage.contains(s"$dir.bak"), err.getMessage)
+    } finally {
+      hc.unset(s"fs.$NoBak.impl")
+      hc.unset(s"fs.$NoBak.impl.disable.cache")
+    }
+    assert(spark.read.parquet(dir).collect().toSet == before)
+  }
+}
+
+object MetersSpec {
+
+  /** Scheme of [[BakRenameFails]]. */
+  val NoBak = "nobak"
+
+  /** The local file system, except that a rename onto a `.bak` path
+    * returns false without throwing, as Hadoop's `rename` contract
+    * allows. Every other rename, Spark's commit renames included, works.
+    */
+  class BakRenameFails extends RawLocalFileSystem {
+    override def getUri: URI = URI.create(s"$NoBak:///")
+    override def getScheme: String = NoBak
+    override def rename(src: Path, dst: Path): Boolean =
+      !dst.getName.endsWith(".bak") && super.rename(src, dst)
   }
 }

@@ -3,22 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Multimodal
 
 /** Multimodal payload plumbing: the resize compaction step's integer
   * geometry, proportional byte slice, and no-upscale law.
   */
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MultimodalSpec extends AnyFunSuite with SharedSpark {
 
   test("resizeToFit: integer geometry, proportional slice, no upscale") {
     implicit val s: SparkSession = spark

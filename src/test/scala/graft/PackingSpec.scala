@@ -3,22 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Packing
 
 /** Sequence packing: the greedy first-fit fold and its distributed
   * shard layout.
   */
-class PackingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PackingSpec extends AnyFunSuite with SharedSpark {
 
   test("greedy first-fit fold: splits, oversize bins, first-doc law") {
     val docs = Iterator((1L, 300L), (2L, 300L), (3L, 100L), (4L, 600L), (5L, 10L))

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Plan-shape regression net: the properties that make the flagship
   * queries scale-safe at 100 TB are asserted on the EXECUTED plan, so
@@ -10,16 +8,7 @@ import org.scalatest.BeforeAndAfterAll
   * a broadcast join into a shuffle, or introduces a cartesian) fails
   * here rather than in production.
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PlanSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -144,11 +133,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // AdaptiveSparkPlanExec is an opaque leaf whose exchange insertion
     // happens inside its own replanning) — plan once with AQE off to
     // get a plain physical tree whose shuffles are inspectable
-    val root = {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try SparkEntry.queries("q53_ngram_jaccard")(spark, sf)
+    val root = withConf("spark.sql.adaptive.enabled" -> "false") {
+      SparkEntry.queries("q53_ngram_jaccard")(spark, sf)
         .queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
     val exchanges = root.collect { case e: ShuffleExchangeExec => e }
     assert(exchanges.nonEmpty, "expected shuffles in the posting-list join")
@@ -161,17 +148,14 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("(series, date) layout files are each sorted by (meterId, ts)") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("readings_sorted")
-      .toFile.getAbsolutePath
+    val dir = tmpDir("readings_sorted")
     // a file's rows are one contiguous run of a scan partition, in file
     // order, so the row position orders them within their file
-    val rows = try {
-      ReadingsLayout.write(Tables.readings(spark, sf), dir)
-      spark.read.parquet(dir)
-        .select(input_file_name().as("f"),
-          monotonically_increasing_id().as("i"), col("meterId"), col("ts"))
-        .collect().toSeq
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    ReadingsLayout.write(Tables.readings(spark, sf), dir)
+    val rows = spark.read.parquet(dir)
+      .select(input_file_name().as("f"),
+        monotonically_increasing_id().as("i"), col("meterId"), col("ts"))
+      .collect().toSeq
     val files = rows.groupBy(_.getString(0)).values.toSeq
       .map(_.sortBy(_.getLong(1)))
     assert(files.size > 2, s"layout produced only ${files.size} files")
@@ -188,8 +172,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("(series, date) layout prunes partitions at file-listing time") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("readings_layout")
-      .toFile.getAbsolutePath
+    val dir = tmpDir("readings_layout")
     ReadingsLayout.write(Tables.readings(spark, sf), dir)
     val totalFiles = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
@@ -203,14 +186,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       .groupBy(col("series"), col("date")).count()
       .orderBy(col("series"), col("date")).head()
     val q = {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      withConf("spark.sql.adaptive.enabled" -> "false") {
         val df = ReadingsLayout.read(spark, dir)
           .filter(col("series") === oneDay.getString(0) &&
             col("date") === oneDay.getDate(1))
         df.collect()
         df
-      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      }
     }
     val scan = q.queryExecution.executedPlan
       .collect { case f: FileSourceScanExec => f }.head
@@ -234,10 +216,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (q <- Seq("q67_source_mixture", "q68_source_cap",
         "q69_curation_pipeline", "q70_repeated_ngrams",
         "q71_repeated_span_frac", "q77_token_budget")) {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val root =
-        try SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
-        finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      val root = withConf("spark.sql.adaptive.enabled" -> "false") {
+        SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+      }
       val exchanges = root.collect { case e: ShuffleExchangeExec => e }
       assert(exchanges.nonEmpty, s"$q: expected at least one exchange")
       val offending = for {
@@ -267,11 +248,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("bucketed documents layout makes id-keyed joins and aggs exchange-free") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("docs_bucketed")
-      .toFile.getAbsolutePath
+    val dir = tmpDir("docs_bucketed")
     DocumentsLayout.write(Tables.documents(spark, sf), dir, "docs_bkt_spec")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try withConf("spark.sql.adaptive.enabled" -> "false") {
       val t = DocumentsLayout.read(spark, "docs_bkt_spec")
       // the shape of every curation re-attach: corpus ⋈ per-doc result
       // on doc_id — with both sides bucketed, NO exchange at all
@@ -285,19 +264,15 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(agg.queryExecution.executedPlan
         .collect { case e: ShuffleExchangeExec => e }.isEmpty,
         "bucketed aggregation still shuffles")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.sql("DROP TABLE IF EXISTS docs_bkt_spec")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS docs_bkt_spec")
   }
 
   test("q77's running sum is bucket-partitioned — never a single-task global window") {
     import org.apache.spark.sql.execution.window.WindowExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val root =
-      try SparkEntry.queries("q77_token_budget")(spark, sf)
+    val root = withConf("spark.sql.adaptive.enabled" -> "false") {
+      SparkEntry.queries("q77_token_budget")(spark, sf)
         .queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     val wins = root.collect { case w: WindowExec => w }
     assert(wins.nonEmpty, "expected a window for the running sum")
     assert(wins.forall(_.partitionSpec.nonEmpty),
@@ -308,11 +283,10 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("q79's quota rank is cell-partitioned and embeddings ride no exchange") {
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val root =
-      try SparkEntry.queries("q79_cluster_sample")(spark, sf)
+    val root = withConf("spark.sql.adaptive.enabled" -> "false") {
+      SparkEntry.queries("q79_cluster_sample")(spark, sf)
         .queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     val wins = root.collect { case w: WindowExec => w }
     assert(wins.nonEmpty, "expected the per-cell quota window")
     assert(wins.forall(_.partitionSpec.nonEmpty),
@@ -336,8 +310,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("round-7 additions keep their scale claims: literal-driven maps, no chars on exchanges") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       // q86: the projection matrix is a driver-side LITERAL — the
       // distributed plan must contain NO join at all (projection happens
       // inside the scan)
@@ -386,14 +359,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       } yield s"${a.name}: ${a.dataType.simpleString}"
       assert(chars.isEmpty,
         s"q93: character data rides an exchange: ${chars.mkString(", ")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("round-9 additions: hash-only exchanges (q94/q96/q97), CMS plan joins nothing (q95)") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       def hasChars(dt: DataType): Boolean = dt match {
         case _: StringType | _: BinaryType => true
         case ArrayType(et, _)              => hasChars(et)
@@ -428,13 +400,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       val exchangeAt = p.lastIndexOf("Exchange")
       assert(exchangeAt >= 0 && filterAt > exchangeAt,
         s"q95: candidate filter must be below the count exchange\n${p.take(2000)}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("round-10 additions: gram/prefix text is hashed in the scan, never exchanged (q107/q108)") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       // q107's count-distinct and q108's df groupBy must key on the
       // 8-byte hash — the only string allowed on an exchange is the
       // bounded `source` dimension; raw grams (`__g`) or prefixes
@@ -449,13 +420,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(leaked.isEmpty,
           s"$q: raw text rides an exchange: ${leaked.mkString(", ")}")
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("session additions: winnow selection and split verdicts are exchange-free; HLL exchanges registers, not tokens") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val docs = Tables.documents(spark, sf)
       // q122 stats and the split assignment are pure scans: their
       // plans must contain NO shuffle exchange at all
@@ -479,13 +449,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         if a.dataType.simpleString.contains("string") && a.name != "grp"
       } yield a.name
       assert(leaked.isEmpty, s"HLL exchange carries strings: $leaked")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("chunk dup rate and BPE pair counting keep token arrays off the exchanges") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val docs = Tables.documents(spark, sf)
       // q145: the window hash-count join exchanges (source, 8-byte
       // hash) — the window TEXT and the token array stay in the scan
@@ -533,7 +502,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         if a.dataType.simpleString.startsWith("array")
       } yield a.name
       assert(bpeArrays.isEmpty, s"BPE pair exchange carries arrays: $bpeArrays")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("q99's broadcast side is candidate-bounded, never the open vocabulary") {
@@ -547,8 +516,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and (b) show a LeftSemi join INSIDE at least one broadcast
     // exchange subtree — proof the broadcast input is the bounded
     // frame, not the raw vocabulary
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val root = SparkEntry.queries("q99_pmi_collocations")(spark, sf)
         .queryExecution.executedPlan
       val bes = root.collect { case b: BroadcastExchangeExec => b }
@@ -560,13 +528,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(bounded,
         s"no broadcast subtree contains the candidate semi-join\n${root.toString.take(3000)}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("round-11 additions: q151 is a pure scan; q150/q132 keep text/vectors off wide exchanges") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val docs = Tables.documents(spark, sf)
       // the duplicate-n-gram gate is per-doc column algebra: no shuffle
       val gate = graft.operators.TextOps
@@ -597,13 +564,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         a <- e.output if a.name == "text"
       } yield a.name
       assert(leak.isEmpty, "q132 exchanges document text")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("q156-q163 wave: gates are pure scans, models broadcast, arrays stay off exchanges") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val docs = Tables.documents(spark, sf)
       // classifier + PII gate: per-row column algebra, zero shuffle
       for ((nm, df) <- Seq(
@@ -663,7 +629,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         a <- e.output if a.name == "text"
       } yield a.name
       assert(calLeaks.isEmpty, s"q166 exchanges text: $calLeaks")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("sketch ops' estimate-only paths carry no exact audit twin (q146/q124)") {
@@ -673,80 +639,82 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     def joins(p: SparkPlan): Seq[SparkPlan] =
       p.collect { case n if n.nodeName.contains("Join") => n }
     // AdaptiveSparkPlanExec hides its inner tree from collect()
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-    val docs = Tables.documents(spark, sf)
-    // KMV estimate-only: exactly ONE join — the |sources|²-bounded
-    // signature pairing — and no shingle-level self-join; the audit
-    // path (the q146 oracle configuration) adds the exact twin
-    val est = graft.operators.Dedup
-      .kmvSourceOverlap(docs, "doc_id", "text", "source", audit = false)
-    assert(est.columns.toSeq == Seq("src_a", "src_b", "jac_est"))
-    val estJoins = joins(est.queryExecution.executedPlan)
-    assert(estJoins.size == 1,
-      s"estimate-only KMV must join signatures once, found ${estJoins.size}:\n" +
-        est.queryExecution.executedPlan.toString.take(3000))
-    // ...and the one join's inputs are k-bounded signature rows (the
-    // `sig` array column), not per-shingle hash rows
-    assert(estJoins.head.output.exists(_.name == "sig"),
-      estJoins.head.output.map(_.name).mkString(","))
-    val audit = graft.operators.Dedup
-      .kmvSourceOverlap(docs, "doc_id", "text", "source", audit = true)
-    assert(audit.columns.contains("jac_exact"))
-    assert(joins(audit.queryExecution.executedPlan).size > 1)
-    // HLL estimate-only: aggregation only — no join, no exact distinct
-    val hEst = graft.operators.TextOps
-      .hllVocabulary(docs, "text", "lang", audit = false)
-    assert(hEst.columns.toSeq == Seq("lang", "hll_est"))
-    assert(joins(hEst.queryExecution.executedPlan).isEmpty,
-      "estimate-only HLL must not join an exact-distinct twin")
-    assert(!hEst.queryExecution.optimizedPlan.toString.contains("distinct"),
-      hEst.queryExecution.optimizedPlan.toString.take(2000))
-    // the two paths agree on the estimate itself
-    val hAudit = graft.operators.TextOps
-      .hllVocabulary(docs, "text", "lang", audit = true)
-      .select("lang", "hll_est").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val hOnly = hEst.collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(hOnly == hAudit, s"estimate drifted: $hOnly vs $hAudit")
-    val kAudit = audit.select("src_a", "src_b", "jac_est").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    val kOnly = est.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    assert(kOnly == kAudit, s"estimate drifted: $kOnly vs $kAudit")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val docs = Tables.documents(spark, sf)
+      // KMV estimate-only: exactly ONE join — the |sources|²-bounded
+      // signature pairing — and no shingle-level self-join; the audit
+      // path (the q146 oracle configuration) adds the exact twin
+      val est = graft.operators.Dedup
+        .kmvSourceOverlap(docs, "doc_id", "text", "source", audit = false)
+      assert(est.columns.toSeq == Seq("src_a", "src_b", "jac_est"))
+      val estJoins = joins(est.queryExecution.executedPlan)
+      assert(estJoins.size == 1,
+        s"estimate-only KMV must join signatures once, found ${estJoins.size}:\n" +
+          est.queryExecution.executedPlan.toString.take(3000))
+      // ...and the one join's inputs are k-bounded signature rows (the
+      // `sig` array column), not per-shingle hash rows
+      assert(estJoins.head.output.exists(_.name == "sig"),
+        estJoins.head.output.map(_.name).mkString(","))
+      val audit = graft.operators.Dedup
+        .kmvSourceOverlap(docs, "doc_id", "text", "source", audit = true)
+      assert(audit.columns.contains("jac_exact"))
+      assert(joins(audit.queryExecution.executedPlan).size > 1)
+      // HLL estimate-only: aggregation only — no join, no exact distinct
+      val hEst = graft.operators.TextOps
+        .hllVocabulary(docs, "text", "lang", audit = false)
+      assert(hEst.columns.toSeq == Seq("lang", "hll_est"))
+      assert(joins(hEst.queryExecution.executedPlan).isEmpty,
+        "estimate-only HLL must not join an exact-distinct twin")
+      assert(!hEst.queryExecution.optimizedPlan.toString.contains("distinct"),
+        hEst.queryExecution.optimizedPlan.toString.take(2000))
+      // the two paths agree on the estimate itself
+      val hAudit = graft.operators.TextOps
+        .hllVocabulary(docs, "text", "lang", audit = true)
+        .select("lang", "hll_est").collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val hOnly = hEst.collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(hOnly == hAudit, s"estimate drifted: $hOnly vs $hAudit")
+      val kAudit = audit.select("src_a", "src_b", "jac_est").collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+      val kOnly = est.collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+      assert(kOnly == kAudit, s"estimate drifted: $kOnly vs $kAudit")
+    }
   }
 
   test("store serving broadcasts query-sized sides and prunes the code scan (q193/q194)") {
-    import graft.operators.IndexStore
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-planspec-store").toString
-    val e = Tables.embeddings(spark, sf)
-    IndexStore.buildIvfPq(e, dir, numCells = 6, cellIters = 2,
-      numSub = 4, codebookK = 6, pqIters = 2)
-    val served = IndexStore.serveIvfPq(spark, dir,
-      e.filter(col("vec_id") < 3), k = 4, probes = 2)
-    served.collect() // finalize AQE
-    val p = served.queryExecution.executedPlan.toString
-    // the distance tables (query-sized) broadcast onto the code stream
-    assert(p.contains("BroadcastHashJoin"), p.take(3000))
-    // the corpus-sized side (the codes scan) reads ONLY index ints —
-    // a serve must never rehydrate anything embedding-sized; the
-    // QUERY-side scans read embeddings legitimately (query-bounded)
-    val codesScan = p.linesIterator.filter(_.contains("/codes"))
-      .mkString("\n")
-    assert(codesScan.nonEmpty, "no codes scan found: " + p.take(3000))
-    assert(!codesScan.contains("embedding"),
-      "codes scan rehydrates embeddings: " + codesScan.take(2000))
-    // filtered serve: the allow-list rides a broadcast semi join
-    val filt = IndexStore.serveIvfPq(spark, dir,
-      e.filter(col("vec_id") < 3), k = 4, probes = 2,
-      allowed = Some(e.filter(col("label") === 3).select(col("vec_id"))))
-    filt.collect()
-    val pf = filt.queryExecution.executedPlan.toString
-    assert(pf.contains("LeftSemi"), pf.take(3000))
-    assert(pf.contains("BroadcastHashJoin"), pf.take(3000))
+    // a scan's Location names the store path; the default 100-character
+    // cut would hide "/codes" at the end of a long temp path
+    withConf("spark.sql.maxMetadataStringLength" -> "1000") {
+      import graft.operators.IndexStore
+      import org.apache.spark.sql.functions.col
+      val dir = tmpDir("graft-planspec-store")
+      val e = Tables.embeddings(spark, sf)
+      IndexStore.buildIvfPq(e, dir, numCells = 6, cellIters = 2,
+        numSub = 4, codebookK = 6, pqIters = 2)
+      val served = IndexStore.serveIvfPq(spark, dir,
+        e.filter(col("vec_id") < 3), k = 4, probes = 2)
+      served.collect() // finalize AQE
+      val p = served.queryExecution.executedPlan.toString
+      // the distance tables (query-sized) broadcast onto the code stream
+      assert(p.contains("BroadcastHashJoin"), p.take(3000))
+      // the corpus-sized side (the codes scan) reads ONLY index ints —
+      // a serve must never rehydrate anything embedding-sized; the
+      // QUERY-side scans read embeddings legitimately (query-bounded)
+      val codesScan = p.linesIterator.filter(_.contains("/codes"))
+        .mkString("\n")
+      assert(codesScan.nonEmpty, "no codes scan found: " + p.take(3000))
+      assert(!codesScan.contains("embedding"),
+        "codes scan rehydrates embeddings: " + codesScan.take(2000))
+      // filtered serve: the allow-list rides a broadcast semi join
+      val filt = IndexStore.serveIvfPq(spark, dir,
+        e.filter(col("vec_id") < 3), k = 4, probes = 2,
+        allowed = Some(e.filter(col("label") === 3).select(col("vec_id"))))
+      filt.collect()
+      val pf = filt.queryExecution.executedPlan.toString
+      assert(pf.contains("LeftSemi"), pf.take(3000))
+      assert(pf.contains("BroadcastHashJoin"), pf.take(3000))
+    }
   }
 }

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.functions.{Parsers, Vents}
 import graft.streaming.PollSource
 
@@ -11,16 +9,7 @@ import graft.streaming.PollSource
   * decoder → reading rows, proven end-to-end through the real DSMR,
   * Vents, and Kasa decoders with deterministic fake edges.
   */
-class PollSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PollSourceSpec extends AnyFunSuite with SharedSpark {
 
   /** A device payload under src/test/resources/poll (FIXTURES.md §2). */
   private def fixture(name: String): String = {

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Curation, Dedup, Packing, Similarity, TextOps}
 
 /** Round-10 hardening: shard-count-parametrized resharding (membership
@@ -12,16 +10,7 @@ import graft.operators.{Curation, Dedup, Packing, Similarity, TextOps}
   * posting cap (straggler backstop, no-op on honest data), and the
   * calibration pair source's exact recall.
   */
-class Round10OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round10OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("shardAssignment: numShards permutes only (shard, pos), never membership or determinism") {
     val s = spark; import s.implicits._
@@ -389,16 +378,15 @@ class Round10OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // global sort); the only legal shuffle is the SinglePartition
     // collapse of the partial stats aggregates (rows = partition count)
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // plan fixture must exceed k: a limit >= the relation's maxRows is
     // optimized away entirely (EliminateLimits), leaving a global sort
     // no real corpus would plan
     val big = (1L to 50L).map(i => (i, if (i % 2 == 0) "cat dog" else "dog"))
       .toDF("doc_id", "text")
-    val p =
-      try TextOps.bm25TopK(big, "doc_id", "text", Seq("cat"), 10)
+    val p = withConf("spark.sql.adaptive.enabled" -> "false") {
+      TextOps.bm25TopK(big, "doc_id", "text", Seq("cat"), 10)
         .queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     val shuffles = p.collect { case e: ShuffleExchangeExec => e }
     assert(shuffles.forall(_.outputPartitioning.numPartitions == 1),
       s"bm25 scoring shuffles corpus rows:\n${p.toString.take(1500)}")
@@ -421,11 +409,10 @@ class Round10OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, 2L, 1L, false),  // "bad" twice = 2 hits, 1 distinct, over
       (3L, 2L, 2L, false))) // two distinct terms
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val p =
-      try TextOps.blocklistFilter(docs, "doc_id", "text", Seq("bad"), 0)
+    val p = withConf("spark.sql.adaptive.enabled" -> "false") {
+      TextOps.blocklistFilter(docs, "doc_id", "text", Seq("bad"), 0)
         .queryExecution.executedPlan
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
     assert(p.collect { case e: ShuffleExchangeExec => e }.isEmpty,
       "blocklist gate must run at scan speed")
   }

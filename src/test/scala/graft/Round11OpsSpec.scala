@@ -1,27 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{Curation, Dedup, Similarity, TextOps}
 import graft.streaming.Ingest
 import StreamingSpec.streamMatchesBatch
 
 /** Hand-math specs for the round-11 operators (q151–q153). */
-class Round11OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-round11-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round11OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("duplicateNgramFraction: hand-counted repeats, short-doc floor, loop detection") {
     val s = spark; import s.implicits._
@@ -522,11 +510,11 @@ class Round11OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val chainBatch = Ingest.curationChainStream(docs,
       rates = Map("src0" -> (1, 4)))
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try assert(chainBatch.queryExecution.executedPlan
-      .collect { case e: ShuffleExchangeExec => e }.isEmpty,
-      "chain must fuse into a map-only projection")
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      assert(chainBatch.queryExecution.executedPlan
+        .collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        "chain must fuse into a map-only projection")
+    }
     // every core verdict == its frame op, row-for-row
     def keepSet(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.filter(col("keep")).select("doc_id").collect()

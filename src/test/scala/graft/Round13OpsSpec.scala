@@ -1,25 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.Curation
 import graft.streaming.Ingest
 
 /** Round-13 hardening specs. */
-class Round13OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-round13-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round13OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("curationChainStream vs seededSourceSample: default divergence is intended and body-identical") {
     // The chain's keep_sample DEFAULT is 1/1 (an ingest chain must not
@@ -123,8 +111,7 @@ class Round13OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sorted dumps.)
     val s = spark
     val sf = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_restart_").toString
+    val out = tmpDir("graft_restart_")
 
     def canon(dir: String): Seq[String] =
       s.read.parquet(dir).collect()
@@ -184,8 +171,7 @@ class Round13OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // mini skew corpus.
     import graft.operators.Dedup
     val s = spark
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_skew_").toString
+    val out = tmpDir("graft_skew_")
     ScaleData.generate(s, "/root/testdata/sf0.001", out, 4, "skew")
     val docs = Tables.documents(s, out)
 

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.Similarity
 
@@ -14,17 +13,7 @@ import graft.operators.Similarity
   * plan may grow with the index: the index rides broadcast relations,
   * never plan expressions.
   */
-class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-round14-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round14OpsSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -120,7 +109,7 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(refreshed != rebuilt)
     // persistence round-trip: the maintained set written as a relation
     // and reloaded serves assignments identical to the in-memory set
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
+    val dir = tmpDir("graft_idx")
     Similarity.centroidRelation(spark, refreshed)
       .write.mode("overwrite").parquet(dir)
     val reloaded = spark.read.parquet(dir)
@@ -191,7 +180,7 @@ class Round14OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // staging bounds live shuffle to the largest stage (the sf10 disk
     // fix) — it must change WHERE intermediate bytes live, never the
     // curated corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft_stage").toString
+    val dir = tmpDir("graft_stage")
     val (c0, s0, v0) = CurationPipeline.run(spark, sf,
       modelGates = true, repairLeaks = true)
     val (c1, s1, v1) = CurationPipeline.run(spark, sf,

@@ -1,11 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{IndexStore, Similarity}
 
@@ -18,17 +15,7 @@ import graft.operators.{IndexStore, Similarity}
   * persisted through the store must change SERVING exactly as the
   * in-memory maintained centroids would.
   */
-class Round14StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-round14-store-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round14StoreSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -37,8 +24,6 @@ class Round14StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-store-$tag").toString
 
   test("store round-trip serves the in-memory relation path bit-for-bit (two geometries)") {
     val e = embeddings

@@ -1,11 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{IndexStore, Similarity}
 
@@ -20,17 +17,7 @@ import graft.operators.{IndexStore, Similarity}
   * is recall-gated — a refresh that hurts is rejected, one that helps
   * is adopted.
   */
-class Round15StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-round15-store-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round15StoreSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -39,8 +26,6 @@ class Round15StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-store15-$tag").toString
 
   test("residual store round-trip serves the in-memory residual relation path bit-for-bit") {
     val e = embeddings
@@ -397,8 +382,7 @@ class Round15StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       // code-stream scan — the probed cells' files only, one execution,
       // zero extra jobs (AQE off so the executed plan is final at
       // inspection time — the repo's PlanSpec discipline)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
+      withConf("spark.sql.adaptive.enabled" -> "false") {
         val codesPath = IndexStore.artifactPaths(spark, dir)("codes")
         val totalFiles = spark.read.parquet(codesPath).inputFiles.length.toLong
         val dflt = IndexStore.serveIvfPq(spark, dir, q, k = 4, probes = 2)
@@ -418,7 +402,7 @@ class Round15StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
         val dScanned = dscan.metrics("numFiles").value
         assert(dScanned > 0 && dScanned <= 2L * 3L,
           s"DPP read $dScanned of $totalFiles code files (resid=$resid)")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      }
     }
   }
 }

@@ -1,12 +1,10 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.CountDownLatch
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{IndexManifest, IndexStore, Similarity}
 
@@ -21,17 +19,7 @@ import graft.operators.{IndexManifest, IndexStore, Similarity}
   * stream's file index carries over when provably unchanged — and does
   * NOT when an in-place append grew it).
   */
-class Round16StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-round16-store-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round16StoreSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -40,8 +28,6 @@ class Round16StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-store16-$tag").toString
 
   private def build(dir: String, resid: Boolean, e: DataFrame): Unit =
     if (resid) IndexStore.buildIvfPqResidual(e, dir, numCells = 6,

@@ -1,12 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{IndexManifest, IndexStore, Similarity}
 
@@ -21,17 +18,7 @@ import graft.operators.{IndexManifest, IndexStore, Similarity}
   * batch set), and the publish guard fail-stops cross-process via the
   * create-exclusive tmp.
   */
-class Round17StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-round17-store-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round17StoreSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -40,8 +27,6 @@ class Round17StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-store17-$tag").toString
 
   private def build(dir: String, resid: Boolean, e: DataFrame): Unit =
     if (resid) IndexStore.buildIvfPqResidual(e, dir, numCells = 6,
@@ -390,8 +375,7 @@ class Round17StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // contract — scan I/O ∝ probed cells, not the corpus — must hold
     // for EVERY branch, or a deleted store silently reads the corpus
     // until compaction folds the patch
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val df = IndexStore.serveIvfPq(spark, dir, q, k = 5, probes = 2)
       df.collect()
       import org.apache.spark.sql.execution.FileSourceScanExec
@@ -415,7 +399,7 @@ class Round17StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
             s"$read of $total files without dynamic pruning " +
             s"(partitionFilters=${s.partitionFilters})")
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("compactIfAged counts deletion patches as layers") {

@@ -1,11 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Round-18 pipeline specs: the leak-repair ROUTE is auto-selected by
   * corpus statistics (row count, then a sampled Σ df² candidate-mass
@@ -14,22 +11,10 @@ import org.scalatest.BeforeAndAfterAll
   * LSH-banded scale path, and the decision is recorded in the run's
   * artifact. Outputs agree across routes on the driver fixture.
   */
-class Round18OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-round18-ops-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round18OpsSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-ops18-$tag").toString
 
   test("chooseLeakRoute: a small corpus keeps the exact path without paying the estimator") {
     val docs = Tables.documents(spark, sf)

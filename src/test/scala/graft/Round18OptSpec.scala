@@ -4,14 +4,13 @@ import graft.operators.{Dedup, Exec, IndexStore, Similarity}
 import graft.operators.Similarity.LloydBook
 import org.apache.spark.GraftListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Round-18 OPTIMIZATION equivalence specs: every rewrite in this round
   * claims bit-identical output — these tests pin each claim against the
@@ -35,16 +34,7 @@ import org.scalatest.BeforeAndAfterAll
   *    with the index geometry and shuffles only the small means, and an
   *    IndexStore build runs an exact number of Spark jobs.
   */
-class Round18OptSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round18OptSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -165,11 +155,8 @@ class Round18OptSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** The physical plan with AQE off, so it is final before execution. */
-  private def physical(df: => DataFrame): SparkPlan = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.queryExecution.executedPlan
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
+  private def physical(df: => DataFrame): SparkPlan =
+    withConf("spark.sql.adaptive.enabled" -> "false")(df.queryExecution.executedPlan)
 
   test("a Lloyd iteration shuffles twice, never an array<double>") {
     val plan = physical(stepPlan(4, 8))
@@ -189,18 +176,15 @@ class Round18OptSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         synchronized { jobs += 1 }
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-lloyd-jobs")
+    val dir = tmpDir("graft-lloyd-jobs")
     try {
       GraftListenerDrain.drain(spark.sparkContext)
       spark.sparkContext.addSparkListener(listener)
       IndexStore.buildIvfPq(embeddings.select("vec_id", "embedding"),
-        dir.resolve("store").toString, numCells = 8, cellIters = 1,
+        s"$dir/store", numCells = 8, cellIters = 1,
         numSub = 4, codebookK = 8, pqIters = 1)
       GraftListenerDrain.drain(spark.sparkContext)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
     val n = listener.synchronized(jobs)
     info(s"buildIvfPq ran $n jobs")
     // exact, not a ceiling: any change in the build's job count is a

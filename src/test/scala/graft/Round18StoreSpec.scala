@@ -1,13 +1,11 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{IndexStore, Similarity}
 
@@ -25,17 +23,7 @@ import graft.operators.{IndexStore, Similarity}
   * per-call temp directory: each call starts from an empty store and
   * nothing is left behind.
   */
-class Round18StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-round18-store-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round18StoreSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -44,8 +32,6 @@ class Round18StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-store18-$tag").toString
 
   private def build(dir: String, e: DataFrame): Unit =
     IndexStore.buildIvfPq(e, dir, numCells = 6, cellIters = 2,

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Dedup, TextOps}
 
 /** Round-9 operators: exact SimHash hamming pairs (pigeonhole-complete
@@ -12,16 +10,7 @@ import graft.operators.{Dedup, TextOps}
   * prefix filter). Each test pins the operator to a brute-force
   * reference computed with plain Spark ops on the same tiny corpus.
   */
-class Round9OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class Round9OpsSpec extends AnyFunSuite with SharedSpark {
 
   private def corpus() = {
     val s = spark; import s.implicits._

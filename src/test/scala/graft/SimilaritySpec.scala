@@ -1,25 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Dedup, Similarity}
 
 /** Scale-path similarity operators: the blocked exact all-pairs
   * equi-join, hyperplane-LSH candidates, the native hamming kernel,
   * and the q20 ⊆ q19 containment check on the driver testdata.
   */
-class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SimilaritySpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

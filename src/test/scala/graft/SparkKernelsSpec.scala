@@ -3,23 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Battery, Dedup, Multimodal, TimeSeriesOps}
 
 /** Operator kernels on tiny in-memory data: the ordered/stateful ops
   * (W1/W3/W4/W6), as-of join semantics, and the dedup signatures.
   */
-class SparkKernelsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SparkKernelsSpec extends AnyFunSuite with SharedSpark {
 
   private def tsDf(rows: Seq[(Long, String, Double)]): DataFrame = {
     import spark.implicits._

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Curation, Dedup, Packing, TextOps}
 import graft.streaming.Ingest
 import graft.streaming.Ingest.Reading
@@ -23,17 +22,7 @@ case class UserEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
 case class MaintWindow(user_id: Long, win_id: Long,
     start_ts: java.sql.Timestamp, end_ts: java.sql.Timestamp)
 
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-streaming-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   private def reading(meter: String, sec: Long, v: Double): Reading =
     Reading(meter, "Power", new java.sql.Timestamp(sec * 1000L), Seq(v), "W")
@@ -401,7 +390,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("file source streams dropped reading files (poll-cycle ingest)") {
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_filesrc")
+    val dir = java.nio.file.Paths.get(tmpDir("graft_filesrc"))
     val q = Ingest.fileSource(spark, dir.toString)
       .writeStream.format("memory").queryName("file_readings")
       .outputMode("append").start()
@@ -454,8 +443,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("last-wins parquet sink dedups same-timestamp re-appends (S7)") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tmpDir("graft_sink")
+    val ckpt = tmpDir("graft_ckpt")
     val mem = MemoryStream[Reading]
     val q = Ingest.lastWinsParquetSink(mem.toDF(), dir, ckpt).start()
     try {

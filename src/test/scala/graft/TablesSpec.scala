@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The events reader must survive the driver regenerating testdata with
   * a different parquet timestamp physical type — round 8's bench lost
@@ -12,22 +10,13 @@ import org.scalatest.BeforeAndAfterAll
   * TIMESTAMP(MICROS, isAdjustedToUTC=false)). Golden fixtures pin BOTH
   * layouts to the same known microsecond instants.
   */
-class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TablesSpec extends AnyFunSuite with SharedSpark {
 
   private val wantMicros =
     Seq(1704067200000000L, 1704067260500000L, 1704153599999999L)
 
   private def stageDir(fixture: String): String = {
-    val dir = Files.createTempDirectory("graft-tables")
+    val dir = Paths.get(tmpDir("graft-tables"))
     val src = Paths.get(getClass.getResource(s"/$fixture").toURI)
     Files.copy(src, dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     dir.toString

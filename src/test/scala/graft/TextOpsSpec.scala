@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.TextOps
 
 /** New-in-round-5 text-analysis operators: repetition signals (Gopher
@@ -12,16 +10,7 @@ import graft.operators.TextOps
   * computable math and the short-document edge cases the corpus never
   * exercises.
   */
-class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TextOpsSpec extends AnyFunSuite with SharedSpark {
 
   test("repetition signals match hand math; short docs never throw") {
     val s = spark; import s.implicits._

@@ -1,24 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** The fluent DSL over the canonical readings shape: each combinator
   * must compose to the expected result and stay a pure Catalyst plan.
   */
-class TsQuerySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-tsquery-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TsQuerySpec extends AnyFunSuite with SharedSpark {
 
   private def readings: DataFrame = {
     import spark.implicits._
