@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ReadingsLayout
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -494,16 +495,15 @@ object Ingest {
   /** S6/S7 sink: last-wins upsert per (meterId, series, ts) — the
     * reference's same-timestamp overwrite-on-append (P1Logger.cs:
     * 131-154) held IN STORAGE, not just at query time. Within a
-    * micro-batch the newest write wins (window below); across
-    * micro-batches a re-polled timestamp COMPACTS the touched
-    * partitions: the batch's (series, date) directories — and only
-    * those — are re-read, merged new-over-old per key, and swapped in
-    * via dynamic partition overwrite. Untouched partitions never
-    * rewrite, so at fleet scale the per-batch cost is bounded by the
-    * partitions a poll cycle actually lands in (normally each series'
-    * current date), never by the archive; the merged frame is
-    * persisted before the overwrite so the rewrite never reads the
-    * directories it is replacing.
+    * micro-batch the newest write wins; across micro-batches a
+    * re-polled timestamp COMPACTS the touched partitions: the batch's
+    * (series, date) directories — and only those — are re-read,
+    * merged new-over-old per key, and swapped in by
+    * `ReadingsLayout.writeLastWins`, the layout's own writer, so each
+    * touched partition is rewritten as one sorted file. Untouched
+    * partitions never rewrite, so at fleet scale the per-batch cost is
+    * bounded by the partitions a poll cycle actually lands in
+    * (normally each series' current date), never by the archive.
     */
   def lastWinsParquetSink(
       readings: DataFrame,
@@ -514,13 +514,6 @@ object Ingest {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val fresh = batch
-          .withColumn("_rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("meterId"), col("series"), col("ts"))
-              .orderBy(monotonically_increasing_id().desc)))
-          .filter(col("_rn") === 1).drop("_rn")
-          .withColumn("date", to_date(col("ts")))
         val out = new org.apache.hadoop.fs.Path(outDir)
         val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
         // first write = the layout has no partition directories yet (a
@@ -529,35 +522,20 @@ object Ingest {
           st.isDirectory && !st.getPath.getName.startsWith("_") &&
             !st.getPath.getName.startsWith(".")
         }
-        if (!hasData) {
-          fresh.write.mode("append").partitionBy("series", "date").parquet(outDir)
-        } else {
-          // partition-pruned read of ONLY the partitions this batch
-          // touches (tiny in-predicate: one poll cycle lands in a
-          // handful of (series, date) pairs)
-          val touched = fresh.select(col("series"), col("date")).distinct()
-            .collect().map(r => (r.getString(0), r.getDate(1)))
-          val pred = touched.map { case (s, d) =>
-            col("series") === lit(s) && col("date") === lit(d)
-          }.reduce(_ || _)
-          val existing = spark.read.parquet(outDir).filter(pred)
-          val merged = existing.withColumn("_pri", lit(0))
-            .unionByName(fresh.withColumn("_pri", lit(1)))
-            .withColumn("_rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("meterId"), col("series"), col("ts"))
-                .orderBy(col("_pri").desc)))
-            .filter(col("_rn") === 1).drop("_rn", "_pri")
-            .persist()
-          try {
-            merged.count() // materialize BEFORE the dirs it read start moving
-            merged.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("series", "date")
-              .parquet(outDir)
-          } finally merged.unpersist()
-        }
-        ()
+        val stored =
+          if (!hasData) None
+          else {
+            // partition-pruned read of ONLY the partitions this batch
+            // touches (tiny in-predicate: one poll cycle lands in a
+            // handful of (series, date) pairs)
+            val touched = batch.select(col("series"), to_date(col("ts"))).distinct()
+              .collect().map(r => (r.getString(0), r.getDate(1)))
+            val pred = touched.map { case (s, d) =>
+              col("series") === lit(s) && col("date") === lit(d)
+            }.reduce(_ || _)
+            Some(spark.read.parquet(outDir).filter(pred))
+          }
+        ReadingsLayout.writeLastWins(batch, stored, outDir)
       }
 
   /** Replace a parquet snapshot directory via a staged write + rename
@@ -591,13 +569,16 @@ object Ingest {
   /** Undo a [[swapSnapshot]] cut between its two renames: the live dir
     * is gone and `<dir>.bak` still holds the previous snapshot. Renaming
     * it back restores the last committed state, so the micro-batch that
-    * crashed (never committed to its checkpoint) re-runs against it.
+    * crashed (never committed to its checkpoint) re-runs against it. A
+    * rename that returns false throws, instead of leaving the live dir
+    * missing for the batch's read to fail on.
     */
   private[graft] def restoreSnapshot(spark: SparkSession, dir: String): Unit = {
     val live = new Path(dir)
     val bak = new Path(dir + ".bak")
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(bak)) fs.rename(bak, live)
+    if (!fs.exists(live) && fs.exists(bak) && !fs.rename(bak, live))
+      throw new java.io.IOException(s"snapshot restore could not rename $bak to $live")
   }
 
   /** S18 actuator sink stub: the control loop's side-effect boundary.

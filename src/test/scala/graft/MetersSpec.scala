@@ -162,24 +162,47 @@ class MetersSpec extends AnyFunSuite with SharedSpark {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir.bak")))
   }
 
+  /** Runs `body` with [[BakRenameFails]] registered under [[NoBak]]. */
+  private def withNoBak[T](body: => T): T = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set(s"fs.$NoBak.impl", classOf[BakRenameFails].getName)
+    hc.setBoolean(s"fs.$NoBak.impl.disable.cache", true)
+    try body
+    finally {
+      hc.unset(s"fs.$NoBak.impl")
+      hc.unset(s"fs.$NoBak.impl.disable.cache")
+    }
+  }
+
   test("swapSnapshot throws when a rename returns false and keeps the live snapshot") {
     val dir = tmpDir("meters") + "/snap"
     failedSnapshot(dir)
     val before = spark.read.parquet(dir).collect().toSet
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set(s"fs.$NoBak.impl", classOf[BakRenameFails].getName)
-    hc.setBoolean(s"fs.$NoBak.impl.disable.cache", true)
-    try {
+    withNoBak {
       val merged = spark.read.parquet(dir).withColumn("lastPollSuccessful", lit(true))
       val err = intercept[java.io.IOException] {
         graft.streaming.Ingest.swapSnapshot(merged, s"$NoBak:$dir")
       }
       assert(err.getMessage.contains(s"$dir.bak"), err.getMessage)
-    } finally {
-      hc.unset(s"fs.$NoBak.impl")
-      hc.unset(s"fs.$NoBak.impl.disable.cache")
     }
     assert(spark.read.parquet(dir).collect().toSet == before)
+  }
+
+  test("restoreSnapshot throws when the rename back returns false and keeps the backup") {
+    val dir = tmpDir("meters") + "/snap"
+    failedSnapshot(dir)
+    val before = spark.read.parquet(dir).collect().toSet
+    // the crash window: rename(live, bak) happened, rename(staged, live) did not
+    java.nio.file.Files.move(java.nio.file.Paths.get(dir),
+      java.nio.file.Paths.get(s"$dir.bak"))
+    withNoBak {
+      val err = intercept[java.io.IOException] {
+        graft.streaming.Ingest.restoreSnapshot(spark, s"$NoBak:$dir")
+      }
+      assert(err.getMessage.contains(s"$dir.bak"), err.getMessage)
+    }
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
+    assert(spark.read.parquet(s"$dir.bak").collect().toSet == before)
   }
 }
 
@@ -188,14 +211,17 @@ object MetersSpec {
   /** Scheme of [[BakRenameFails]]. */
   val NoBak = "nobak"
 
-  /** The local file system, except that a rename onto a `.bak` path
-    * returns false without throwing, as Hadoop's `rename` contract
-    * allows. Every other rename, Spark's commit renames included, works.
+  /** The local file system, except that a rename onto or out of a
+    * `.bak` path returns false without throwing, as Hadoop's `rename`
+    * contract allows: a snapshot swap cannot move the live dir aside,
+    * and a restore cannot move the backup back onto the live path.
+    * Every other rename, Spark's commit renames included, works.
     */
   class BakRenameFails extends RawLocalFileSystem {
     override def getUri: URI = URI.create(s"$NoBak:///")
     override def getScheme: String = NoBak
     override def rename(src: Path, dst: Path): Boolean =
-      !dst.getName.endsWith(".bak") && super.rename(src, dst)
+      !dst.getName.endsWith(".bak") && !src.getName.endsWith(".bak") &&
+        super.rename(src, dst)
   }
 }

@@ -1,6 +1,17 @@
 package graft
 
+import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import PlanSpec.{keyOrdered, layoutFiles}
 
 /** Plan-shape regression net: the properties that make the flagship
   * queries scale-safe at 100 TB are asserted on the EXECUTED plan, so
@@ -147,26 +158,13 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("(series, date) layout files are each sorted by (meterId, ts)") {
-    import org.apache.spark.sql.functions._
     val dir = tmpDir("readings_sorted")
-    // a file's rows are one contiguous run of a scan partition, in file
-    // order, so the row position orders them within their file
     ReadingsLayout.write(Tables.readings(spark, sf), dir)
-    val rows = spark.read.parquet(dir)
-      .select(input_file_name().as("f"),
-        monotonically_increasing_id().as("i"), col("meterId"), col("ts"))
-      .collect().toSeq
-    val files = rows.groupBy(_.getString(0)).values.toSeq
-      .map(_.sortBy(_.getLong(1)))
+    val files = layoutFiles(spark, dir)
     assert(files.size > 2, s"layout produced only ${files.size} files")
-    val unsorted = files.filter(_.sliding(2).exists {
-      case Seq(a, b) =>
-        val m = a.getString(2).compareTo(b.getString(2))
-        m > 0 || (m == 0 && a.getTimestamp(3).after(b.getTimestamp(3)))
-      case _ => false
-    })
+    val unsorted = files.filterNot { case (_, rows) => keyOrdered(rows) }.keys
     assert(unsorted.isEmpty, s"${unsorted.size} of ${files.size} files " +
-      s"are not in (meterId, ts) order: ${unsorted.map(_.head.getString(0))}")
+      s"are not in (meterId, ts) order: $unsorted")
   }
 
   test("(series, date) layout prunes partitions at file-listing time") {
@@ -715,6 +713,45 @@ class PlanSpec extends AnyFunSuite with SharedSpark {
       val pf = filt.queryExecution.executedPlan.toString
       assert(pf.contains("LeftSemi"), pf.take(3000))
       assert(pf.contains("BroadcastHashJoin"), pf.take(3000))
+    }
+  }
+}
+
+object PlanSpec {
+
+  /** Every data file of the readings layout at `dir`, with its rows'
+    * (meterId, ts) in file order: a file's rows are one contiguous run of
+    * a scan partition, in file order, so the row position orders them
+    * within their file.
+    */
+  def layoutFiles(spark: SparkSession, dir: String): Map[String, Seq[(String, Timestamp)]] = {
+    import org.apache.spark.sql.functions._
+    spark.read.parquet(dir)
+      .select(input_file_name(), monotonically_increasing_id(), col("meterId"), col("ts"))
+      .collect().toSeq.groupBy(_.getString(0)).map { case (f, rows) =>
+        f -> rows.sortBy(_.getLong(1)).map(r => (r.getString(2), r.getTimestamp(3)))
+      }
+  }
+
+  /** Whether `rows` are in (meterId, ts) order. */
+  def keyOrdered(rows: Seq[(String, Timestamp)]): Boolean =
+    rows.sliding(2).forall {
+      case Seq((m1, t1), (m2, t2)) =>
+        val c = m1.compareTo(m2)
+        c < 0 || (c == 0 && !t1.after(t2))
+      case _ => true
+    }
+
+  /** The footer of every parquet data file under the local directory `dir`. */
+  def footers(spark: SparkSession, dir: String): Seq[(String, ParquetMetadata)] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    val files =
+      try walk.iterator.asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
+      finally walk.close()
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      try f -> reader.getFooter finally reader.close()
     }
   }
 }

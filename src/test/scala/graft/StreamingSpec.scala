@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -474,6 +476,83 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       assert(v60.toSeq == Seq(5.0))
     } finally q.stop()
   }
+
+  /** The parquet data files under `dir`, counted per partition directory. */
+  private def filesPerPartition(dir: String): Map[String, Int] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".parquet")).toSeq
+      .groupBy(f => java.nio.file.Paths.get(dir).relativize(f.getParent).toString)
+      .map { case (part, fs) => part -> fs.size }
+    finally walk.close()
+  }
+
+  test("last-wins sink leaves each touched partition one file in (meterId, ts) order") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val dir = tmpDir("graft_sink_compact")
+    val mem = MemoryStream[Reading]
+    val q = Ingest.lastWinsParquetSink(mem.toDF(), dir, tmpDir("graft_ckpt")).start()
+    def temp(meter: String, sec: Long) =
+      Reading(meter, "Temp", new java.sql.Timestamp(sec * 1000L), Seq(20.0), "C")
+    try {
+      mem.addData(reading("m3", 120, 1), reading("m1", 60, 2), reading("m2", 0, 3),
+        reading("m1", 0, 4), reading("m3", 0, 5), reading("m2", 60, 6),
+        temp("m2", 30), temp("m1", 30))
+      q.processAllAvailable()
+      // the same (Power, day 0) again: two new keys and a re-poll, plus a new day
+      mem.addData(reading("m2", 30, 7), reading("m1", 60, 8), reading("m3", 60, 9),
+        reading("m1", 86400, 10))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(filesPerPartition(dir) == Map(
+      "series=Power/date=1970-01-01" -> 1,
+      "series=Power/date=1970-01-02" -> 1,
+      "series=Temp/date=1970-01-01" -> 1))
+    val files = PlanSpec.layoutFiles(spark, dir)
+    val unsorted = files.filterNot { case (_, rows) => PlanSpec.keyOrdered(rows) }
+    assert(unsorted.isEmpty, s"files not in (meterId, ts) order: $unsorted")
+    assert(files.values.map(_.size).sum == 11)
+    val m1At60 = spark.read.parquet(dir)
+      .filter(col("meterId") === "m1" && col("ts") === new java.sql.Timestamp(60000L))
+      .collect().map(_.getAs[scala.collection.Seq[Double]]("values").head)
+    assert(m1At60.toSeq == Seq(8.0))
+  }
+
+  test("layout files from the batch writer and the sink are zstd with a plain ts chunk") {
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val seeded = tmpDir("graft_layout_codec")
+    ReadingsLayout.write(Seq(reading("m2", 0, 1), reading("m1", 60, 2),
+      reading("m1", 86400, 3)).toDF(), seeded)
+    // the sink's first write (an empty dir), then its rewrite of a touched
+    // partition beside a new one
+    val sunk = tmpDir("graft_sink_codec")
+    val mem = MemoryStream[Reading]
+    val q = Ingest.lastWinsParquetSink(mem.toDF(), sunk, tmpDir("graft_ckpt")).start()
+    try {
+      mem.addData(reading("m2", 0, 1), reading("m1", 60, 2))
+      q.processAllAvailable()
+      mem.addData(reading("m1", 0, 3), reading("m1", 86400, 4))
+      q.processAllAvailable()
+    } finally q.stop()
+    for (dir <- Seq(seeded, sunk)) {
+      val footers = PlanSpec.footers(spark, dir)
+      assert(footers.size >= 2, s"$dir holds ${footers.size} files")
+      val chunks = for {
+        (f, footer) <- footers
+        block <- footer.getBlocks.asScala
+        chunk <- block.getColumns.asScala
+      } yield (f, chunk)
+      val notZstd = chunks.filter(_._2.getCodec != CompressionCodecName.ZSTD)
+      assert(notZstd.isEmpty, notZstd.map { case (f, c) => s"$f ${c.getPath}: ${c.getCodec}" })
+      val ts = chunks.filter(_._2.getPath.toDotString == "ts")
+      assert(ts.size >= footers.size)
+      val dictTs = ts.filter(_._2.hasDictionaryPage)
+      assert(dictTs.isEmpty, s"ts chunks with a dictionary page: ${dictTs.map(_._1)}")
+    }
+  }
+
   test("blocklist stream gates documents at ingest, matching the batch body row-for-row") {
     import spark.implicits._
     val rows = streamMatchesBatch(spark,
