@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Curation, Dedup, TextOps}
+import graft.operators.{Curation, Dedup, Exec, TextOps}
 
 /** Executable end-to-end curation pipeline — the composed batch run a
   * user of this library would schedule over a crawl drop, chaining the
@@ -163,22 +163,11 @@ object CurationPipeline {
       routeLog: Option[String] = None,
       stageDir: Option[String] = None): (DataFrame, DataFrame, DataFrame) = {
     // stage boundary: materialize an id-keyed verdict frame and cut its
-    // lineage (parquet round-trip + a GC nudge so ContextCleaner
-    // reclaims the now-unreferenced upstream shuffle files)
+    // lineage (Exec.stageTo: parquet round-trip + a GC settle so the
+    // ContextCleaner reclaims the now-unreferenced upstream shuffle files)
     def staged(name: String, df: DataFrame): DataFrame = stageDir match {
       case None => df
-      case Some(d) =>
-        val p = s"$d/$name"
-        df.write.mode("overwrite").parquet(p)
-        // the ContextCleaner deletes shuffle files ASYNCHRONOUSLY off a
-        // weak-reference queue the GC feeds — nudge the GC, then give
-        // the cleaner thread a moment to drain before the next stage
-        // starts piling up its own files (measured: without the settle,
-        // ~30 GB of a finished stage's shuffle was still on disk when
-        // the next stage began)
-        System.gc()
-        Thread.sleep(3000)
-        spark.read.parquet(p)
+      case Some(d) => Exec.stageTo(df, s"$d/$name")
     }
     val docs = Tables.documents(spark, sfDir)
     val gate = staged("gate", TextOps.gopherRules(docs, "doc_id", "text")

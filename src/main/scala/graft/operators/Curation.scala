@@ -193,16 +193,15 @@ object Curation {
       budgetNum: Long = 1L, budgetDen: Long = 2L,
       buckets: Int = 64): DataFrame = {
     require(budgetDen > 0 && budgetNum >= 0, "budget must be a ratio >= 0")
-    // materialize the slim projection ONCE (localCheckpoint truncates the
-    // lineage, the CC-loop discipline): both the bucket-sum collect below
-    // and the returned query read the checkpointed (id, score, count)
-    // rows, so the text is tokenized and scored a single time — without
-    // this the full corpus scan runs twice per invocation
-    val slim = docs.select(col(idCol).as("doc_id"),
+    // materialize the slim (id, score, count) projection ONCE, to a temp
+    // parquet because the returned query reads it as well as the
+    // bucket-sum collect below: otherwise the full corpus is tokenized
+    // and scored twice per invocation
+    val slim = Exec.materializeToTemp(docs.select(col(idCol).as("doc_id"),
         round(TextOps.stopwordRatio(col(textCol)), 6).as("q_score"),
         TextOps.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-      .withColumn("__bkt", floor(col("q_score") * buckets).cast("int"))
-      .localCheckpoint()
+      .withColumn("__bkt", floor(col("q_score") * buckets).cast("int")),
+      "tokbudget")
     val sums = slim.groupBy(col("__bkt"))
       .agg(sum(col("n_tokens")).as("s"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq

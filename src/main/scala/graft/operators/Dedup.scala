@@ -646,14 +646,7 @@ object Dedup {
       .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
       .distinct()
     val cand = candStage match {
-      case Some(p) =>
-        candLazy.write.mode("overwrite").parquet(p)
-        // same settle as CurationPipeline.staged: the ContextCleaner
-        // frees shuffle files off a GC-fed weak-ref queue — nudge and
-        // give it a moment before verify starts writing its own
-        System.gc()
-        Thread.sleep(3000)
-        df.sparkSession.read.parquet(p)
+      case Some(p) => Exec.stageTo(candLazy, p)
       case None => candLazy
     }
     cand
@@ -680,16 +673,16 @@ object Dedup {
     * lower), so the 100 TB cost profile is: rounds × shuffles of the
     * PAIR set — which LSH already bounded — never of the corpus.
     *
-    * Materialization: the convergence loop iterates over persisted
-    * edge sets (each round's cache replaces the previous, which is
-    * unpersisted immediately) so the expensive upstream plan — for
-    * near-dup clustering, the whole MinHash-LSH pipeline — runs ONCE,
-    * not once per convergence probe; each round's frame is additionally
-    * re-rooted at its cached RDD (Exec.rebind) so round R's logical
-    * plan is O(1) nodes instead of O(R) re-analyzed per signature()
-    * action. The CONVERGED star edges are then written once to a
-    * JVM-temp parquet and the RETURNED frame reads them back (guide
-    * §3.3 materialization) — this preserves the shared-session
+    * Materialization: the convergence loop iterates over edge sets
+    * materialized in an [[Exec.scoped]] block (each round's frame
+    * replaces the previous, which is released immediately) so the
+    * expensive upstream plan — for near-dup clustering, the whole
+    * MinHash-LSH pipeline — runs ONCE, not once per convergence probe;
+    * each round's frame is rooted at its materialized blocks so round
+    * R's logical plan is O(1) nodes instead of O(R) re-analyzed per
+    * signature() action. The CONVERGED star edges are then written
+    * once to a JVM-temp parquet and the RETURNED frame reads them back
+    * (guide §3.3 materialization) — this preserves the shared-session
     * contract (no persistent RDDs survive the call) WITHOUT the old
     * stateless-replay pattern, which re-executed the whole upstream a
     * second time in every consumption of the result (measured: the
@@ -717,10 +710,10 @@ object Dedup {
 
     // One alternating large-star/small-star round (Kiveris et al.).
     // CRITICAL plan-shape constraint: the input frame is referenced
-    // EXACTLY ONCE (both fan-outs go through explode, not union) so
-    // the stateless replay below has plan size LINEAR in the round
-    // count — the union formulation duplicates the input subtree ~4×
-    // per round and Catalyst then chokes exponentially on any graph
+    // EXACTLY ONCE (both fan-outs go through explode, not union) so a
+    // round's plan holds one copy of its input — the union formulation
+    // duplicated the input subtree ~4× per round, and Catalyst choked
+    // exponentially on a chained (un-rebound) plan for any graph
     // needing more than a few rounds (a 300-node path hung the
     // analyzer before this was reshaped).
     def oneRound(edges: DataFrame): DataFrame = {
@@ -766,52 +759,39 @@ object Dedup {
       (r.getLong(0), r.getLong(1))
     }
 
-    // Convergence loop over persisted edge sets: the upstream plan
-    // (LSH) materializes exactly once, each round shuffles only the
-    // ever-shrinking PAIR set. persist() + CacheManager — NOT
-    // localCheckpoint — because Dataset.unpersist() only releases
-    // CacheManager entries; a localCheckpoint's persisted RDD lingers
-    // until GC and breaks the shared-session no-cached-RDDs contract.
-    // Lineage stays un-truncated, but oneRound references its input
-    // once, so round R's plan is O(R) nodes — analysis stays linear.
-    // every persist is tracked so the finally releases ALL of them even
-    // when an action throws mid-round (otherwise the round's fresh
-    // persist leaks into the shared session on the error path)
-    val live = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    // Convergence loop over scope rebinds: the upstream (LSH) runs once,
+    // each round shuffles only the ever-shrinking PAIR set, and round R's
+    // plan is O(1) nodes — un-rebound, every signature() re-analyzed the
+    // whole round history and the pair source (round-18 profile: driver
+    // in Catalyst, executors idle). The scope releases the live rounds on
+    // return and on every error path (maxEdges, maxRounds, a failed job).
     var rounds = 0
-    val edges = try {
-      var ck = edges0.persist(); live += ck
-      var sig = signature(ck) // materializes the cache
+    val edges = Exec.scoped { s =>
+      var ck = s.rebind(edges0)
+      var sig = signature(ck)
       require(sig._1 <= maxEdges,
         s"connectedComponents: ${sig._1} edges exceed maxEdges=$maxEdges — " +
           "the pair source has gone quadratic; use a sparser source " +
           "(LSH candidates, higher threshold) or raise the bound")
-      // re-root each round at its cached RDD (Exec.rebind) so round R's
-      // logical plan is O(1) nodes: without this, every signature()
-      // action re-analyzes the full round history INCLUDING the pair
-      // source's subtree — measured driver-bound on the round-18
-      // profile (executors idle, driver in Catalyst rules)
-      var ckR = Exec.rebind(ck)
       var converged = false
       while (!converged && rounds < maxRounds) {
-        val next = oneRound(ckR).persist(); live += next
-        val nsig = signature(next) // materializes next BEFORE dropping ck
-        ck.unpersist(); live -= ck
+        val next = s.rebind(oneRound(ck))
+        val nsig = signature(next)
+        s.release(ck)
         ck = next
-        ckR = Exec.rebind(next)
         converged = nsig == sig
         sig = nsig
         rounds += 1
       }
       require(converged, s"connectedComponents did not converge in $maxRounds rounds")
       // Materialize the CONVERGED star edges to a JVM-temp parquet and
-      // return the read-back plan (guide §3.3): carries no cache
-      // dependency into the shared session, and replaces the old
-      // stateless replay, which re-executed the ENTIRE upstream — pair
-      // generation included — a second time in every consumption of
-      // the result. The write is pair-set-sized (two longs per edge).
-      Exec.materializeToTemp(ckR, "cc")
-    } finally live.foreach(_.unpersist())
+      // return the read-back plan (guide §3.3): carries no block
+      // dependency out of the scope, and replaces the old stateless
+      // replay, which re-executed the ENTIRE upstream — pair generation
+      // included — a second time in every consumption of the result.
+      // The write is pair-set-sized (two longs per edge).
+      Exec.materializeToTemp(ck, "cc")
+    }
     // at the fixpoint every edge is (rep, member): stars centered at the
     // component minimum. Roots label themselves.
     edges.select(col("v").as("node"), col("u").as("rep"))

@@ -1,36 +1,71 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Execution-shape helpers for ITERATIVE operators (CC rounds, PageRank
-  * steps, greedy selection rounds). They change where a plan is rooted,
-  * never a value: every row that flows through them is bit-identical.
+/** The one place an operator materializes and releases an intermediate
+  * frame (HarnessSpec fails on any other file under `operators/` that
+  * caches, persists or checkpoints). The rule: a frame that dies with
+  * the call lives in an [[Exec.scoped]] block; a frame the operator
+  * RETURNS, or that a lazy plan it returns reads, goes through
+  * [[Exec.materializeToTemp]]. Either way no blocks outlive the call, and
+  * no row changes: only where a plan is rooted does.
   *
-  * Why they exist (round-18 optimization measurement): chained
-  * iteration frames re-enter Catalyst on EVERY downstream action — the
-  * logical tree grows with each round (and doubles per round when a
-  * frame is referenced twice, as PageRank's contrib+dangling did), so
-  * analysis/AQE re-optimization comes to dominate wall time. q191
-  * measured 67 s isolated at sf0.1 with all 32 executor threads IDLE
-  * and the driver thread inside Catalyst/AQE rules (the guide §7.3
-  * thread-dump diagnosis); the data itself is kilobytes. Persisting the
-  * frames (which these operators always did) caps EXECUTION, but not
-  * re-ANALYSIS — the optimizer still walks the full logical history
-  * before the cache lookup replaces subtrees.
+  * Why re-rooting matters (round-18 measurement): chained iteration
+  * frames re-enter Catalyst on EVERY downstream action, and the logical
+  * tree grows each round (doubling when a frame is referenced twice, as
+  * PageRank's contrib+dangling did). q191 measured 67 s isolated at
+  * sf0.1 with all 32 executor threads IDLE and the driver inside
+  * Catalyst/AQE rules; caching caps execution, not re-analysis.
   */
 object Exec {
 
-  /** Re-root `df` at its compiled RDD: same rows, same schema, but the
-    * logical plan downstream actions see is a single leaf. When `df` is
-    * persisted, executing the re-rooted frame computes through (and
-    * populates) that cache exactly as the original would. Use inside an
-    * iteration loop, after each round's frame is persisted, so round
-    * R's plan is O(1) nodes instead of O(R) — the documented fix for
-    * the q183/q191 driver-bound profile. The row round-trip converts
-    * container types only (long/double/array), never arithmetic.
+  final class Scope private[Exec] () {
+    private val held = scala.collection.mutable.LinkedHashSet.empty[RDD[_]]
+
+    /** Materialize `df` once (a local checkpoint, one job) and return a
+      * frame rooted at one leaf over its blocks: round R's plan is O(1)
+      * nodes, and with AQE off the leaf keeps `df`'s output
+      * partitioning. The scope holds the blocks before the job runs, so
+      * a failing job leaks nothing.
+      */
+    def rebind(df: DataFrame): DataFrame = {
+      val ck = df.localCheckpoint(eager = false)
+      held += root(ck)
+      root(ck).count()
+      ck
+    }
+
+    /** Drop a frame [[rebind]] returned, e.g. the previous round once the
+      * next is materialized. Through the RDD: `Dataset.unpersist` leaves
+      * a checkpoint's RDD in `getPersistentRDDs`.
+      */
+    def release(df: DataFrame): Unit = {
+      held -= root(df)
+      root(df).unpersist(blocking = false); ()
+    }
+
+    private[Exec] def close(): Unit = {
+      held.foreach(_.unpersist(blocking = false))
+      held.clear()
+    }
+
+    private def root(df: DataFrame): RDD[_] = df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd
+      case p => throw new IllegalArgumentException(
+        s"not a frame Exec.Scope.rebind returned: ${p.nodeName}")
+    }
+  }
+
+  /** Run `body`, then release every frame its [[Scope]] still holds,
+    * on return or throw. What `body` returns must not read a scope frame
+    * lazily: collect it, or [[materializeToTemp]] it inside the body.
     */
-  def rebind(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.rdd, df.schema)
+  def scoped[A](body: Scope => A): A = {
+    val s = new Scope
+    try body(s) finally s.close()
+  }
 
   // JVM-scoped temp roots for materialized intermediates; deleted on
   // exit so a long bench session cannot leak them into the next run
@@ -45,22 +80,30 @@ object Exec {
     f.delete(); ()
   }
 
-  /** Materialize `df` once to a JVM-temp parquet and return a plan
-    * that READS IT BACK — the guide §3.3 discipline ("materialising an
-    * intermediate result truncates the plan"). For loops whose RESULT
-    * is returned to a caller: the previous stateless-replay pattern
-    * re-executed the entire upstream (LSH/blocked pair generation
-    * included) a second time when the caller materialized the result,
-    * because the loop's own persisted frames must be released before
-    * return (the shared-session no-cached-RDDs contract). The write is
-    * intra-invocation — a fresh directory per call, recomputed from
-    * the inputs on every invocation, removed at JVM exit — so no state
-    * survives across runs.
+  /** Materialize `df` once to a fresh JVM-temp parquet and return a plan
+    * that READS IT BACK (guide §3.3: materialising an intermediate
+    * truncates the plan). For frames an operator returns: the caller can
+    * evaluate the result any number of times, the upstream never
+    * re-executes, and no blocks stay cached. The directory itself lives
+    * until JVM exit, so a long-lived session keeps one per call.
     */
   def materializeToTemp(df: DataFrame, tag: String): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory(s"graft-$tag-").toFile
     tmpRoots.add(dir)
     df.write.mode("overwrite").parquet(dir.getAbsolutePath)
     df.sparkSession.read.parquet(dir.getAbsolutePath)
+  }
+
+  /** Write `df` to `path` as a pipeline stage boundary and read it back
+    * after a settle: the ContextCleaner deletes shuffle files off a
+    * GC-fed weak-reference queue, so nudge the GC and give the cleaner a
+    * moment before the next stage piles up its own (measured: without
+    * it, ~30 GB of a finished stage's shuffle was still on disk).
+    */
+  def stageTo(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    System.gc()
+    Thread.sleep(3000)
+    df.sparkSession.read.parquet(path)
   }
 }

@@ -362,8 +362,9 @@ object Similarity {
     *  - Seeds: one collect of the FULL corpus' `vec_id < max k` rows;
     *    book b's seeds are the ids below its own k, sliced driver-side.
     *  - The training rows (the `trainSampleMod` sample) are decoded and
-    *    sliced once per call, one row per (vector, book), cached when
-    *    more than one iteration reads them.
+    *    sliced once per call, one row per (vector, book), materialized
+    *    in an [[Exec.scoped]] block when more than one iteration reads
+    *    them.
     *  - Each iteration is one action ([[lloydStep]]): every slice finds
     *    its nearest codeword with the [[NearestCodes]] kernel against
     *    its book's broadcast codeword array, map-side, and the
@@ -403,11 +404,11 @@ object Similarity {
       val train =
         if (trainSampleMod == 1) vAll
         else vAll.filter(pmod(col("vec_id"), lit(trainSampleMod)) === 0)
-      // cached only when a second iteration reads it again
-      val sliced =
-        if (maxIters > 1) lloydSlices(train, span.toSeq).cache()
-        else lloydSlices(train, span.toSeq)
-      try {
+      Exec.scoped { s =>
+        // materialized only when a second iteration reads it again
+        val sliced =
+          if (maxIters > 1) s.rebind(lloydSlices(train, span.toSeq))
+          else lloydSlices(train, span.toSeq)
         for (i <- 1 to maxIters) {
           val active = books.filter(_.iters >= i).map(_.id)
           val means = lloydStep(sliced, active.map(id => id -> cent(id)))
@@ -417,7 +418,7 @@ object Similarity {
               .map { case (_, cid, cv) => (cid, cv) }.toSeq.sortBy(_._1)
           }
         }
-      } finally { sliced.unpersist(false); () }
+      }
     }
     (d, cent)
   }
@@ -952,16 +953,15 @@ object Similarity {
     * Scale shape: edges = the L43 kNN graph (cell-partitioned
     * equi-join); each iteration is one (src)-keyed broadcast-free
     * equi-join + a (dst)-keyed narrow aggregation — the sparse matvec.
-    * Iteration frames are persisted and EAGERLY materialized (N-row,
-    * two longs) so the unrolled lineage doesn't re-execute the graph
-    * build per reference, then released as soon as the next iteration
-    * lands — the connectedComponents tracked-persist discipline, so a
-    * long-lived session (Bench runs each query 3×) accumulates zero
-    * cached blocks across invocations. The final top list (≤ `top`
-    * rows — driver-bounded by contract; exemplar selection asks for
-    * tens, never a corpus) is collected so every persisted frame can
-    * be dropped before return; the returned frame is a local relation
-    * with no cache dependency (the shared-session contract).
+    * Iteration frames are materialized in an [[Exec.scoped]] block
+    * (N-row, two longs) so the unrolled lineage doesn't re-execute the
+    * graph build per reference, and each is released as soon as the
+    * next iteration lands, so a long-lived session (Bench runs each
+    * query 3×) accumulates zero cached blocks across invocations. The
+    * final top list (≤ `top` rows — driver-bounded by contract;
+    * exemplar selection asks for tens, never a corpus) is collected
+    * inside the scope; the returned frame is a local relation with no
+    * block dependency (the shared-session contract).
     */
   def knnPageRank(vectors: DataFrame, k: Int, numCells: Int, iters: Int,
       probes: Int, prIters: Int, top: Int, salt: Int = 1,
@@ -970,37 +970,28 @@ object Similarity {
     val spark = vectors.sparkSession
     import spark.implicits._
     val nodes = vectors.select(col("vec_id").as("id"))
-    // every persist is tracked so the finally releases ALL of them even
-    // when an action throws mid-iteration (the connectedComponents
-    // error-path rule: nothing may leak into the shared session)
-    val live = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val out = try {
+    val out = Exec.scoped { s =>
       val edges = ivfKnnGraph(vectors, k, numCells, iters, probes,
         salt, trainSampleMod)
         .select(col("qid").as("src"), col("nid").as("dst"))
       val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      val edgesD = edges.join(outdeg, "src").persist(); live += edgesD
-      // Re-root at the cached RDD (Exec.rebind): the PR recurrence
-      // references pr twice per step (contrib + dangling mass), so a
-      // chained logical plan DOUBLES per iteration and Catalyst/AQE
-      // re-analysis — not execution — dominated the round-18 profile
-      // (q191: 67 s isolated, executors idle). With re-rooted frames
-      // every iteration's plan is constant-size over two leaf
-      // relations.
-      val edgesR = Exec.rebind(edgesD)
+      // Every frame the recurrence reads is a scope rebind: the PR step
+      // references pr twice (contrib + dangling mass), so a chained
+      // logical plan DOUBLES per iteration and Catalyst/AQE re-analysis
+      // — not execution — dominated the round-18 profile (q191: 67 s
+      // isolated, executors idle). Rebound, every iteration's plan is
+      // constant-size over leaf relations.
+      val edgesR = s.rebind(edges.join(outdeg, "src"))
       // the dangling-node set is STATIC (nodes with no out-edge), so
       // it is computed ONCE into a flag column instead of a per-
       // iteration left_anti join; n is the same 1-row count scalar the
       // old per-iteration broadcast frame carried (DriverBoundsSpec
       // class: 1-row)
-      val nodesF = nodes
+      val nodesR = s.rebind(nodes
         .join(outdeg.withColumnRenamed("src", "id"), Seq("id"), "left")
-        .select(col("id"), col("deg").isNull.as("dang")).persist()
-      live += nodesF
-      val nodesR = Exec.rebind(nodesF)
+        .select(col("id"), col("deg").isNull.as("dang")))
       val nTotal = nodesR.count()
-      var pr = nodesR.withColumn("pr", lit(1000000L)).persist(); live += pr
-      var prR = Exec.rebind(pr)
+      var prR = s.rebind(nodesR.withColumn("pr", lit(1000000L)))
       for (_ <- 1 to prIters) {
         val contrib = edgesR.join(prR, edgesR("src") === prR("id"))
           .select(col("dst"), expr("pr div deg").as("ct"))
@@ -1008,26 +999,23 @@ object Similarity {
         val dang = prR.filter(col("dang"))
           .agg(coalesce(sum(col("pr")), lit(0L)).as("dsum"))
           .select(expr(s"dsum div ${nTotal}L").as("dshare"))
-        val next = nodesR
+        // materialized BEFORE the previous round is released
+        val next = s.rebind(nodesR
           .join(contrib, nodesR("id") === contrib("dst"), "left")
           .crossJoin(broadcast(dang))
           .select(col("id"), col("dang"),
             (lit(150000L) + expr(
-              "(17 * (coalesce(csum, 0) + dshare)) div 20")).as("pr"))
-          .persist()
-        live += next
-        next.count() // materialize next BEFORE dropping the previous
-        pr.unpersist(); live -= pr
-        pr = next
-        prR = Exec.rebind(next)
+              "(17 * (coalesce(csum, 0) + dshare)) div 20")).as("pr")))
+        s.release(prR)
+        prR = next
       }
       // top-bounded collect (rank, id, pr) — the q183 DriverBoundsSpec
       // ceiling; collecting here is what lets the last iteration frame
-      // be unpersisted instead of riding the returned plan
+      // be released instead of riding the returned plan
       prR.orderBy(col("pr").desc, col("id").asc).limit(top)
         .select(col("id"), col("pr"))
         .as[(Long, Long)].collect()
-    } finally live.foreach(_.unpersist())
+    }
     out.zipWithIndex.map { case ((id, p), i) => (i + 1L, id, p) }
       .toSeq.toDF("rank", "vec_id", "pr_micro")
       .orderBy(col("rank"))
@@ -1232,24 +1220,22 @@ object Similarity {
       round(aggregate(
         zip_with(col("v"), lit(c.toArray), (a, b) => (a - b) * (a - b)),
         lit(0.0), (acc, x) => acc + x), 6)
-    val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .cache()
-    val live = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val picked = try {
+    val picked = Exec.scoped { s =>
+      val v = s.rebind(
+        vectors.select(col("vec_id"), asDouble(col("embedding")).as("v")))
       val seed = v.agg(min(col("vec_id"))).as[Long].head()
       val seedVec =
         v.filter(col("vec_id") === seed).select(col("v")).as[Seq[Double]].head()
       val acc =
         scala.collection.mutable.ArrayBuffer((1L, seed, 0.0, seedVec))
-      // carried state: (vec_id, v, mind) persisted per round, re-rooted
-      // at its cached RDD so round R's plan doesn't chain R histories
-      var st = v.select(col("vec_id"), col("v"), dist2(seedVec).as("mind"))
-        .persist()
-      live += st
-      var stR = Exec.rebind(st)
+      // carried state: (vec_id, v, mind), one scope rebind per round so
+      // round R's plan doesn't chain R histories
+      var st = s.rebind(
+        v.select(col("vec_id"), col("v"), dist2(seedVec).as("mind")))
+      s.release(v)
       var exhausted = false
       while (acc.size < k && !exhausted) {
-        val next = stR.filter(!col("vec_id").isInCollection(acc.map(_._2)))
+        val next = st.filter(!col("vec_id").isInCollection(acc.map(_._2)))
           .agg(max(struct(col("mind"),
             (-col("vec_id")).as("negid"), col("v"))).as("m"))
           .select(col("m.mind"), (-col("m.negid")).as("vec_id"), col("m.v"))
@@ -1258,21 +1244,16 @@ object Similarity {
           case (Some(r), Some(id), cv) =>
             acc += ((acc.size + 1L, id, r, cv))
             if (acc.size < k) {
-              val nst = stR.select(col("vec_id"), col("v"),
-                least(col("mind"), dist2(cv)).as("mind")).persist()
-              live += nst
-              nst.count() // materialize BEFORE dropping the previous round
-              st.unpersist(); live -= st
+              // materialized BEFORE the previous round is released
+              val nst = s.rebind(st.select(col("vec_id"), col("v"),
+                least(col("mind"), dist2(cv)).as("mind")))
+              s.release(st)
               st = nst
-              stR = Exec.rebind(nst)
             }
           case _ => exhausted = true // fewer than k points in the corpus
         }
       }
       acc
-    } finally {
-      live.foreach(_.unpersist())
-      v.unpersist(false)
     }
     picked.toSeq.map { case (ord, id, r, _) => (ord, id, r) }
       .toDF("ord", "vec_id", "radius")
@@ -2041,12 +2022,16 @@ object Similarity {
     */
   /** The shared driver recurrence behind [[powerIterationPC1]] and
     * [[allButTopTransform]]: 6-dp-rounded mean vector and the
-    * power-iterated, per-step-rounded top principal direction.
+    * power-iterated, per-step-rounded top principal direction. The
+    * decoded vectors are a scope frame: they serve only this recurrence
+    * (each caller re-projects the source for its returned frame).
     */
-  private def pc1Recurrence(
-      v: DataFrame, iters: Int): (Seq[Double], Seq[Double]) = {
-    val spark = v.sparkSession
+  private def pc1Recurrence(vectors: DataFrame,
+      iters: Int): (Seq[Double], Seq[Double]) = Exec.scoped { s =>
+    val spark = vectors.sparkSession
     import spark.implicits._
+    val v = s.rebind(
+      vectors.select(col("vec_id"), asDouble(col("embedding")).as("v")))
     val mu: Seq[Double] = v
       .select(posexplode(col("v")).as(Seq("d", "x")))
       .groupBy("d").agg(round(avg(col("x")), 6).as("m"))
@@ -2073,13 +2058,7 @@ object Similarity {
     require(iters >= 1, s"iters must be >= 1: $iters")
     val spark = vectors.sparkSession
     import spark.implicits._
-    val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .cache()
-    val (mu, pc) = pc1Recurrence(v, iters)
-    // The cache only serves the driver-iterated recurrence above; the
-    // returned summary frame is built from a fresh projection (one
-    // scan) so the unpersist here can never race its evaluation.
-    v.unpersist(false)
+    val (mu, pc) = pc1Recurrence(vectors, iters)
     val muLit = typedlit(mu)
     val vLit = typedlit(pc)
     val centered = zip_with(col("v"), muLit, (a, b) => a - b)
@@ -2114,13 +2093,7 @@ object Similarity {
     */
   def allButTopTransform(vectors: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    val v = vectors.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .cache()
-    val (mu, pc) = pc1Recurrence(v, iters)
-    // Same cache discipline as powerIterationPC1: the cache backs only
-    // the recurrence; the returned transform re-projects the source so
-    // unpersisting here cannot invalidate the (lazy) output plan.
-    v.unpersist(false)
+    val (mu, pc) = pc1Recurrence(vectors, iters)
     val muLit = typedlit(mu)
     val pcLit = typedlit(pc)
     val out = vectors
@@ -2238,28 +2211,30 @@ object Similarity {
     require(k >= 1 && candN >= k, s"bad k=$k candN=$candN")
     val spark = vectors.sparkSession
     import spark.implicits._
-    val cand = vectors
-      .select(col("vec_id").as("id"), asDouble(col("embedding")).as("v"))
-      .orderBy(md5(col("id").cast("string")), col("id"))
-      .limit(candN)
-      .cache()
-    // 6-dp rounded elementwise centroid (q113 discipline), d-bounded
-    val cent = cand.select(posexplode(col("v")).as(Seq("d", "x")))
-      .groupBy(col("d")).agg(round(avg(col("x")), 6).as("m"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1))).toMap
-    val centLit = typedlit((0 until cent.size).map(cent(_)))
     def safeCos(a: Column, b: Column): Column =
       when(dot_product(a, a) === 0 || dot_product(b, b) === 0, lit(0.0))
         .otherwise(cosine(a, b))
-    val rel = cand
-      .select(col("id"), round(safeCos(col("v"), centLit), 6).as("rel"))
-      .as[(Long, Double)].collect().toMap
-    val sims = cand.as("a").join(cand.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("i"), col("b.id").as("j"),
-        round(safeCos(col("a.v"), col("b.v")), 6).as("s"))
-      .as[(Long, Long, Double)].collect()
-      .flatMap { case (i, j, s) => Seq((i, j) -> s, (j, i) -> s) }.toMap
-    cand.unpersist(false)
+    val (rel, sims) = Exec.scoped { s =>
+      val cand = s.rebind(vectors
+        .select(col("vec_id").as("id"), asDouble(col("embedding")).as("v"))
+        .orderBy(md5(col("id").cast("string")), col("id"))
+        .limit(candN))
+      // 6-dp rounded elementwise centroid (q113 discipline), d-bounded
+      val cent = cand.select(posexplode(col("v")).as(Seq("d", "x")))
+        .groupBy(col("d")).agg(round(avg(col("x")), 6).as("m"))
+        .collect().map(r => (r.getInt(0), r.getDouble(1))).toMap
+      val centLit = typedlit((0 until cent.size).map(cent(_)))
+      val rel = cand
+        .select(col("id"), round(safeCos(col("v"), centLit), 6).as("rel"))
+        .as[(Long, Double)].collect().toMap
+      val sims = cand.as("a").join(cand.as("b"), col("a.id") < col("b.id"))
+        .select(col("a.id").as("i"), col("b.id").as("j"),
+          round(safeCos(col("a.v"), col("b.v")), 6).as("s"))
+        .as[(Long, Long, Double)].collect()
+        .flatMap { case (i, j, sim) => Seq((i, j) -> sim, (j, i) -> sim) }
+        .toMap
+      (rel, sims)
+    }
     val ids = rel.keys.toSeq.sorted
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val chosen = scala.collection.mutable.Set.empty[Long]

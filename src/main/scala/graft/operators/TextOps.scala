@@ -313,22 +313,20 @@ object TextOps {
     // one row per doc: term-sorted sparse vector (as PARALLEL arrays —
     // see SparseDot's scaladoc for why not array<struct>) +
     // order-pinned norm
-    val vecs = weighted.groupBy(col("doc_id"))
+    // materialized, unlike minhashLsh's deliberately-lazy shingle frame:
+    // this one sits 4 shuffles deep (tokenize → tf → df join → vectorize)
+    // and feeds BOTH sides of the self-join. The returned join reads it,
+    // so it is a temp parquet, not a scope frame; the read-back's real
+    // stats let a small vectorized corpus broadcast instead of
+    // sort-merging per cell.
+    val vecs = Exec.materializeToTemp(weighted.groupBy(col("doc_id"))
       .agg(array_sort(collect_list(struct(col("term"), col("w")))).as("vec"))
       .select(col("doc_id"),
         transform(col("vec"), e => e.getField("term")).as("terms"),
         transform(col("vec"), e => e.getField("w")).as("ws"),
         sqrt(aggregate(col("vec"), lit(0.0),
           (a, x) => a + x.getField("w") * x.getField("w"))).as("nrm"))
-      .filter(col("nrm") > 0)
-      // cached, unlike minhashLsh's deliberately-lazy shingle frame:
-      // that one re-runs a stateless codegen'd projection per branch,
-      // while this frame sits 4 shuffles deep (tokenize → tf → df join
-      // → vectorize) and feeds BOTH sides of the self-join — the
-      // kmeansCentroidSeq cache discipline (Similarity.scala). Also
-      // gives the planner real stats, so a small vectorized corpus
-      // broadcasts instead of sort-merging per cell.
-      .cache()
+      .filter(col("nrm") > 0), "tfidf")
     // cell scheme as in Similarity.nearDupPairsBlocked: doc → block by
     // id hash; cell (bi,bj), bi ≤ bj, holds every cross-block pair once
     val b = numBlocks
@@ -877,13 +875,15 @@ object TextOps {
     require(numShards > 0 && numShards <= 65536,
       "numShards must be in [1, 65536] (16-bit hash prefix)")
     val h = md5(concat(col(idCol).cast("string"), lit(":" + seed)))
-    val base = docs
+    // materialized once: the offsets collect below and the returned
+    // query both read it
+    val base = Exec.materializeToTemp(docs
       .select(col(idCol).as("doc_id"), h.as("__h"))
       .withColumn("shard",
         pmod(conv(substring(col("__h"), 1, 4), 16, 10).cast("int"),
           lit(numShards)).cast("int"))
-      .withColumn("__sub", conv(substring(col("__h"), 1, 1), 16, 10).cast("int"))
-      .localCheckpoint()
+      .withColumn("__sub", conv(substring(col("__h"), 1, 1), 16, 10).cast("int")),
+      "shard")
     // exclusive prefix offsets: rows in the same shard living in a
     // strictly smaller sub-bucket; 16·numShards rows, driver-bounded.
     // One sorted pass (O(G log G) for G groups, not the G² re-filter

@@ -51,12 +51,16 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
     for (q <- Seq("q19_minhash_lsh", "q20_simhash_neardup",
         "q22_embedding_neardup", "q23_ivf_topk", "q47_embedding_clusters",
         "q49_dedup_clusters", "q53_ngram_jaccard",
-        "q54_embedding_dedup_clusters")) {
+        "q54_embedding_dedup_clusters", "q77_token_budget",
+        "q81_tfidf_cosine", "q82_kcenter_coreset", "q104_shard_assignment",
+        "q125_power_iteration_pc1", "q128_all_but_top", "q146_kmv_overlap",
+        "q162_mmr_select", "q183_knn_pagerank")) {
       SparkEntry.queries(q)(spark, sf).count()
     }
     // a long-running session serving many queries must not accumulate
-    // cache: the LSH plans are stateless, and the k-means Lloyd loop
-    // unpersists its scoped cache before returning
+    // cache: the LSH plans are stateless, the iterative operators
+    // release their Exec.scoped frames before returning, and a frame an
+    // operator returns reads a temp parquet, not cached blocks
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       spark.sparkContext.getPersistentRDDs.values.map(_.name).toSeq.toString)
   }

@@ -77,4 +77,24 @@ class HarnessSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, "use the SharedSpark session instead")
   }
+
+  test("only Exec materializes or releases frames inside the operators") {
+    // split literals, so this file does not match its own scan
+    val calls = Seq(".cache" + "()", ".persist" + "(", ".unpersist" + "(",
+      ".localCheckpoint" + "(", ".checkpoint" + "(")
+    val root = Paths.get("src/main/scala/graft/operators")
+    val files: Seq[Path] = {
+      val s = Files.walk(root)
+      try s.filter(_.toString.endsWith(".scala")).toArray.toSeq.map(_.asInstanceOf[Path])
+      finally s.close()
+    }
+    assert(files.exists(_.getFileName.toString == "Exec.scala"),
+      s"the scan of $root missed Exec")
+    val offenders = files.filter { p =>
+      val text = new String(Files.readAllBytes(p), StandardCharsets.ISO_8859_1)
+      p.getFileName.toString != "Exec.scala" && calls.exists(text.contains)
+    }
+    assert(offenders.isEmpty,
+      "materialize through Exec.scoped or Exec.materializeToTemp instead")
+  }
 }

@@ -5,6 +5,7 @@ import graft.operators.Similarity.LloydBook
 import org.apache.spark.GraftListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -16,8 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * claims bit-identical output — these tests pin each claim against the
   * shape it replaced.
   *
-  *  - Exec.rebind: re-rooting a frame at its RDD changes the logical
-  *    plan, never a row or the schema.
+  *  - Exec.scoped's rebind: re-rooting a frame at its materialized
+  *    blocks changes the logical plan, never a row, the schema or (AQE
+  *    off) the output partitioning, and the scope leaves no persisted
+  *    RDD behind, on return or on throw.
   *  - Exec.materializeToTemp: the read-back relation carries the same
   *    rows and leaves no persisted RDDs behind.
   *  - pqCodebooks (batched across subspaces): identical centroids to
@@ -43,14 +46,37 @@ class Round18OptSpec extends AnyFunSuite with SharedSpark {
   test("Exec.rebind preserves rows and schema exactly") {
     val df = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding"), col("label"))
-      .persist()
-    try {
-      val re = Exec.rebind(df)
+    def persisted = spark.sparkContext.getPersistentRDDs
+    Exec.scoped { s =>
+      val re = s.rebind(df)
+      assert(persisted.nonEmpty, "rebind materialized nothing")
       assert(re.schema == df.schema)
       val a = df.collect().map(_.toString).sorted.toSeq
       val b = re.collect().map(_.toString).sorted.toSeq
       assert(a == b, "rebind changed row content")
-    } finally { df.unpersist(); () }
+    }
+    assert(persisted.isEmpty, persisted.values.map(_.toString).toSeq)
+    // AQE off: an adaptive root reports no partitioning to keep
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      Exec.scoped { s =>
+        val re = s.rebind(df.repartition(8, col("vec_id")))
+        re.queryExecution.executedPlan.outputPartitioning match {
+          case h: HashPartitioning =>
+            assert(h.numPartitions == 8 &&
+              h.expressions.map(_.sql) == Seq("vec_id"), h.toString)
+          case p => fail(s"rebind lost the hash partitioning: $p")
+        }
+      }
+    }
+    assert(persisted.isEmpty, persisted.values.map(_.toString).toSeq)
+    val ex = intercept[IllegalStateException] {
+      Exec.scoped { s =>
+        s.rebind(df)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(ex.getMessage == "body failed")
+    assert(persisted.isEmpty, persisted.values.map(_.toString).toSeq)
   }
 
   test("Exec.materializeToTemp: same rows, no persisted RDDs left") {
