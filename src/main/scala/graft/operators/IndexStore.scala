@@ -35,8 +35,10 @@ final case class IndexManifest(version: Long, kind: String,
     patches: Seq[CodePatch] = Nil)
 
 /** A pinned serving handle (see [[IndexStore.openReader]]): the
-  * manifest version, artifact relations, and their resolved file
-  * indexes, held across serves so the per-call driver cost is zero.
+  * manifest version, the code stream's resolved file index, and the
+  * version's centroid and codebook rows as local relations (collected
+  * once at open or reopen), held across serves so the per-call driver
+  * cost is zero: the probe assignment's codeword collect runs no job.
   * `rawCodes` keeps the partition columns untouched so Catalyst's
   * dynamic partition pruning lands on the partition column directly.
   */
@@ -64,36 +66,23 @@ final class IndexReader private[operators] (spark: SparkSession,
 
   /** INCREMENTAL re-open (round-16): resolve the store's current
     * manifest and return a reader pinned to it, CARRYING OVER every
-    * artifact relation whose content is provably unchanged. Centroids/
-    * codebooks/meta are immutable once published (a refresh writes new
-    * names, never edits one in place, and GC never touches a name the
-    * current manifest references), so a NAME match transfers their
-    * resolved file index — partition discovery + parquet footers, the
-    * ~1.5 s/√N cost [[IndexStore.openReader]] pays — for free. The
-    * CODE STREAM is the one artifact that can grow in place
-    * ([[IndexStore.appendVectors]] adds `batch=*` partitions without a
-    * publish, and an at-least-once replay can REWRITE its own batch
-    * partition in place), so a name match is confirmed by ONE
-    * top-level directory listing comparing the batch partition STATE
-    * (name → mtime) against the state captured before the held file
-    * index resolved — still O(batches), never the O(cells × batches)
-    * recursive discovery + footer pass. The mtime comparison is what
-    * catches the same-names-different-files replay overwrite: the
-    * rewritten batch directory's children changed, its mtime moved,
-    * and the reader re-resolves instead of serving a file index
-    * pointing at deleted part- files. A deletion patch in either
-    * manifest (the `patches` overlay) likewise forces a re-read — the
-    * logical stream's shape changed even though the primary segment
-    * did not. A centroid-only refresh (the common maintenance publish)
-    * thus reuses codebooks, meta, and the corpus-sized code stream and
-    * re-reads only the tiny centroid relation: re-open cost tracks the
+    * artifact relation whose content is provably unchanged.
+    * Centroids/codebooks/meta are immutable once published (a refresh
+    * writes new names; GC never touches a name the current manifest
+    * references), so a NAME match carries them over. The CODE STREAM
+    * can grow in place ([[IndexStore.appendVectors]] adds `batch=*`
+    * partitions without a publish, and an at-least-once replay can
+    * REWRITE its own batch partition), so a name match is confirmed by
+    * ONE top-level listing comparing the batch partition state (name →
+    * mtime) with the state captured before the held file index
+    * resolved — O(batches), never the recursive discovery + footer
+    * pass. A changed mtime (the replay overwrite) or a deletion patch in
+    * either manifest forces a re-read. Re-open cost thus tracks the
     * changed-artifact fraction, not the store size. Same version ⇒
-    * returns `this` (the poll costs one manifest listing; appends
-    * without a publish stay invisible to a pinned reader by design —
-    * the version pin IS the consistency boundary, and an adopted
-    * refresh/compact/delete publish makes them visible). Serving
-    * semantics are identical to a cold open at the same version
-    * (spec-pinned, relations referentially reused).
+    * returns `this`: appends without a publish stay invisible to a
+    * pinned reader by design (the version pin IS the consistency
+    * boundary). Serving is identical to a cold open at the same
+    * version (spec-pinned, relations referentially reused).
     */
   def reopen(): IndexReader = {
     val m2 = IndexStore.currentManifest(spark, dir)
@@ -101,7 +90,7 @@ final class IndexReader private[operators] (spark: SparkSession,
     else {
       def rel(name: IndexManifest => String, cur: DataFrame): DataFrame =
         if (name(m2) == name(manifest)) cur
-        else spark.read.parquet(s"$dir/${name(m2)}")
+        else IndexStore.localRelation(spark, s"$dir/${name(m2)}")
       val (ns, ww) =
         if (m2.meta == manifest.meta) (numSub, w)
         else {
@@ -178,6 +167,18 @@ final class IndexReader private[operators] (spark: SparkSession,
   *                          ([[compactCodes]]/[[deleteVectors]] rows)
   *   dir/arrivals         — batch-partitioned vector arrivals the
   *                          streaming maintenance loop accumulates
+  *
+  * Encoding: one writer per artifact kind ([[writeCodes]] for every
+  * code segment, [[writeRelation]] for the rest), zstd pages and no
+  * dictionary on `vec_id`. Bytes on a 6,180-vector, 8-cell, 4×8 store
+  * after one append and one delete, parent Snappy layout → this:
+  *  - code segment (24,800 rows, 16 files): `vec_id` 49,685 → 8,171,
+  *    `code` 10,898 → 10,042, `sub` 1,474 → 1,548, footers and page
+  *    headers 14,420 → 14,224; whole 76,477 → 33,985 (3.08 → 1.37 B
+  *    per code row);
+  *  - centroids 9,567 → 5,482 and codebooks 12,139 → 6,482 (4 files →
+  *    one each);
+  *  - the store 178,056 → 73,893 (28.81 → 11.96 B per live vector).
   *
   * PUBLISH IS ONE ATOMIC POINTER SWAP: a refresh writes its new
   * artifacts completely, then renames `.manifest-<v>.tmp` →
@@ -294,14 +295,11 @@ object IndexStore {
     * [[writeCentroids]], [[reassignCells]], [[publishRefresh]],
     * [[publishRefreshGated]], the builders) runs its ENTIRE body —
     * manifest resolution, artifact writes, manifest swap, ops-log row —
-    * inside this lock, so concurrent callers queue instead of racing:
-    * the manifest each op resolves is the manifest it publishes
-    * against, two ops never write the same `codes-<v>` artifact name,
-    * and two parquet appends never share one directory's `_temporary`
-    * staging. The [[publishManifest]] race guard beneath it is thereby
-    * never tripped from inside this JVM — it remains the fail-stop
-    * backstop for CROSS-PROCESS writers, which must still serialize
-    * externally (the lock is keyed by the exact dir string, one JVM).
+    * inside this lock, so concurrent callers queue instead of racing
+    * (each op publishes against the manifest it resolved, and no two
+    * ops share an artifact name or a `_temporary` staging dir). The
+    * [[publishManifest]] guard stays the fail-stop backstop for
+    * CROSS-PROCESS writers (the lock is keyed by the dir string).
     * Reentrant because gated refresh publishes through publishRefresh.
     * Readers never take it: serve/openReader/reopen stay lock-free
     * (reader isolation is the manifest swap, not a lock).
@@ -321,28 +319,20 @@ object IndexStore {
     * and the previous version's manifests + every artifact either
     * references; delete the rest (older readers must re-resolve).
     *
-    * SINGLE-WRITER-AT-A-TIME, two layers: IN-PROCESS the publish
+    * SINGLE-WRITER-AT-A-TIME, two layers: in-process the publish
     * serializer ([[withStoreLock]]) queues whole mutating operations,
-    * so this guard never trips from concurrent sinks in one JVM;
-    * CROSS-PROCESS it is enforced fail-stop here. Two unserialized
-    * publishers would each read the same current version
-    * and race to publish `version+1`; the guard makes exactly one win
-    * — a per-dir lock covers the exists-check-then-rename within the
-    * JVM, and the loser throws [[IllegalStateException]] WITHOUT
-    * touching the winner's manifest, so the store always serves a
-    * consistent version (racing-publish spec). CROSS-PROCESS the mutex
-    * is the CREATE-REFUSES-EXISTING of the tmp file (`fs.create(tmp,
-    * overwrite = false)`): atomic no-overwrite create on HDFS; on a
-    * local filesystem Hadoop implements it as exists-check-then-create,
-    * so a narrow two-JVM race window remains there (far narrower than
-    * the silently-overwriting rename it replaced — and the in-JVM lock
-    * covers the only concurrency this repo actually runs). Two
-    * publishers racing the same `.manifest-<v>.tmp` name thus almost
-    * always see exactly one create succeed. Recovery note: a publisher crashing between
-    * the tmp create and the rename orphans the tmp and fail-stops
-    * every later attempt at that version — deliberately loud (the
-    * crash may have left partial artifacts); delete the `.tmp` to
-    * re-admit the version.
+    * so this guard never trips from one JVM; cross-process it is
+    * enforced fail-stop here. Two unserialized publishers would race to
+    * publish `version+1`; a per-dir lock covers the exists-check-then-
+    * rename within the JVM, and the loser throws
+    * [[IllegalStateException]] WITHOUT touching the winner's manifest
+    * (racing-publish spec). Across processes the mutex is the
+    * create-refuses-existing of the tmp file (`fs.create(tmp,
+    * overwrite = false)`): atomic on HDFS; on a local filesystem Hadoop
+    * checks then creates, so a narrow two-JVM window remains there. A
+    * publisher crashing between the tmp create and the rename orphans
+    * the tmp and fail-stops every later attempt at that version —
+    * deliberately loud; delete the `.tmp` to re-admit the version.
     */
   private[graft] def publishManifest(spark: SparkSession, dir: String,
       m: IndexManifest): Unit = {
@@ -466,9 +456,18 @@ object IndexStore {
     * partition pruning is meant to win. At very large cell counts
     * (beyond ~10⁵ directories) a deployment would bucket `cell` by a
     * modulus instead; autoCells caps at 65536, inside the safe range.
+    *
+    * The one writer of every code segment: the build, appends,
+    * compaction, refreshes and both delete paths. `batch` names the one
+    * batch the rows land in; a patch passes None and keeps each row's
+    * own `batch` column. Each task sorts by (batch, cell, vec_id, sub),
+    * so a file's rows are in (vec_id, sub) order by statement, not by
+    * the planned write. One batch is added as a literal after the sort:
+    * sorted on, Catalyst folds it to a leading literal, and the planned
+    * write then re-sorts by (batch, cell) alone (seen in its plans).
     */
   private def writeCodes(codes: DataFrame, path: String,
-      batch: Long): Unit = {
+      batch: Option[Long]): Unit = {
     // one-file-per-cell needs only each cell's rows hashing to ONE
     // task; the explicit partition count (4 tasks/core, above the
     // shuffle default) bounds WRITE TASK DURATIONS — a corpus rewrite
@@ -479,12 +478,35 @@ object IndexStore {
     val parts = math.max(
       spark.sessionState.conf.numShufflePartitions,
       4 * spark.sparkContext.defaultParallelism)
-    codes.select(col("vec_id"), col("sub"), col("code"), col("cell"))
-      .withColumn("batch", lit(batch))
+    val own = if (batch.isEmpty) Seq(col("batch")) else Nil
+    val sorted = codes
+      .select(Seq(col("vec_id"), col("sub"), col("code"), col("cell")) ++ own: _*)
       .repartition(parts, col("cell"))
+      .sortWithinPartitions(own ++ Seq(col("cell"), col("vec_id"), col("sub")): _*)
+    batch.fold(sorted)(b => sorted.withColumn("batch", lit(b)))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
+      .option("compression", "zstd")
+      .option("parquet.enable.dictionary#vec_id", "false")
       .partitionBy("batch", "cell").parquet(path)
+  }
+
+  /** The one writer of the index-sized relations (centroids, codebooks,
+    * meta): a few dozen rows, one zstd file.
+    */
+  private def writeRelation(rel: DataFrame, path: String): Unit =
+    rel.coalesce(1).write.mode("overwrite").option("compression", "zstd")
+      .parquet(path)
+
+  /** A stored index relation collected once into a local relation: a
+    * collect over it (the probe assignment's codeword array) runs no
+    * Spark job.
+    */
+  private[operators] def localRelation(spark: SparkSession,
+      path: String): DataFrame = {
+    val stored = spark.read.parquet(path)
+    spark.createDataFrame(java.util.Arrays.asList(stored.collect(): _*),
+      stored.schema)
   }
 
   /** The LOGICAL code stream of a manifest with its raw partition
@@ -568,13 +590,12 @@ object IndexStore {
       numSub, w)
     val m = IndexManifest(v1, kind, s"centroids-$v1", s"codebooks-$v1",
       s"codes-$v1", s"meta-$v1")
-    centRel.write.mode("overwrite").parquet(artifactPath(dir, m.centroids))
-    bookRel.write.mode("overwrite").parquet(artifactPath(dir, m.codebooks))
-    writeCodes(codes, artifactPath(dir, m.codes), batch = 0L)
-    Seq((numSub, w, numCells, codebookK))
-      .toDF("num_sub", "w", "num_cells", "codebook_k")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(artifactPath(dir, m.meta))
+    writeRelation(centRel, artifactPath(dir, m.centroids))
+    writeRelation(bookRel, artifactPath(dir, m.codebooks))
+    writeCodes(codes, artifactPath(dir, m.codes), Some(0L))
+    writeRelation(Seq((numSub, w, numCells, codebookK))
+      .toDF("num_sub", "w", "num_cells", "codebook_k"),
+      artifactPath(dir, m.meta))
     publishManifest(spark, dir, m)
   }
 
@@ -597,7 +618,8 @@ object IndexStore {
     * driver job for the pruning (spec-pinned: `dynamicpruning` in the
     * scan's partitionFilters, files read ≤ probes × |queries|). The
     * serve's one driver fold is the k-row centroid array its probe
-    * assignment collects ([[Similarity.assignCellsRelation]]).
+    * assignment collects ([[Similarity.assignCellsRelation]]), from the
+    * reader's local relation.
     *
     * `refineWith` composes the exact re-rank stage
     * ([[Similarity.refineTopK]]) over the served shortlist — the
@@ -616,19 +638,15 @@ object IndexStore {
     openReader(spark, dir).serve(queries, k, probes, allowed, refineWith,
       kShort)
 
-  /** Open a PINNED reader on the store's current version: the manifest
-    * is resolved, the artifact relations created (this is where
-    * partition discovery and parquet footer reads happen — the
-    * driver-side cost, measured at ~1.5 s/serve at sf1's 256
-    * cell directories, growing with √N), and the meta row fetched —
-    * ONCE. Every `serve` on the handle reuses the resolved file index,
-    * so warm serve latency is the ADC plan alone (perfbench's `serve`
-    * workload times exactly this). This is how a serving deployment
-    * runs: open at startup, serve many, poll
-    * [[currentManifest]].version (a tiny directory listing) and re-open
-    * only when maintenance publishes a new version. The handle pins its version by construction — the
-    * reader-isolation guarantee as an API rather than an accident of
-    * plan timing. GC keeps the previous version's artifacts, so a
+  /** Open a PINNED reader on the store's current version, ONCE: the
+    * manifest is resolved, the code stream's file index built (partition
+    * discovery and footer reads — ~1.5 s at sf1's 256 cell directories,
+    * growing with √N), the centroid and codebook rows collected and the
+    * meta row fetched. Every `serve` reuses them, so warm serve latency
+    * is the ADC plan alone (perfbench's `serve` workload times this). A
+    * deployment opens at startup, serves many, and re-opens when
+    * [[currentManifest]].version moves. The handle pins its version by
+    * construction; GC keeps the previous version's artifacts, so a
     * reader at most one version behind always serves.
     */
   def openReader(spark: SparkSession, dir: String): IndexReader = {
@@ -638,8 +656,8 @@ object IndexStore {
     // check (a conservative re-read) instead of being recorded as
     // covered by a file index that never saw it
     val state = listBatchState(spark, artifactPath(dir, m.codes))
-    val centRel = spark.read.parquet(artifactPath(dir, m.centroids))
-    val bookRel = spark.read.parquet(artifactPath(dir, m.codebooks))
+    val centRel = localRelation(spark, artifactPath(dir, m.centroids))
+    val bookRel = localRelation(spark, artifactPath(dir, m.codebooks))
     val meta = spark.read.parquet(artifactPath(dir, m.meta)).head()
     new IndexReader(spark, dir, m, centRel, bookRel,
       rawLogicalCodes(spark, dir, m), state,
@@ -687,7 +705,7 @@ object IndexStore {
     val batchCodes = Similarity.ivfPqEncode(antiTombstones(vectors, dir),
       centRel, bookRel, m.kind, meta.getAs[Int]("num_sub"),
       meta.getAs[Int]("w"))
-    writeCodes(batchCodes, artifactPath(dir, m.codes), batch = batchId)
+    writeCodes(batchCodes, artifactPath(dir, m.codes), Some(batchId))
     }
   }
 
@@ -834,15 +852,10 @@ object IndexStore {
     * partition with one file per cell, and the recall gate REJECTING
     * refreshes (exactly what it is for) means nothing ever folds them
     * back — so a serve reads B files per probed cell after B-1 appends
-    * and the flat-warm-serve result erodes with maintenance age
-    * (BASELINE.md's round-16 aging rows measured exactly this).
-    * Compaction is the
-    * [[graft.operators.Layout.compactionPlan]]/`compactionRewrite`
-    * discipline applied THROUGH the versioned publish: rewrite into
-    * fresh artifacts, swap the manifest pointer, let GC retire the old
-    * stream — readers in flight keep their version, and a crash
-    * mid-compact leaves an unreferenced directory and the old manifest
-    * serving.
+    * and warm serves erode with maintenance age (BASELINE.md's round-16
+    * aging rows). Compaction rewrites into fresh artifacts and swaps the
+    * manifest pointer: readers in flight keep their version, and a
+    * crash mid-compact leaves the old manifest serving.
     *
     * IDEMPOTENT: a stream already at a single batch 0 is left
     * untouched — no new version, `published = false` in the report (a
@@ -872,7 +885,7 @@ object IndexStore {
         val codesName = s"codes-$v1"
         val nOld = readCodes(spark, dir, m).count()
         writeCodes(readCodes(spark, dir, m), artifactPath(dir, codesName),
-          batch = 0L)
+          Some(0L))
         val nNew = spark.read.parquet(artifactPath(dir, codesName)).count()
         require(nNew == nOld,
           s"compact row-count drift: $nOld -> $nNew; aborting publish")
@@ -937,20 +950,17 @@ object IndexStore {
     * ([[CodePatch]]) supersedes exactly that (cells × current batches)
     * slice of the earlier segments. Bytes written ∝ the touched-cell
     * fraction of the corpus (BASELINE.md's round-17 delete row), not
-    * the corpus — at 100 TB that is the difference between a takedown
-    * being a minutes job and an hours job. Centroids/codebooks/meta
-    * are REUSED by name (deletion changes neither cell geometry nor
-    * any surviving vector's encoding, for BOTH kinds — residual codes
-    * depend only on their own centroid, which is untouched). This is
-    * how the repo's own curation drop-lists land on the serving index:
-    * q110's canonical-keeper losers, q167's split-leak evictions,
-    * q163's PII gate — and a takedown request — all produce exactly a
-    * vec_id list.
+    * the corpus. Centroids/codebooks/meta are REUSED by name (deletion
+    * changes neither cell geometry nor any surviving vector's encoding,
+    * for BOTH kinds). Curation drop-lists (q110, q163, q167) and
+    * takedowns all land here as a vec_id list.
     *
     * FALLBACK to the round-16 full-stream rewrite (which also folds
     * patches and batches to one segment) when the patch would stop
-    * paying: touched cells > `maxPatchCells`, or the patch chain is
-    * already `maxPatches` deep.
+    * paying: touched cells > `maxPatchCells`, every cell touched (the
+    * patch would supersede the whole stream and keep every earlier
+    * segment referenced), or the patch chain is already `maxPatches`
+    * deep.
     *
     * Serving equivalence (spec-pinned, both kinds, both paths): serve
     * after delete ≡ serve before delete with `allowed` =
@@ -966,13 +976,9 @@ object IndexStore {
     * superseded slice and never serve.
     *
     * IDEMPOTENT: ids with no code rows are ignored; a delete that
-    * would remove nothing publishes NOTHING (no version churn on
-    * replay — `published = false` in the report). One narrow pass of
-    * the TOUCHED cells per drop-list — a deployment batches drop-lists
-    * the way it batches appends. Scale shape: the drop-list
-    * broadcast-joins when small (Catalyst's call), the stream never
-    * carries text or vectors, and the publish is the same atomic
-    * pointer swap.
+    * would remove nothing publishes NOTHING (`published = false`, no
+    * version churn on replay). One narrow pass of the TOUCHED cells per
+    * drop-list; the publish is the same atomic pointer swap.
     *
     * Returns the one-row report (version_before, version_after,
     * published, n_rows_removed, mode = none|patch|full,
@@ -1005,13 +1011,14 @@ object IndexStore {
         // by maxPatchCells before it reaches the driver
         val touched = hit.select(col("cell").cast("long")).distinct()
           .limit(maxPatchCells + 1).collect().map(_.getLong(0)).sorted.toSeq
-        if (touched.size > maxPatchCells || m.patches.size >= maxPatches) {
+        val numCells = spark.read.parquet(artifactPath(dir, m.meta)).head()
+          .getAs[Int]("num_cells")
+        if (touched.size > maxPatchCells || touched.size >= numCells
+            || m.patches.size >= maxPatches) {
           // full-stream rewrite: folds patches and batches to batch 0
           val nOld = raw.count()
-          writeCodes(raw.select(col("vec_id"), col("sub"), col("code"),
-            col("cell").cast("long").as("cell"))
-            .join(drop, Seq("vec_id"), "left_anti"),
-            artifactPath(dir, codesName), batch = 0L)
+          writeCodes(raw.join(drop, Seq("vec_id"), "left_anti"),
+            artifactPath(dir, codesName), Some(0L))
           val nNew = spark.read.parquet(artifactPath(dir, codesName)).count()
           require(nNew == nOld - nHit,
             s"delete row-count drift: $nOld - $nHit != $nNew; " +
@@ -1029,17 +1036,8 @@ object IndexStore {
           val touchedRows =
             raw.filter(col("cell").isin(touched.map(_.toInt): _*))
           val nTouched = touchedRows.count()
-          val surviving = touchedRows.join(drop, Seq("vec_id"), "left_anti")
-            .select(col("vec_id"), col("sub"), col("code"),
-              col("batch").cast("long").as("batch"),
-              col("cell").cast("long").as("cell"))
-          surviving.repartition(math.max(
-            spark.sessionState.conf.numShufflePartitions,
-            4 * spark.sparkContext.defaultParallelism), col("cell"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch", "cell")
-            .parquet(artifactPath(dir, codesName))
+          writeCodes(touchedRows.join(drop, Seq("vec_id"), "left_anti"),
+            artifactPath(dir, codesName), None)
           val nNew = nTouched - nHit
           if (nNew > 0L) {
             val check = spark.read.parquet(artifactPath(dir, codesName))
@@ -1079,8 +1077,8 @@ object IndexStore {
         "(residual codes encode x − c(cell)); use publishRefresh")
     val v1 = m.version + 1
     val next = m.copy(version = v1, centroids = s"centroids-$v1")
-    Similarity.centroidRelation(spark, cent)
-      .write.mode("overwrite").parquet(artifactPath(dir, next.centroids))
+    writeRelation(Similarity.centroidRelation(spark, cent),
+      artifactPath(dir, next.centroids))
     publishManifest(spark, dir, next)
   }
 
@@ -1115,8 +1113,7 @@ object IndexStore {
     val m = currentManifest(spark, dir)
     val newCentRel = Similarity.centroidRelation(spark, cent)
     val v1 = m.version + 1
-    newCentRel.write.mode("overwrite")
-      .parquet(artifactPath(dir, s"centroids-$v1"))
+    writeRelation(newCentRel, artifactPath(dir, s"centroids-$v1"))
     publishCodesVersion(spark, dir, m, newCentRel,
       refreshedCodes(vectors, spark, dir, m, newCentRel),
       centroidsName = s"centroids-$v1")
@@ -1169,7 +1166,7 @@ object IndexStore {
         .join(spark.read.parquet(s"$dir/tombstones"),
           Seq("vec_id"), "left_semi").count()
     val codesName = s"codes-$v1"
-    writeCodes(newCodes, artifactPath(dir, codesName), batch = 0L)
+    writeCodes(newCodes, artifactPath(dir, codesName), Some(0L))
     val nNew = spark.read.parquet(artifactPath(dir, codesName)).count()
     require(nNew == nOld - nTomb,
       s"codes row-count drift: $nOld - $nTomb tombstoned -> $nNew; " +

@@ -97,4 +97,12 @@ class HarnessSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "materialize through Exec.scoped or Exec.materializeToTemp instead")
   }
+
+  test("IndexStore holds one code-segment writer") {
+    val text = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/operators/IndexStore.scala")), StandardCharsets.UTF_8)
+    val call = "partitionBy(\"batch\", \"cell\")"
+    val writes = text.split(java.util.regex.Pattern.quote(call), -1).length - 1
+    assert(writes == 1, s"$writes (batch, cell) writers: write every code segment through writeCodes")
+  }
 }

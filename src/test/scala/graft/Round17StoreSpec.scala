@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,6 +51,36 @@ class Round17StoreSpec extends AnyFunSuite with SharedSpark {
       if (st.getPath.getName.startsWith("part-")) total += st.getLen
     }
     total
+  }
+
+  /** Every data file of the code segment `seg` under `dir` is zstd, its
+    * `vec_id` chunk has no dictionary page, and its rows are in
+    * (vec_id, sub) order.
+    */
+  private def assertCompactSegment(dir: String, seg: String): Unit = {
+    val footers = PlanSpec.footers(spark, s"$dir/$seg")
+    assert(footers.nonEmpty, s"$seg holds no files")
+    val chunks = for {
+      (f, footer) <- footers
+      block <- footer.getBlocks.asScala
+      chunk <- block.getColumns.asScala
+    } yield (f, chunk)
+    val notZstd = chunks.filter(_._2.getCodec != CompressionCodecName.ZSTD)
+    assert(notZstd.isEmpty,
+      notZstd.map { case (f, c) => s"$f ${c.getPath}: ${c.getCodec}" })
+    val dictIds = chunks.filter { case (_, c) =>
+      c.getPath.toDotString == "vec_id" && c.hasDictionaryPage }
+    assert(dictIds.isEmpty, s"vec_id chunks with a dictionary page: ${dictIds.map(_._1)}")
+    val byFile = spark.read.parquet(s"$dir/$seg")
+      .select(input_file_name(), monotonically_increasing_id(), col("vec_id"),
+        col("sub").cast("long"))
+      .collect().toSeq.groupBy(_.getString(0))
+    assert(byFile.size == footers.size)
+    val unordered = byFile.collect { case (f, rs)
+      if rs.sortBy(_.getLong(1)).map(r => (r.getLong(2), r.getLong(3)))
+        .sliding(2).exists { case Seq(a, b) => Ordering[(Long, Long)].gt(a, b)
+          case _ => false } => f }
+    assert(unordered.isEmpty, s"files out of (vec_id, sub) order: $unordered")
   }
 
   test("partition-scoped delete: patch holds only touched cells, bytes ∝ touched fraction, serve ≡ allow-list complement (both kinds)") {
@@ -222,30 +256,29 @@ class Round17StoreSpec extends AnyFunSuite with SharedSpark {
   test("gc keep-N: a pinned reader survives N-1 publishes with keep-N, and fails loudly past the default retention") {
     val e = embeddings
     val q = e.filter(col("vec_id") < 3)
-    def centroidPublish(dir: String): Unit = {
-      val (_, maintained) = Similarity.ivfIndexMaintain(e, numCells = 6,
-        iters = 2, deltaMod = 10, churnThreshold = 0.1)
-      IndexStore.writeCentroids(spark, dir, maintained)
-    }
+    // each publish rewrites the code stream, the artifact a pinned
+    // reader reads from disk on every serve (it holds its centroid and
+    // codebook rows in memory)
+    def codesPublish(dir: String): Unit = IndexStore.reassignCells(e, dir)
     // keep-N = 3: a reader pinned at v1 survives TWO publishes
     val dirK = tmpDir("keep3")
     build(dirK, resid = false, e)
     IndexStore.setKeepVersions(spark, dirK, 3)
     val pinned = IndexStore.openReader(spark, dirK)
     val before = rows(pinned.serve(q, k = 4, probes = 2))
-    centroidPublish(dirK); centroidPublish(dirK)
+    codesPublish(dirK); codesPublish(dirK)
     assert(IndexStore.currentManifest(spark, dirK).version
       == pinned.version + 2)
     assert(rows(pinned.serve(q, k = 4, probes = 2)) == before,
       "pinned reader lost its artifacts under keep-3")
-    // default keep 2: the same sequence collects v1's centroid artifact
+    // default keep 2: the same sequence collects v1's code stream
     // and the pinned serve fails LOUDLY (missing-file read error), not
     // silently with partial rows
     val dirD = tmpDir("keep2")
     build(dirD, resid = false, e)
     val pinned2 = IndexStore.openReader(spark, dirD)
     assert(rows(pinned2.serve(q, k = 4, probes = 2)).nonEmpty)
-    centroidPublish(dirD); centroidPublish(dirD)
+    codesPublish(dirD); codesPublish(dirD)
     val thrown = intercept[Exception] {
       pinned2.serve(q, k = 4, probes = 2).collect()
     }
@@ -418,5 +451,83 @@ class Round17StoreSpec extends AnyFunSuite with SharedSpark {
     val rep = IndexStore.compactIfAged(spark, dir, maxBatches = 2)
     assert(rep.isDefined && rep.get.head().getAs[Boolean]("published"))
     assert(IndexStore.currentManifest(spark, dir).patches.isEmpty)
+  }
+
+  test("a delete that touches every cell publishes the full fold, not a patch (both kinds)") {
+    val e = embeddings
+    val q = e.filter(col("vec_id") < 3)
+    import spark.implicits._
+    for (resid <- Seq(false, true)) {
+      val dir = tmpDir(s"allcells-$resid")
+      build(dir, resid, e)
+      val m1 = IndexStore.currentManifest(spark, dir)
+      // one victim in each of the 6 cells
+      val victims = spark.read.parquet(s"$dir/${m1.codes}")
+        .groupBy(col("cell")).agg(min(col("vec_id")))
+        .collect().map(_.getLong(1)).toSeq
+      assert(victims.size == 6, s"not every cell holds a vector: $victims")
+      val drop = victims.toDF("vec_id")
+      val remaining = e.select(col("vec_id"))
+        .join(drop, Seq("vec_id"), "left_anti")
+      val expect = rows(IndexStore.serveIvfPq(spark, dir, q, k = 5,
+        probes = 2, allowed = Some(remaining)))
+      val report = IndexStore.deleteVectors(drop, dir).head()
+      assert(report.getAs[String]("mode") == "full"
+        && report.getAs[Boolean]("published")
+        && report.getAs[Long]("n_cells_touched") == 6L
+        && report.getAs[Long]("n_rows_removed") == 6L * 4L,
+        s"unexpected delete report: $report")
+      val m2 = IndexStore.currentManifest(spark, dir)
+      assert(m2.patches.isEmpty && m2.codes != m1.codes
+        && IndexStore.codeBatches(spark, dir) == Seq(0L))
+      assert(rows(IndexStore.serveIvfPq(spark, dir, q, k = 5, probes = 2))
+        == expect, s"folded serve diverges from allow-list complement (resid=$resid)")
+    }
+  }
+
+  test("every code-segment path writes zstd files with a plain vec_id chunk in (vec_id, sub) order; index relations are one file each") {
+    val e = embeddings
+    import spark.implicits._
+    val dir = tmpDir("codec")
+    build(dir, resid = false, e.filter(col("vec_id") % 10 < 8))
+    def current: IndexManifest = IndexStore.currentManifest(spark, dir)
+    def relationsOneFile(): Unit = {
+      val m = current
+      for (a <- Seq(m.centroids, m.codebooks, m.meta))
+        assert(PlanSpec.footers(spark, s"$dir/$a").size == 1, s"$a holds more than one file")
+    }
+    relationsOneFile()
+    val built = current.codes
+    assertCompactSegment(dir, built)
+    IndexStore.appendVectors(e.filter(col("vec_id") % 10 === 8), dir, batchId = 1L)
+    assert(IndexStore.codeBatches(spark, dir) == Seq(0L, 1L))
+    assertCompactSegment(dir, built)
+    val victims = IndexStore.serveIvfPq(spark, dir, e.filter(col("vec_id") < 3),
+        k = 5, probes = 2)
+      .select(col("nid")).distinct().orderBy(col("nid")).limit(2)
+      .collect().map(_.getLong(0)).toSeq
+    assert(IndexStore.deleteVectors(Seq(victims.head).toDF("vec_id"), dir).head()
+      .getAs[String]("mode") == "patch")
+    assertCompactSegment(dir, current.patches.head.dir)
+    assert(IndexStore.deleteVectors(Seq(victims(1)).toDF("vec_id"), dir,
+      maxPatches = 0).head().getAs[String]("mode") == "full")
+    assertCompactSegment(dir, current.codes)
+    IndexStore.appendVectors(e.filter(col("vec_id") % 10 === 9), dir, batchId = 2L)
+    assert(IndexStore.compactCodes(spark, dir).head().getAs[Boolean]("published"))
+    assertCompactSegment(dir, current.codes)
+    // a refresh republishes the stored centroids through the relation
+    // writer and the code stream through the code writer
+    val reader = IndexStore.openReader(spark, dir)
+    val cent = spark.read.parquet(s"$dir/${current.centroids}").collect().toSeq
+      .map(r => r.getAs[Long]("cid") -> r.getAs[scala.collection.Seq[Double]]("cv").toSeq)
+    IndexStore.publishRefresh(e, dir, cent)
+    assertCompactSegment(dir, current.codes)
+    relationsOneFile()
+    // the pinned reader holds the centroid and codebook rows as local
+    // relations, also after a reopen re-reads the new centroids
+    val reopened = reader.reopen()
+    assert(!(reopened.centRel eq reader.centRel))
+    for (r <- Seq(reader, reopened); rel <- Seq(r.centRel, r.bookRel))
+      assert(rel.queryExecution.analyzed.isInstanceOf[LocalRelation])
   }
 }
